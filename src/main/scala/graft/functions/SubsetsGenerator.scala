@@ -4,47 +4,48 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** UDTF-shaped Catalyst `Generator` — SQL `graft_subsets(items)`: one
-  * output row per order-preserving subset of a string array, as
-  * (itemset = space-joined key, k = size). The SQL surface of the
-  * Apriori candidate generator (G1, `CandidatesGenRecursion` at
-  * `apriori/apriori_final.java:70-110`; singletons included, matching
-  * [[graft.operators.Apriori.subsetKeys]] exactly — the spec asserts
-  * row-level parity), completing the custom-function trio alongside the
-  * scalar [[DotProduct]] and the aggregate [[TopKAgg]].
+/** UDTF-shaped Catalyst `Generator` — SQL `graft_subsets(items [, k])`:
+  * one output row per order-preserving subset of a string array, as
+  * (itemset = space-joined key, k = size). Without `k` it emits every
+  * non-empty subset (2^n − 1 rows); with `k` only the C(n, k) subsets
+  * of that size, the level-wise Apriori step. `k` must be a foldable
+  * INT; a null or out-of-range `k` emits nothing. The SQL surface of
+  * the Apriori candidate generator (G1, `CandidatesGenRecursion` at
+  * `apriori/apriori_final.java:70-110`), alongside the scalar
+  * [[DotProduct]] and the aggregate [[TopKAgg]].
   *
-  * WHOLE-STAGE CODEGEN (r17): a [[CollectionGenerator]], not a
+  * ENUMERATION ORDER: k ascending, then lexicographic over positions —
+  * the order of [[graft.operators.Apriori.subsetKeys]], the pure Scala
+  * statement of the same enumeration that the specs compare against
+  * row for row.
+  *
+  * WHOLE-STAGE CODEGEN: a [[CollectionGenerator]], not a
   * `CodegenFallback` row-at-a-time generator — `GenerateExec` compiles
   * a collection generator into the surrounding stage (the `inline`
   * path: the subsets materialize as one `ArrayData` of struct rows per
-  * basket, bounded by the callers' [[graft.operators.Apriori.MaxBasket]]
-  * truncation at 2^14 − 1 rows), so the enumeration feeds the
-  * downstream hash aggregation without a per-row iterator boundary or
-  * the typed-flatMap tier's deserialize→Scala→serialize round-trip.
-  * The r16 assumption that "the 2^k fan-out dominates any per-row
-  * dispatch cost" was measured wrong at sf1: the apriori enumeration
-  * entries spend most of their time between the generator and the
-  * aggregate, exactly what codegen fuses.
+  * input row), so the enumeration feeds the downstream hash aggregation
+  * without a per-row iterator boundary.
   *
-  * DUPLICATE-INPUT SEMANTICS (pinned, r16 ADVICE): subsets are
-  * enumerated by POSITION (index combinations), so an input array with
-  * value-equal elements emits value-equal subsets once per index
-  * combination — `[a, a]` yields "a", "a", "a a". This matches the
-  * DuckDB mask-join oracle and [[graft.operators.Apriori.subsetKeys]]
-  * (aligned in r17 — it previously used `Seq.combinations`, which
-  * DEDUPLICATES value-equal combinations, so the two tiers disagreed
-  * on duplicate-bearing baskets). Every in-repo caller feeds
-  * deduplicated arrays (`array_intersect`/`array_distinct` outputs),
-  * where the two semantics coincide.
+  * BOUND: one input row may emit at most [[SubsetsGenerator.MaxRows]]
+  * rows (a 16-item array without `k`; the Apriori callers slice to
+  * `MaxBasket` = 14 first). A wider input fails the task with an error
+  * naming the function and the array width, never a wrapped count.
+  *
+  * DUPLICATE-INPUT SEMANTICS: subsets are enumerated by POSITION
+  * (index combinations), so an input array with value-equal elements
+  * emits value-equal subsets once per index combination — `[a, a]`
+  * yields "a", "a", "a a". This matches the DuckDB mask-join oracle.
   */
-case class SubsetsGenerator(child: Expression)
-    extends UnaryExpression with CollectionGenerator {
+case class SubsetsGenerator(items: Expression, size: Option[Expression])
+    extends Expression with CollectionGenerator {
+
+  override def children: Seq[Expression] = items +: size.toSeq
 
   override def inline: Boolean = true
 
@@ -57,26 +58,37 @@ case class SubsetsGenerator(child: Expression)
     StructField("itemset", StringType, nullable = false) ::
       StructField("k", IntegerType, nullable = false) :: Nil)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_subsets expects array<string>, got $t")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    (items.dataType, size) match {
+      case (ArrayType(StringType, _), None) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(StringType, _), Some(k))
+          if k.dataType == IntegerType && k.foldable =>
+        TypeCheckResult.TypeCheckSuccess
+      case (t, k) => TypeCheckResult.TypeCheckFailure(
+        "graft_subsets expects (array<string> [, foldable int k]), got " +
+          s"($t${k.map(e => s", ${e.dataType} foldable=${e.foldable}")
+            .getOrElse("")})")
+    }
 
   override def prettyName: String = "graft_subsets"
 
-  /** Interpreted path (GenerateExec outside codegen): the Generator
-    * contract's row iterator. Same mask enumeration as the codegen
-    * collection, lazily.
+  /** The subset sizes to emit: every size, exactly `k`, or none (null k). */
+  private lazy val (lo, hi): (Int, Int) = size match {
+    case None => (1, Int.MaxValue)
+    case Some(e) => e.eval() match {
+      case null => (1, 0)
+      case k: Int => (k, k)
+    }
+  }
+
+  /** Interpreted path (GenerateExec outside codegen): the codegen
+    * collection, iterated.
     */
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val data = child.eval(input)
-    if (data == null) Iterator.empty
-    else {
-      val items = SubsetsGenerator.itemsOf(data.asInstanceOf[ArrayData])
-      Iterator.range(1, 1 << items.length)
-        .map(m => SubsetsGenerator.subsetRow(items, m))
-    }
+    val out = SubsetsGenerator.subsetsOf(
+      items.eval(input).asInstanceOf[ArrayData], lo, hi)
+    Iterator.tabulate(out.numElements())(out.getStruct(_, 2))
   }
 
   /** Codegen path: `GenerateExec.codeGenCollection` consumes the
@@ -88,112 +100,20 @@ case class SubsetsGenerator(child: Expression)
     */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode = {
-    val c = child.genCode(ctx)
+    val c = items.genCode(ctx)
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val javaType = org.apache.spark.sql.catalyst.expressions.codegen
       .CodeGenerator.javaType(collectionType)
     ev.copy(
       code = c.code + code"""
         $javaType ${ev.value} = graft.functions.SubsetsGenerator.subsetsOf(
-          ${c.isNull} ? null : ${c.value});""",
+          ${c.isNull} ? null : ${c.value}, $lo, $hi);""",
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
-  override protected def withNewChildInternal(
-      newChild: Expression): SubsetsGenerator = copy(child = newChild)
-}
-
-/** SQL `graft_subsets_k(items, k)`: one output row per size-`k`
-  * order-preserving subset of a string array (itemset = space-joined
-  * key) — the LEVEL-WISE Apriori enumeration step as a codegen'd
-  * [[CollectionGenerator]] (r17): level k enumerates C(n, k) subsets
-  * per basket instead of [[SubsetsGenerator]]'s 2^n, so the classic
-  * per-level loop can stay expression-only (prune via
-  * `array_intersect`, enumerate here, aggregate) with no typed-flatMap
-  * deserialization and no driver-collected active set.
-  *
-  * `k` must be a foldable non-null INT (the loop passes a literal).
-  * Same positional duplicate semantics as [[SubsetsGenerator]];
-  * enumeration is lexicographic over positions.
-  */
-case class KSubsetsGenerator(child: Expression, kExpr: Expression)
-    extends UnaryExpression with CollectionGenerator {
-
-  // UnaryExpression over `child` keeps the array input the hot lane;
-  // k folds to a constant at bind time
-  override def inline: Boolean = false
-
-  override def position: Boolean = false
-
-  override def collectionType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def elementSchema: StructType = StructType(
-    StructField("itemset", StringType, nullable = false) :: Nil)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, kExpr.dataType, kExpr.foldable) match {
-      case (ArrayType(StringType, _), IntegerType, true) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (c, kd, f) => TypeCheckResult.TypeCheckFailure(
-        s"graft_subsets_k expects (array<string>, foldable int), " +
-          s"got ($c, $kd, foldable=$f)")
-    }
-
-  override def prettyName: String = "graft_subsets_k"
-
-  private lazy val k: Int = kExpr.eval(null) match {
-    case null => -1
-    case v: Int => v
-  }
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val data = child.eval(input)
-    if (data == null || k <= 0) Iterator.empty
-    else {
-      val out = SubsetsGenerator.kSubsetsOf(data.asInstanceOf[ArrayData], k)
-      Iterator.range(0, out.numElements())
-        .map(i => InternalRow(out.getUTF8String(i)))
-    }
-  }
-
-  /** Null input → EMPTY collection (GenerateExec reads the collection
-    * unguarded — see [[SubsetsGenerator.doGenCode]]).
-    */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val c = child.genCode(ctx)
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen
-      .CodeGenerator.javaType(collectionType)
-    ev.copy(
-      code = c.code + code"""
-        $javaType ${ev.value} = graft.functions.SubsetsGenerator.kSubsetsOf(
-          ${c.isNull} ? null : ${c.value}, $k);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): KSubsetsGenerator = copy(child = newChild)
-}
-
-object KSubsetsGenerator {
-
-  private val ident = FunctionIdentifier("graft_subsets_k")
-
-  private val info = new ExpressionInfo(
-    classOf[KSubsetsGenerator].getName, null, "graft_subsets_k")
-
-  private[functions] val builder: Seq[Expression] => Expression = {
-    case Seq(c, k) => KSubsetsGenerator(c, k)
-    case other => throw new IllegalArgumentException(
-      s"graft_subsets_k expects 2 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(ident, info, builder)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SubsetsGenerator =
+    copy(items = newChildren.head, size = size.map(_ => newChildren(1)))
 }
 
 /** SQL `graft_antecedents(items)`: one output row per (antecedent,
@@ -201,13 +121,10 @@ object KSubsetsGenerator {
   * subset X of the input as the antecedent, its positional complement
   * as the consequent, both space-joined. The rule-expansion step of
   * [[graft.operators.Apriori.assocRules]]/`assocRulesMetrics` as a
-  * codegen'd [[CollectionGenerator]] (r17): the typed
-  * `antecedents` flatMap paid the deserialize→Scala→serialize
-  * round-trip per itemset and broke whole-stage codegen between the
-  * supports scan and the expansion's join. Same positional duplicate
-  * semantics as [[SubsetsGenerator]]; inputs are split canonical
-  * itemsets (distinct by construction), where positional complement =
-  * value complement.
+  * codegen'd [[CollectionGenerator]]. Same positional duplicate
+  * semantics and row bound as [[SubsetsGenerator]]; inputs are split
+  * canonical itemsets (distinct by construction), where positional
+  * complement = value complement.
   */
 case class AntecedentsGenerator(child: Expression)
     extends UnaryExpression with CollectionGenerator {
@@ -232,14 +149,9 @@ case class AntecedentsGenerator(child: Expression)
   override def prettyName: String = "graft_antecedents"
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val data = child.eval(input)
-    if (data == null) Iterator.empty
-    else {
-      val items = SubsetsGenerator.itemsOf(data.asInstanceOf[ArrayData])
-      // masks 1 .. 2^n - 2: non-empty proper subsets only
-      Iterator.range(1, (1 << items.length) - 1)
-        .map(m => SubsetsGenerator.antecedentRow(items, m))
-    }
+    val out = SubsetsGenerator.antecedentsOf(
+      child.eval(input).asInstanceOf[ArrayData])
+    Iterator.tabulate(out.numElements())(out.getStruct(_, 2))
   }
 
   /** Null input → EMPTY collection (GenerateExec reads the collection
@@ -284,12 +196,20 @@ object AntecedentsGenerator {
 
 object SubsetsGenerator {
 
+  /** Most rows one input row may emit: the collection is materialized
+    * per row, so this caps its memory (2^16 rows ≈ 10 MB of keys for a
+    * 16-item array). 4× the Apriori callers' 2^14 − 1.
+    */
+  val MaxRows: Int = 1 << 16
+
   /** Space separator, built once (the key join below is byte-level). */
   private val Space = UTF8String.fromString(" ")
 
-  private[functions] def itemsOf(arr: ArrayData): Array[UTF8String] = {
-    // stay in UTF8String space end-to-end (r16): the 2^k fan-out means
-    // the per-SUBSET cost dominates — a decode/encode per subset would
+  private val Empty = new GenericArrayData(new Array[Any](0))
+
+  private def itemsOf(arr: ArrayData): Array[UTF8String] = {
+    // stay in UTF8String space end-to-end: the fan-out means the
+    // per-SUBSET cost dominates — a decode/encode per subset would
     // dwarf the enumeration; concatWs is a byte copy
     val n = arr.numElements()
     val items = new Array[UTF8String](n)
@@ -298,36 +218,67 @@ object SubsetsGenerator {
     items
   }
 
-  /** The subset row of bitmask `m` over `items`: positions with a set
-    * bit, in input order (itemset = space-joined key, k = popcount).
+  /** Σ C(n, k) over k in [from, to], or an error naming `fn` and the
+    * width `n` once the sum passes [[MaxRows]]. Each C(n, k) is built up
+    * to its smaller side, where the running product is non-decreasing,
+    * so it stops the moment it passes the bound and never overflows.
     */
-  private[functions] def subsetRow(items: Array[UTF8String], m: Int)
-      : InternalRow = {
-    val k = Integer.bitCount(m)
-    val sel = new Array[UTF8String](k)
-    var i = 0
-    var j = 0
-    var bits = m
-    while (bits != 0) {
-      if ((bits & 1) != 0) { sel(j) = items(i); j += 1 }
-      bits >>>= 1
-      i += 1
+  private def rowCount(fn: String, n: Int, from: Int, to: Int): Int = {
+    var total = 0L
+    var k = from
+    while (k <= to && total <= MaxRows) {
+      val kk = math.min(k, n - k)
+      var c = 1L
+      var i = 0
+      while (i < kk && c <= MaxRows) { c = c * (n - i) / (i + 1); i += 1 }
+      total += c
+      k += 1
     }
-    InternalRow(UTF8String.concatWs(Space, sel.toIndexedSeq: _*), k)
+    if (total > MaxRows) throw new IllegalArgumentException(
+      s"$fn: a $n-item input array emits more than $MaxRows rows" +
+        (if (from == to) s" of size $from" else "") +
+        "; slice the array before enumerating it")
+    total.toInt
   }
 
-  /** All non-empty subsets of `arr` as one ArrayData of (itemset, k)
-    * struct rows — the codegen collection. Bounded by the callers'
-    * MaxBasket truncation (≤ 2^14 − 1 rows); a wider array is the
-    * caller's own 2^n, same as the lazy form, just eager.
+  /** The subsets of sizes [lo, hi] of `arr` as one ArrayData of
+    * (itemset, k) struct rows, k ascending then lexicographic over
+    * positions — the codegen collection.
     */
-  def subsetsOf(arr: ArrayData): ArrayData = {
-    if (arr == null) return new GenericArrayData(new Array[Any](0))
+  def subsetsOf(arr: ArrayData, lo: Int, hi: Int): ArrayData = {
+    if (arr == null) return Empty
     val items = itemsOf(arr)
-    val total = (1 << items.length) - 1
-    val out = new Array[Any](total)
-    var m = 1
-    while (m <= total) { out(m - 1) = subsetRow(items, m); m += 1 }
+    val n = items.length
+    val from = math.max(lo, 1)
+    val to = math.min(hi, n)
+    val out = new Array[Any](rowCount("graft_subsets", n, from, to))
+    val idx = new Array[Int](n)
+    var row = 0
+    var k = from
+    while (k <= to) {
+      val sel = new Array[UTF8String](k)
+      val boxedK: Any = k // boxed once per size, not per row
+      var j = 0
+      while (j < k) { idx(j) = j; j += 1 }
+      var more = true
+      while (more) {
+        j = 0
+        while (j < k) { sel(j) = items(idx(j)); j += 1 }
+        out(row) = new GenericInternalRow(
+          Array[Any](UTF8String.concatWs(Space, sel: _*), boxedK))
+        row += 1
+        // advance: the rightmost position that can still move
+        var p = k - 1
+        while (p >= 0 && idx(p) == n - k + p) p -= 1
+        if (p < 0) more = false
+        else {
+          idx(p) += 1
+          var q = p + 1
+          while (q < k) { idx(q) = idx(q - 1) + 1; q += 1 }
+        }
+      }
+      k += 1
+    }
     new GenericArrayData(out)
   }
 
@@ -335,7 +286,7 @@ object SubsetsGenerator {
     * set-bit positions joined as the antecedent, clear-bit positions
     * as the consequent, both in input order.
     */
-  private[functions] def antecedentRow(items: Array[UTF8String], m: Int)
+  private def antecedentRow(items: Array[UTF8String], m: Int)
       : InternalRow = {
     val n = items.length
     val ka = Integer.bitCount(m)
@@ -350,8 +301,8 @@ object SubsetsGenerator {
       i += 1
     }
     InternalRow(
-      UTF8String.concatWs(Space, a.toIndexedSeq: _*),
-      UTF8String.concatWs(Space, c.toIndexedSeq: _*))
+      UTF8String.concatWs(Space, a: _*),
+      UTF8String.concatWs(Space, c: _*))
   }
 
   /** All (antecedent, consequent) splits of `arr` as one ArrayData of
@@ -359,51 +310,13 @@ object SubsetsGenerator {
     * 2^n − 2 rows (masks 1 .. 2^n − 2, non-empty proper subsets).
     */
   def antecedentsOf(arr: ArrayData): ArrayData = {
-    if (arr == null) return new GenericArrayData(new Array[Any](0))
+    if (arr == null) return Empty
     val items = itemsOf(arr)
-    val total = (1 << items.length) - 2
-    if (total <= 0) return new GenericArrayData(new Array[Any](0))
+    val total = rowCount("graft_antecedents", items.length, 1,
+      items.length - 1)
     val out = new Array[Any](total)
     var m = 1
     while (m <= total) { out(m - 1) = antecedentRow(items, m); m += 1 }
-    new GenericArrayData(out)
-  }
-
-  /** All size-`k` subsets of `arr` as one ArrayData of space-joined
-    * UTF8String keys, lexicographic over positions — the
-    * [[KSubsetsGenerator]] collection: C(n, k) rows (≤ C(14, 7) = 3432
-    * under the callers' MaxBasket truncation). k out of range → empty.
-    */
-  def kSubsetsOf(arr: ArrayData, k: Int): ArrayData = {
-    if (arr == null) return new GenericArrayData(new Array[Any](0))
-    val items = itemsOf(arr)
-    val n = items.length
-    if (k <= 0 || k > n) return new GenericArrayData(new Array[Any](0))
-    // C(n, k) exactly, in longs (n ≤ 31 by caller truncation keeps the
-    // running product far inside Long range for the supported widths)
-    var c = 1L
-    var i = 0
-    while (i < k) { c = c * (n - i) / (i + 1); i += 1 }
-    val out = new Array[Any](c.toInt)
-    val idx = Array.tabulate(k)(identity)
-    val sel = new Array[UTF8String](k)
-    var row = 0
-    var more = true
-    while (more) {
-      var j = 0
-      while (j < k) { sel(j) = items(idx(j)); j += 1 }
-      out(row) = UTF8String.concatWs(Space, sel.toIndexedSeq: _*)
-      row += 1
-      // advance lexicographically: rightmost index that can move
-      var p = k - 1
-      while (p >= 0 && idx(p) == n - k + p) p -= 1
-      if (p < 0) more = false
-      else {
-        idx(p) += 1
-        var q = p + 1
-        while (q < k) { idx(q) = idx(q - 1) + 1; q += 1 }
-      }
-    }
     new GenericArrayData(out)
   }
 
@@ -413,9 +326,10 @@ object SubsetsGenerator {
     classOf[SubsetsGenerator].getName, null, "graft_subsets")
 
   private[functions] val builder: Seq[Expression] => Expression = {
-    case Seq(c) => SubsetsGenerator(c)
+    case Seq(c) => SubsetsGenerator(c, None)
+    case Seq(c, k) => SubsetsGenerator(c, Some(k))
     case other => throw new IllegalArgumentException(
-      s"graft_subsets expects 1 argument, got ${other.size}")
+      s"graft_subsets expects 1 or 2 arguments, got ${other.size}")
   }
 
   /** Idempotent per-session registration, for sessions not built with

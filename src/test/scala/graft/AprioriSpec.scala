@@ -171,6 +171,22 @@ class AprioriSpec extends SparkSpecBase {
     assert(sorted == Map("a b" -> 10L))
   }
 
+  test("duplicate-bearing unsorted baskets: sorted prune dedups, " +
+    "tx-order prune keeps positional duplicates") {
+    // ["b","a","a"]: the sorted prune (array_intersect) drops the second
+    // "a" before enumeration; the order-preserving prune (filter) keeps
+    // it, so subsets are enumerated by POSITION — (0,1) and (0,2) both
+    // key "b a", (1,2) keys "a a"
+    val s = spark; import s.implicits._
+    val tx = Seq.fill(5)(Seq("b", "a", "a")).toDF("items")
+    val sorted = Apriori.freqItemsetsOf(tx, support = 5)
+      .collect().map(r => r.getAs[String]("itemset") -> r.getAs[Long]("cnt")).toMap
+    assert(sorted == Map("a b" -> 5L))
+    val ordered = Apriori.freqItemsetsTxOrderOf(tx, support = 5)
+      .collect().map(r => r.getAs[String]("itemset") -> r.getAs[Long]("cnt")).toMap
+    assert(ordered == Map("b a" -> 10L, "a a" -> 5L, "b a a" -> 5L))
+  }
+
   test("transactionsOrdered: first-appearance order, ties lexical") {
     // the fixture's ordered-basket derivation must agree with a
     // brute-force recomputation from the raw tables

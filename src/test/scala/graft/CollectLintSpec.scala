@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * bounded pull. At 100 TB an unbounded collect is the other classic
   * scale-killer next to the unpartitioned window (WindowBoundSpec); the
   * round-8 audit verified all call sites carry bounded driver state
-  * (query sets, centroids, codebooks, quantile boundaries, θ, the
-  * level-wise active set) — this spec freezes that audit so a new
-  * collect fails commit-time until it is reviewed and pinned with its
-  * bound. Source-level by design: a plan-level check cannot see driver
-  * loops, and the pull happens at plan-BUILD time for most of these.
+  * (query sets, centroids, codebooks, quantile boundaries, θ) — this
+  * spec freezes that audit so a new collect fails commit-time until it
+  * is reviewed and pinned with its bound. Source-level by design: a
+  * plan-level check cannot see driver loops, and the pull happens at
+  * plan-BUILD time for most of these.
   */
 class CollectLintSpec extends AnyFunSuite {
 
@@ -28,9 +28,6 @@ class CollectLintSpec extends AnyFunSuite {
     *    eval-benchmark vectors for the semantic audit.
     *  - Bitext (2): the bounded mining batch (q vectors) and its
     *    ≤ q·k candidate targets.
-    *  - Apriori (2): the level-wise active-item set, ⊆ frequent items
-    *    at every level (budget documented at freqItemsetsLevelwise,
-    *    pinned by AprioriSpec).
     *  - Sgd (1): θ read-back — O(partitions·features).
     *  - Curation (2): the greedy coverage selector's per-step argmax
     *    (LIMIT-1 row) and chosen-doc term pull (≤ CovUniverse rows) —
@@ -51,7 +48,6 @@ class CollectLintSpec extends AnyFunSuite {
     "src/main/scala/graft/operators/TextOps.scala" -> 2,
     "src/main/scala/graft/operators/Contamination.scala" -> 2,
     "src/main/scala/graft/operators/Bitext.scala" -> 2,
-    "src/main/scala/graft/operators/Apriori.scala" -> 2,
     "src/main/scala/graft/operators/Sgd.scala" -> 1,
     "src/main/scala/graft/operators/Curation.scala" -> 2,
     "src/main/scala/graft/streaming/Streams.scala" -> 2,

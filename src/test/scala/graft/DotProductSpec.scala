@@ -49,6 +49,13 @@ class DotProductSpec extends SparkSpecBase {
     assert(got == want)
     // 2^3-1 + 1 + 0 subsets in total (singletons included)
     assert(got.values.sum == 8)
+    // one row in, so the rows come out in the generator's own order:
+    // k ascending, then lexicographic over positions, as subsetKeys
+    val ordered = spark.sql(
+      "SELECT graft_subsets(array('a', 'b', 'c', 'd')) AS (itemset, k)")
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(ordered ==
+      graft.operators.Apriori.subsetKeys(Seq("a", "b", "c", "d")).toSeq)
     // null arrays generate nothing instead of crashing
     assert(spark.sql(
       """SELECT itemset FROM (SELECT cast(null as array<string>) AS items)
@@ -93,32 +100,73 @@ class DotProductSpec extends SparkSpecBase {
     // scan), so assert the level-shaped plan itself: prune → generate
     // → aggregate, exactly what each loop iteration runs
     val s = spark; import s.implicits._
-    graft.functions.KSubsetsGenerator.register(spark)
+    graft.functions.SubsetsGenerator.register(spark)
     val level = Seq(Seq("a", "b", "c"), Seq("a", "c", "d"))
       .map(Tuple1(_)).toDF("fitems")
       .where(size(col("fitems")) >= 2)
-      .selectExpr("graft_subsets_k(fitems, 2) AS itemset")
+      .selectExpr("graft_subsets(fitems, 2) AS (itemset, k)")
       .groupBy("itemset").agg(count(lit(1)).as("cnt"))
-    generateLine(level, "graft_subsets_k")
+    generateLine(level, "graft_subsets")
   }
 
-  test("graft_subsets_k enumerates exactly the size-k position " +
-    "combinations") {
+  test("graft_subsets(items, k) emits only the size-k combinations") {
     val s = spark; import s.implicits._
-    graft.functions.KSubsetsGenerator.register(spark)
+    graft.functions.SubsetsGenerator.register(spark)
     val got = Seq(Seq("a", "b", "c", "d"), Seq("x"), Seq.empty[String])
       .map(Tuple1(_)).toDF("items")
-      .selectExpr("graft_subsets_k(items, 2) AS itemset")
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(got == Seq("a b", "a c", "a d", "b c", "b d", "c d"))
-    // k out of range and null arrays generate nothing
+      .selectExpr("graft_subsets(items, 2) AS (itemset, k)")
+      .collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
+    assert(got == Seq("a b", "a c", "a d", "b c", "b d", "c d").map((_, 2)))
+    // k out of range, a null k and null arrays generate nothing
     assert(spark.sql(
       """SELECT itemset FROM (SELECT cast(null as array<string>) AS items)
-        |LATERAL VIEW graft_subsets_k(items, 2) t AS itemset""".stripMargin)
+        |LATERAL VIEW graft_subsets(items, 2) t AS itemset, k""".stripMargin)
       .count() == 0)
-    val kTooBig = Seq(Tuple1(Seq("a")))
-      .toDF("items").selectExpr("graft_subsets_k(items, 3) AS itemset")
-    assert(kTooBig.count() == 0)
+    val one = Seq(Tuple1(Seq("a"))).toDF("items")
+    Seq("3", "0", "-1", "cast(null as int)").foreach { k =>
+      assert(one.selectExpr(s"graft_subsets(items, $k) AS (itemset, k)")
+        .count() == 0, s"k = $k")
+    }
+  }
+
+  test("generators bound their fan-out: wide inputs fail naming the " +
+    "function and width") {
+    val s = spark; import s.implicits._
+    graft.functions.SubsetsGenerator.register(spark)
+    graft.functions.AntecedentsGenerator.register(spark)
+    def wide(n: Int) = Seq(Tuple1((0 until n).map(i => s"i$i")))
+      .toDF("items")
+    def messages(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    // 2^31 - 1 used to wrap to a negative array size, and 2^32 - 1 to
+    // an empty result; both now stop before allocating anything
+    for (n <- Seq(31, 32); fn <- Seq("graft_subsets", "graft_antecedents")) {
+      val out = if (fn == "graft_subsets") "(itemset, k)" else "(a, c)"
+      val msgs = messages(intercept[Exception](
+        wide(n).selectExpr(s"$fn(items) AS $out").collect()))
+      assert(msgs.contains(s"$fn: a $n-item input array"), msgs)
+      assert(!msgs.contains("NegativeArraySize"), msgs)
+    }
+    // with k the bound is on C(n, k), not 2^n: 32 choose 2 is fine,
+    // 32 choose 16 is not
+    assert(wide(32).selectExpr("graft_subsets(items, 2) AS (itemset, k)")
+      .count() == 32 * 31 / 2)
+    val msgs = messages(intercept[Exception](wide(32)
+      .selectExpr("graft_subsets(items, 16) AS (itemset, k)").collect()))
+    assert(msgs.contains("graft_subsets: a 32-item input array"), msgs)
+    // the widest full enumeration inside the bound still runs
+    assert(wide(16).selectExpr("graft_subsets(items) AS (itemset, k)")
+      .count() == (1 << 16) - 1)
+  }
+
+  test("graft_subsets rejects a non-literal k at analysis") {
+    val s = spark; import s.implicits._
+    graft.functions.SubsetsGenerator.register(spark)
+    val df = Seq((Seq("a", "b"), 2)).toDF("items", "n")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.selectExpr("graft_subsets(items, n) AS (itemset, k)"))
+    assert(e.getMessage.contains("graft_subsets"), e.getMessage)
+    assert(e.getMessage.contains("foldable"), e.getMessage)
   }
 
   test("graft_antecedents matches the typed antecedents kernel " +

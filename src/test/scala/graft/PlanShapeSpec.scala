@@ -54,6 +54,28 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("apriori DataFrame forms: no typed operator, generators codegen'd") {
+    // every enumeration runs the graft_subsets / graft_antecedents
+    // Catalyst generators: no deserialize → Scala → serialize round-trip
+    // and no break in whole-stage codegen at the 2^k fan-out
+    val tx = Apriori.transactions(spark, Sf)
+    val forms = Seq(
+      "itemsetSupportsOf" -> Apriori.itemsetSupportsOf(tx),
+      "freqItemsetsOf" -> Apriori.freqItemsetsOf(tx),
+      "freqItemsetsTxOrderOf" ->
+        Apriori.freqItemsetsTxOrderOf(Apriori.transactionsOrdered(spark, Sf)),
+      "assocRulesOf" -> Apriori.assocRulesOf(tx))
+    forms.foreach { case (name, df) =>
+      val p = finalOnly(df)
+      Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject")
+        .foreach(n => assert(!p.contains(n), s"$name runs $n:\n$p"))
+      val gens = p.linesIterator.filter(_.contains("Generate ")).toSeq
+      assert(gens.nonEmpty, s"$name has no Generate:\n$p")
+      gens.foreach(l =>
+        assert(l.contains("*("), s"$name Generate not codegen'd:\n$p"))
+    }
+  }
+
   test("brute-force similarity never shuffles the corpus for scoring") {
     val p = finalPlan(Similarity.bruteForceTopK(spark, Sf))
     assert(!p.contains("CartesianProduct"), p)
