@@ -296,12 +296,11 @@ object Quality {
     val obs = Sgd.shard(bowObs(corpus), parts).persist()
     val k = TrainNegOversample
     val trainSet = Sgd.shard(
-        obs.flatMap(o =>
-          if (o.y < 0.5)
-            (0 until k).map(r => o.copy(id = o.id * TrainIdStride + r))
-          else Seq(o.copy(id = o.id * TrainIdStride))),
-        parts)
-      .persist()
+      obs.flatMap(o =>
+        if (o.y < 0.5)
+          (0 until k).map(r => o.copy(id = o.id * TrainIdStride + r))
+        else Seq(o.copy(id = o.id * TrainIdStride))),
+      parts)
     try {
       val r = Sgd.fit(trainSet, TrainDims, logistic = true, parts)
       // score through the codegen'd dot Expression — the same scoring
@@ -336,7 +335,7 @@ object Quality {
         m.getDouble(4)))
         .toDF("n_docs", "n_features", "iterations", "converged",
           "train_acc", "pos_rate", "tpr", "tnr")
-    } finally { trainSet.unpersist(); obs.unpersist(): Unit }
+    } finally obs.unpersist(): Unit
   }
 
   // ---- oracle ----------------------------------------------------------

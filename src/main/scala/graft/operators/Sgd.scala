@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Distributed SGD with parameter averaging — linear & logistic regression.
@@ -11,12 +13,16 @@ import graft.Tables
   * logisticreg.java:79 is the only difference), re-expressed Spark-first:
   *
   *  - The reference's per-map-task sequential SGD over a `static` θ
-  *    (multilinereg.java:39, 41-97) becomes `mapPartitions` over a
-  *    deterministically sharded `Dataset[Obs]` (M3) — the classic
+  *    (multilinereg.java:39, 41-97) becomes a fold over each logical shard
+  *    of a deterministically sharded `Dataset[Obs]` (M3) — the classic
   *    parameter-mixing pattern (Zinkevich et al., parallelized SGD).
+  *    The reference re-reads its input in every iteration's job; here
+  *    each shard is packed once into a cached [[Block]], and an epoch is
+  *    one plain RDD job over the blocks — no query planning, row decoding
+  *    or input scan per epoch.
   *  - The HDFS θ side-file read by every mapper and rewritten by the driver
-  *    each iteration (multilinereg.java:67-75, 160-170, 209-216) becomes a
-  *    broadcast variable refreshed per iteration — O(numFeatures) state,
+  *    each iteration (multilinereg.java:67-75, 160-170, 209-216) becomes
+  *    driver state: θ rides the task closure — O(numFeatures) state,
   *    zero filesystem round-trips.
   *  - The reducer's element-wise θ-snapshot sum + average over record count
   *    (A5, multilinereg.java:104-138) and AND-fold of continue flags (A6,
@@ -85,6 +91,13 @@ object Sgd {
 
   case class Obs(id: Long, y: Double, x: Array[Double])
 
+  /** One logical shard packed for the epoch loop: its records in
+    * ascending-id order, labels in `y` and features row-major in `x`
+    * (record r's features are `x(r·nf until (r+1)·nf)`).
+    */
+  private case class Block(pid: Long, y: Array[Double],
+      x: Array[Double])
+
   case class FitResult(theta: Array[Double], iterations: Int,
       converged: Boolean)
 
@@ -123,9 +136,10 @@ object Sgd {
     * partition by `pid = id % parts` (so a shard's records never split
     * across tasks) and sort by (pid, id) (so shards form contiguous
     * ascending-id runs). The PHYSICAL partition count is capped at the
-    * session parallelism: θ only depends on the logical rule, and the
-    * per-pid run detection in [[epoch]] handles many whole shards per
-    * task — a large P costs finer mixing, never more tasks.
+    * session parallelism: θ only depends on the logical rule, and
+    * [[pack]] cuts each task's pid runs into one [[Block]] per shard, so
+    * many whole shards share a task — a large P costs finer mixing,
+    * never more tasks.
     */
   def shard(ds: Dataset[Obs], parts: Int): Dataset[Obs] = {
     val spark = ds.sparkSession
@@ -156,91 +170,101 @@ object Sgd {
       numParts(spark))
   }
 
-  private def dot(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  /** One SGD pass: per-SHARD sequential fold emitting
-    * (pid, allRecordsStillMoving, Σ per-record θ snapshots, n). Shards
-    * are detected as (already sorted) pid runs within each task, so one
-    * task folding several co-hashed shards still yields per-shard state.
+  /** Pack a [[shard]]ed set into one [[Block]] per logical shard.
+    * Shards are detected as (already sorted) pid runs within each task,
+    * so one task holding several co-hashed shards still yields
+    * per-shard blocks. Only the first `nf` features of each record are
+    * kept — the ones the fold reads.
     */
-  private def epoch(ds: Dataset[Obs], theta: Array[Double],
-      logistic: Boolean, parts: Int)
-      : Array[(Long, Boolean, Array[Double], Long)] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(theta)
-    val nf = theta.length
-    val res = ds
-      .mapPartitions { iter =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Boolean, Array[Double], Long)]
-        var pid = -1L
-        var th: Array[Double] = null
-        var snapSum: Array[Double] = null
-        var n = 0L
-        var allCont = true
-        def flush(): Unit =
-          if (pid >= 0L) out += ((pid, allCont, snapSum, n))
-        iter.foreach { o =>
-          // pmod, matching [[shard]]'s routing and the oracle's
-          // ((id % P) + P) % P spelling — Java % would put a negative
-          // id in a "-r" shard that collides with the -1 sentinel and
-          // silently drops from the mix
-          val m = o.id % parts
-          val p = if (m < 0) m + parts else m
-          if (p != pid) {
-            flush()
-            pid = p; th = bc.value.clone()
-            snapSum = new Array[Double](nf); n = 0L; allCont = true
-          }
-          var h = dot(th, o.x)
-          if (logistic) h = sigmoidPL(h)
-          val err = o.y - h
-          if (math.abs(err) > Accuracy) {
-            var i = 0
-            while (i < nf) { th(i) += Alpha * err * o.x(i); i += 1 }
-          } else allCont = false // this record converged → vote to stop
-          var i = 0
-          while (i < nf) { snapSum(i) += th(i); i += 1 }
-          n += 1L
+  private def pack(ds: Dataset[Obs], nf: Int, parts: Int): RDD[Block] =
+    ds.rdd.mapPartitions { iter =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[Block]
+      var pid = -1L
+      var ys = new scala.collection.mutable.ArrayBuilder.ofDouble
+      var xs = new scala.collection.mutable.ArrayBuilder.ofDouble
+      def flush(): Unit =
+        if (pid >= 0L) out += Block(pid, ys.result(), xs.result())
+      iter.foreach { o =>
+        // pmod, matching [[shard]]'s routing and the oracle's
+        // ((id % P) + P) % P spelling — Java % would put a negative
+        // id in a "-r" shard that collides with the -1 sentinel and
+        // silently drops from the mix
+        val m = o.id % parts
+        val p = if (m < 0) m + parts else m
+        if (p != pid) {
+          flush()
+          pid = p
+          ys = new scala.collection.mutable.ArrayBuilder.ofDouble
+          xs = new scala.collection.mutable.ArrayBuilder.ofDouble
         }
-        flush()
-        out.iterator
+        ys += o.y
+        xs.addAll(o.x, 0, nf)
       }
-      .collect()
-    bc.unpersist()
-    res.sortBy(_._1)
+      flush()
+      out.iterator
+    }
+
+  /** One SGD pass over one shard: the sequential per-record fold from
+    * θ, emitting (pid, allRecordsStillMoving, Σ per-record θ snapshots,
+    * n).
+    */
+  private def foldBlock(b: Block, theta: Array[Double], logistic: Boolean)
+      : (Long, Boolean, Array[Double], Long) = {
+    val nf = theta.length
+    val th = theta.clone()
+    val snapSum = new Array[Double](nf)
+    var allCont = true
+    var r = 0
+    while (r < b.y.length) {
+      val off = r * nf
+      var h = 0.0
+      var i = 0
+      while (i < nf) { h += th(i) * b.x(off + i); i += 1 }
+      if (logistic) h = sigmoidPL(h)
+      val err = b.y(r) - h
+      if (math.abs(err) > Accuracy) {
+        i = 0
+        while (i < nf) { th(i) += Alpha * err * b.x(off + i); i += 1 }
+      } else allCont = false // this record converged → vote to stop
+      i = 0
+      while (i < nf) { snapSum(i) += th(i); i += 1 }
+      r += 1
+    }
+    (b.pid, allCont, snapSum, b.y.length.toLong)
   }
 
   /** Iterative driver loop (M5): stop on the reference's any-record-
-    * converged flag or maxIter. θ state never touches the data path.
-    * `ds` must be [[shard]]ed with the SAME `parts` (callers persist it
-    * so the epochs rescan from cache).
+    * converged flag or maxIter. `ds` must be [[shard]]ed with the SAME
+    * `parts`; it is read once, into [[Block]]s cached for the fit, and
+    * each epoch folds every block from the driver's θ in one job. The
+    * per-shard results mix in ascending-pid order.
     */
   def fit(ds: Dataset[Obs], numFeatures: Int, logistic: Boolean,
       parts: Int): FitResult = {
-    var theta = new Array[Double](numFeatures)
-    var cont = true
-    var it = 0
-    while (cont && it < MaxIter) {
-      val shards = epoch(ds, theta, logistic, parts)
-      val sum = new Array[Double](numFeatures)
-      var n = 0L
-      cont = true
-      shards.foreach { case (_, flag, s, cnt) =>
-        var i = 0
-        while (i < numFeatures) { sum(i) += s(i); i += 1 }
-        n += cnt
-        cont &&= flag
+    val blocks = pack(ds, numFeatures, parts)
+      .persist(StorageLevel.MEMORY_ONLY)
+    try {
+      var theta = new Array[Double](numFeatures)
+      var cont = true
+      var it = 0
+      while (cont && it < MaxIter) {
+        val th = theta
+        val shards = blocks.map(foldBlock(_, th, logistic)).collect()
+          .sortBy(_._1)
+        val sum = new Array[Double](numFeatures)
+        var n = 0L
+        cont = true
+        shards.foreach { case (_, flag, s, cnt) =>
+          var i = 0
+          while (i < numFeatures) { sum(i) += s(i); i += 1 }
+          n += cnt
+          cont &&= flag
+        }
+        if (n > 0) theta = sum.map(_ / n) else cont = false
+        it += 1
       }
-      if (n > 0) theta = sum.map(_ / n) else cont = false
-      it += 1
-    }
-    FitResult(theta, it, !cont)
+      FitResult(theta, it, !cont)
+    } finally blocks.unpersist(): Unit
   }
 
   /** Session-lifetime trained model per (session, dir, link) — the
@@ -268,14 +292,11 @@ object Sgd {
       : DataFrame = thetaCache.getOrBuild(
       spark, (dir, logistic, numParts(spark))) {
     val s = spark; import s.implicits._
-    val ds = dataset(spark, dir, logistic).persist()
-    try {
-      val r = fit(ds, 4, logistic, numParts(spark))
-      Seq((r.theta(0), r.theta(1), r.theta(2), r.theta(3), r.iterations,
-        r.converged))
-        .toDF("theta_0", "theta_1", "theta_2", "theta_3", "iterations",
-          "converged")
-    } finally ds.unpersist()
+    val r = fit(dataset(spark, dir, logistic), 4, logistic, numParts(spark))
+    Seq((r.theta(0), r.theta(1), r.theta(2), r.theta(3), r.iterations,
+      r.converged))
+      .toDF("theta_0", "theta_1", "theta_2", "theta_3", "iterations",
+        "converged")
   }
 
   /** OLS sufficient statistics of the SGD feature pipeline: the Gram
@@ -357,12 +378,13 @@ object Sgd {
     * unified accumulator/element struct {y, x, th, snap, n, cont}:
     * h = θ·x (ascending fold from 0.0), err = y − link(h), conditional
     * θ update at pinned association (θᵢ + (α·err)·xᵢ), snapshot add,
-    * AND'd continue flag — [[epoch]]'s inner loop, line for line.
+    * AND'd continue flag — [[foldBlock]]'s inner loop, line for line.
     */
   private def stepSql(nf: Int, logistic: Boolean): String = {
     // list_dot_product is the ascending-index loop (verified bit-equal
-    // to the explicit list_reduce chain and to [[dot]] on randomized
-    // 4- and 262-dim inputs) — native, ~6× the lambda formulation
+    // to the explicit list_reduce chain and to [[foldBlock]]'s dot on
+    // randomized 4- and 262-dim inputs) — native, ~6× the lambda
+    // formulation
     val dotSql = "list_dot_product(acc.th, r.x)"
     val linked = if (logistic) let("hr", dotSql, sigSql("hr")) else dotSql
     "(acc, r) -> " +

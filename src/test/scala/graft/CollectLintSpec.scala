@@ -28,7 +28,7 @@ class CollectLintSpec extends AnyFunSuite {
     *    eval-benchmark vectors for the semantic audit.
     *  - Bitext (2): the bounded mining batch (q vectors) and its
     *    ≤ q·k candidate targets.
-    *  - Sgd (1): θ read-back — O(partitions·features).
+    *  - Sgd (1): θ read-back — O(shards·features) per epoch.
     *  - Curation (2): the greedy coverage selector's per-step argmax
     *    (LIMIT-1 row) and chosen-doc term pull (≤ CovUniverse rows) —
     *    bounded driver state, K steps (docstring budget at

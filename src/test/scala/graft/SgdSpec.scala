@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftspec.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.operators.Sgd
 import graft.operators.Sgd.Obs
@@ -13,38 +18,50 @@ class SgdSpec extends SparkSpecBase {
 
   /** Bit-exact sequential re-implementation of the reference semantics
     * (per-record update, per-record θ snapshot averaging, AND'd stop
-    * flags) — what Sgd.fit must equal on a single partition.
+    * flags) — what Sgd.fit must equal. Records route to shard
+    * `pmod(id, parts)`, each shard folds its records in ascending-id
+    * order from the epoch's θ, and the snapshot sums mix in ascending
+    * pid order.
     */
-  private def seqFit(obs: Seq[Obs], nf: Int, logistic: Boolean)
-      : (Array[Double], Int, Boolean) = {
+  private def seqFit(obs: Seq[Obs], nf: Int, logistic: Boolean,
+      parts: Int = 1): (Array[Double], Int, Boolean) = {
+    val shards = obs.groupBy(o => ((o.id % parts) + parts) % parts)
+      .toSeq.sortBy(_._1).map(_._2.sortBy(_.id))
     var theta = new Array[Double](nf)
     var cont = true
     var it = 0
     while (cont && it < Sgd.MaxIter) {
-      val th = theta.clone()
-      val snap = new Array[Double](nf)
+      val sum = new Array[Double](nf)
       var n = 0L
-      var allCont = true
-      obs.foreach { o =>
-        var h = 0.0
-        var i = 0
-        while (i < nf) { h += th(i) * o.x(i); i += 1 }
-        if (logistic) h = Sgd.sigmoidPL(h)
-        val err = o.y - h
-        if (math.abs(err) > Sgd.Accuracy) {
+      cont = true
+      shards.foreach { shard =>
+        val th = theta.clone()
+        val snap = new Array[Double](nf)
+        shard.foreach { o =>
+          var h = 0.0
+          var i = 0
+          while (i < nf) { h += th(i) * o.x(i); i += 1 }
+          if (logistic) h = Sgd.sigmoidPL(h)
+          val err = o.y - h
+          if (math.abs(err) > Sgd.Accuracy) {
+            var j = 0
+            while (j < nf) { th(j) += Sgd.Alpha * err * o.x(j); j += 1 }
+          } else cont = false
           var j = 0
-          while (j < nf) { th(j) += Sgd.Alpha * err * o.x(j); j += 1 }
-        } else allCont = false
+          while (j < nf) { snap(j) += th(j); j += 1 }
+          n += 1
+        }
         var j = 0
-        while (j < nf) { snap(j) += th(j); j += 1 }
-        n += 1
+        while (j < nf) { sum(j) += snap(j); j += 1 }
       }
-      cont = allCont
-      if (n > 0) theta = snap.map(_ / n) else cont = false
+      if (n > 0) theta = sum.map(_ / n) else cont = false
       it += 1
     }
     (theta, it, !cont)
   }
+
+  private def bits(t: Array[Double]): Seq[Long] =
+    t.toSeq.map(java.lang.Double.doubleToRawLongBits)
 
   private def toDs(obs: Seq[Obs], parts: Int) = {
     val s = spark; import s.implicits._
@@ -64,6 +81,17 @@ class SgdSpec extends SparkSpecBase {
     (obs, trueTheta)
   }
 
+  /** Ids `from until from + n` with labels ±1 alternating along each
+    * shard of a 4-shard split (by the parity of ⌊id/4⌋): no θ fits a
+    * record within the 0.01 tolerance, so training runs all
+    * [[Sgd.MaxIter]] epochs.
+    */
+  private def alternating(n: Int, from: Int): Seq[Obs] =
+    (from until from + n).map { i =>
+      Obs(i.toLong, if (((i >> 2) & 1) == 0) 1.0 else -1.0,
+        Array(1.0, ((i * 37) % 100) / 100.0, ((i * 61) % 100) / 100.0))
+    }
+
   test("single-partition fit is bit-identical to the sequential reference") {
     val (obs, _) = synth(200)
     for (logistic <- Seq(false, true)) {
@@ -72,6 +100,67 @@ class SgdSpec extends SparkSpecBase {
       assert(got.theta.toSeq == want._1.toSeq, s"logistic=$logistic")
       assert(got.iterations == want._2 && got.converged == want._3)
     }
+  }
+
+  test("negative ids and several shards per task route by pmod") {
+    // ids −50..50 at 4 shards: a plain Java % would route the negative
+    // ids to shards −1..−3. Two layouts: one shard per task ([[shard]]
+    // at parts = 4), and all four shards in a single task.
+    val s = spark; import s.implicits._
+    val obs = alternating(101, from = -50)
+    val pid = pmod(col("id"), lit(4L))
+    val oneTask = spark.createDataset(obs).repartition(1)
+      .sortWithinPartitions(pid, col("id"))
+    assert(oneTask.rdd.getNumPartitions == 1)
+    for (logistic <- Seq(false, true);
+         ds <- Seq(toDs(obs, 4), oneTask)) {
+      val got = Sgd.fit(ds, 3, logistic, parts = 4)
+      val want = seqFit(obs, 3, logistic, parts = 4)
+      assert(want._2 > 1, "the reference stopped after one epoch")
+      assert(bits(got.theta) == bits(want._1), s"logistic=$logistic")
+      assert(got.iterations == want._2 && got.converged == want._3)
+    }
+  }
+
+  test("empty input: θ = 0 after one epoch, converged") {
+    val r = Sgd.fit(toDs(Seq.empty, 4), 3, logistic = false, parts = 4)
+    assert(r.theta.toSeq == Seq(0.0, 0.0, 0.0))
+    assert(r.iterations == 1 && r.converged)
+  }
+
+  test("fit plans no query per epoch") {
+    // the blocks are packed once and every epoch is a plain RDD job:
+    // at most one SQL execution (the pack's read of `ds`) and one job
+    // per epoch plus at most one more
+    val ds = toDs(alternating(200, from = 0), 4).persist()
+    try {
+      ds.count()
+      val sc = spark.sparkContext
+      val queries = new AtomicInteger
+      val jobs = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case _: SparkListenerSQLExecutionStart =>
+            queries.incrementAndGet(): Unit
+          case _ => ()
+        }
+      }
+      BusDrain(sc)
+      sc.addSparkListener(listener)
+      val r =
+        try {
+          val r = Sgd.fit(ds, 3, logistic = false, parts = 4)
+          BusDrain(sc)
+          r
+        } finally sc.removeSparkListener(listener)
+      assert(r.iterations > 1, "fit stopped after one epoch")
+      assert(queries.get <= 1,
+        s"${queries.get} SQL executions over ${r.iterations} epochs")
+      assert(jobs.get <= r.iterations + 1,
+        s"${jobs.get} jobs over ${r.iterations} epochs")
+    } finally ds.unpersist(): Unit
   }
 
   test("fit is deterministic run-to-run at a fixed partition count") {
