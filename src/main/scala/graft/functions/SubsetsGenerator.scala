@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one output row per order-preserving subset of a string array, as
   * (itemset = space-joined key, k = size). Without `k` it emits every
   * non-empty subset (2^n − 1 rows); with `k` only the C(n, k) subsets
-  * of that size, the level-wise Apriori step. `k` must be a foldable
-  * INT; a null or out-of-range `k` emits nothing. The SQL surface of
+  * of that size. `k` must be a foldable INT; a null or out-of-range `k`
+  * emits nothing. The SQL surface of
   * the Apriori candidate generator (G1, `CandidatesGenRecursion` at
   * `apriori/apriori_final.java:70-110`), alongside the scalar
   * [[DotProduct]] and the aggregate [[TopKAgg]].
@@ -241,32 +241,26 @@ object SubsetsGenerator {
     total.toInt
   }
 
-  /** The subsets of sizes [lo, hi] of `arr` as one ArrayData of
-    * (itemset, k) struct rows, k ascending then lexicographic over
-    * positions — the codegen collection.
+  /** The generator's walk: every subset of sizes [lo, hi] of `items`,
+    * k ascending then lexicographic over positions, passed to `emit` as
+    * (space-joined key, k). [[subsetsOf]] collects it into the codegen
+    * collection; the level-wise Apriori loop counts it directly.
     */
-  def subsetsOf(arr: ArrayData, lo: Int, hi: Int): ArrayData = {
-    if (arr == null) return Empty
-    val items = itemsOf(arr)
+  def foreachSubset(items: Array[UTF8String], lo: Int, hi: Int)(
+      emit: (UTF8String, Int) => Unit): Unit = {
     val n = items.length
-    val from = math.max(lo, 1)
-    val to = math.min(hi, n)
-    val out = new Array[Any](rowCount("graft_subsets", n, from, to))
     val idx = new Array[Int](n)
-    var row = 0
-    var k = from
+    var k = math.max(lo, 1)
+    val to = math.min(hi, n)
     while (k <= to) {
       val sel = new Array[UTF8String](k)
-      val boxedK: Any = k // boxed once per size, not per row
       var j = 0
       while (j < k) { idx(j) = j; j += 1 }
       var more = true
       while (more) {
         j = 0
         while (j < k) { sel(j) = items(idx(j)); j += 1 }
-        out(row) = new GenericInternalRow(
-          Array[Any](UTF8String.concatWs(Space, sel: _*), boxedK))
-        row += 1
+        emit(UTF8String.concatWs(Space, sel: _*), k)
         // advance: the rightmost position that can still move
         var p = k - 1
         while (p >= 0 && idx(p) == n - k + p) p -= 1
@@ -278,6 +272,23 @@ object SubsetsGenerator {
         }
       }
       k += 1
+    }
+  }
+
+  /** The subsets of sizes [lo, hi] of `arr` as one ArrayData of
+    * (itemset, k) struct rows, in [[foreachSubset]] order — the codegen
+    * collection.
+    */
+  def subsetsOf(arr: ArrayData, lo: Int, hi: Int): ArrayData = {
+    if (arr == null) return Empty
+    val items = itemsOf(arr)
+    val n = items.length
+    val out = new Array[Any](
+      rowCount("graft_subsets", n, math.max(lo, 1), math.min(hi, n)))
+    var row = 0
+    foreachSubset(items, lo, hi) { (key, k) =>
+      out(row) = new GenericInternalRow(Array[Any](key, k))
+      row += 1
     }
     new GenericArrayData(out)
   }

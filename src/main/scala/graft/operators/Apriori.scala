@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
 /** Apriori frequent-itemset mining + association rules, Spark-first.
@@ -399,22 +403,24 @@ object Apriori {
 
   /** The drop-one subsets of each frequent k ≥ 2 itemset, with the
     * parent's support — the one-arity covering relation both
-    * [[maximalItemsets]] and [[closedItemsets]] reduce to.
+    * [[maximalItemsets]] and [[closedItemsets]] reduce to. Canonical
+    * itemsets have distinct elements, so removing an item by value
+    * drops exactly its position; `explode` + `array_remove` keep the
+    * Generate in whole-stage codegen, where a lambda would not.
     */
-  private def dropOneCovered(L: DataFrame): DataFrame = {
-    val t = split(col("itemset"), " ")
+  private def dropOneCovered(L: DataFrame): DataFrame =
     L.where(col("k") >= 2)
-      .select(explode(transform(sequence(lit(0), size(t) - 1),
-        i => array_join(filter(t, (_, j) => j =!= i), " "))).as("itemset"),
-        col("cnt").as("pcnt"))
-  }
+      .select(split(col("itemset"), " ").as("t"), col("cnt").as("pcnt"))
+      .select(col("t"), explode(col("t")).as("x"), col("pcnt"))
+      .select(array_join(array_remove(col("t"), col("x")), " ")
+        .as("itemset"), col("pcnt"))
 
   /** MAXIMAL frequent itemsets — frequent itemsets with no frequent
     * superset, the compressed representation mining pipelines report.
     * Monotonicity collapses the superset check to one arity: if any
     * frequent superset exists, one with exactly one more item does. So
     * "covered" = the drop-one subsets of every frequent k ≥ 2 itemset
-    * (generated by an indexed-lambda filter, |X| strings per itemset),
+    * (one `array_remove` per item, |X| strings per itemset),
     * and maximal = frequent ∖ covered in ONE anti-join — no quadratic
     * subset-containment join. Rides the session supports cache.
     */
@@ -450,83 +456,84 @@ object Apriori {
     * the first empty level. When the deepest frequent itemset is much
     * shallower than the widest basket — the realistic shape at scale —
     * the enumerated volume drops from 2^n to Σ_{k≤D+1} C(n', k) on
-    * shrinking n'. Driver state per level is the active-item set (item
-    * vocabulary scale, broadcast each level like SGD's θ) and the
-    * per-level support tables stay distributed.
+    * shrinking n'.
     *
-    * DRIVER-MEMORY BUDGET: the active set is bounded by |frequent
-    * 1-items| at every level — level 2 needs no prune (the cached
-    * basket table's `fitems` arrays contain nothing else by
-    * construction), and each later level's actives are items of
-    * frequent k-itemsets, a subset of the previous level's actives by
-    * support monotonicity (so the sequence is ⊆-monotone decreasing).
-    * That is O(frequent vocabulary) — the same class as SGD's θ and
-    * the standard level-wise broadcast pattern — NOT O(itemsets) (the
-    * support tables those itemsets live in never leave the cluster)
-    * and NOT O(corpus). The set is never `collect()`ed: it rides a
-    * 1-row `collect_set` broadcast built from the previous level's
-    * checkpointed table (the same bound, through Spark's broadcast
-    * machinery), and the per-level stop probe is a 1-block `isEmpty`.
-    * `AprioriSpec` pins the bound and the monotone shrinkage off the
-    * output.
+    * ONE JOB PER LEVEL: the session-cached baskets (sliced to
+    * [[MaxBasket]]) are packed once per call into a persisted RDD of
+    * item arrays, and each level is one `flatMap` of the generator's own
+    * k-subset walk ([[graft.functions.SubsetsGenerator.foreachSubset]])
+    * → `reduceByKey` → support filter, persisted, with the active set in
+    * the task closure. The level's one action materializes it and
+    * returns the next active set; an empty set stops the loop. No
+    * per-level query planning, broadcast or emptiness probe. The union
+    * of levels is cut once, and every level and the packed baskets are
+    * released before the call returns.
+    *
+    * DRIVER-MEMORY BUDGET: the one value that reaches the driver per
+    * level is the active-item set, bounded by |frequent 1-items| — level
+    * 2 needs no prune (the cached basket table's `fitems` arrays contain
+    * nothing else by construction), and each later level's actives are
+    * items of frequent k-itemsets, a subset of the previous level's
+    * actives by support monotonicity (so the sequence is ⊆-monotone
+    * decreasing). That is O(frequent vocabulary) — the same class as
+    * SGD's θ — NOT O(itemsets) (the per-level support tables never leave
+    * the cluster) and NOT O(corpus): each task folds its level rows into
+    * one distinct-item set, and the sets merge in a `fold`. `AprioriSpec`
+    * pins the bound and the monotone shrinkage off the output, and the
+    * one-job-per-level census.
     */
   def freqItemsetsLevelwise(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark; import s.implicits._
-    // per-level cuts honor the session conf (reliable on a cluster —
-    // localCheckpoint has no lineage fallback, so an executor loss
-    // mid-mining would fail the whole entry; sessionTruncating maps
+    // the union cut honors the session conf (reliable on a cluster —
+    // localCheckpoint has no lineage fallback; sessionTruncating maps
     // disk→local per the Materialize plan-growth note)
     val cut = graft.Materialize.sessionTruncating(spark)
-    // the session basket cache is the "one basket scan": the per-level
-    // slice(MaxBasket) is row-local over its checkpointed rows, and
-    // level 2 needs no prune at all (fitems contain exactly the
-    // frequent items by construction)
-    graft.functions.SubsetsGenerator.register(spark)
-    val baskets = frequentBaskets(spark, dir)
+    // baskets with fewer than 2 frequent items take part in no level;
+    // the rows are read as InternalRows (no Row decode, no SQL
+    // execution) and each item copied out of the reused row buffer
+    val packed = frequentBaskets(spark, dir)
       .select(slice(col("fitems"), 1, MaxBasket).as("fitems"))
-    val levels = scala.collection.mutable.ListBuffer[DataFrame]()
-    var result: DataFrame = null
-    var k = 2
-    var go = true
-    while (go && k <= MaxBasket) {
-      // the whole level is EXPRESSION-ONLY: active-item pruning via a
-      // 1-row broadcast aset built from the PREVIOUS level's
-      // checkpointed table (array_intersect preserves first-array
-      // order, so canonical keys survive), enumeration of the C(n', k)
-      // size-k subsets per basket through the codegen'd
-      // graft_subsets(fitems, k) Generate, then the count
-      val pruned =
-        if (levels.isEmpty) baskets
-        else {
-          val aset = levels.last
-            .select(explode(split($"itemset", " ")).as("i"))
-            .agg(collect_set($"i").as("aset"))
-          baskets.crossJoin(broadcast(aset))
-            .select(array_intersect($"fitems", $"aset").as("fitems"))
-        }
-      val lk = cut(pruned
-        .where(size($"fitems") >= k)
-        .selectExpr(s"graft_subsets(fitems, $k) AS (itemset, k)")
-        .groupBy("itemset")
-        .agg(count(lit(1)).as("cnt"))
-        .where($"cnt" >= Support))
-      levels += lk
-      // stop probe on the CHECKPOINTED table: one 1-block head job
-      if (lk.isEmpty) go = false
-      else {
-        result = if (result == null) lk else result.union(lk)
+      .where(size(col("fitems")) >= 2)
+      .queryExecution.toRdd.map { r =>
+        val a = r.getArray(0)
+        Array.tabulate(a.numElements())(a.getUTF8String(_).copy())
+      }
+      .persist(StorageLevel.MEMORY_ONLY)
+    val levels =
+      scala.collection.mutable.ListBuffer[RDD[(UTF8String, Long)]]()
+    try {
+      // null at level 2: every packed item is frequent
+      var active: Set[UTF8String] = null
+      var k = 2
+      while ((active == null || active.nonEmpty) && k <= MaxBasket) {
+        val (lvl, act) = (k, active)
+        val lk = packed.flatMap { b =>
+          // filter keeps basket order, so the keys stay canonical
+          val items = if (act == null) b else b.filter(act)
+          val keys =
+            scala.collection.mutable.ArrayBuffer[(UTF8String, Long)]()
+          graft.functions.SubsetsGenerator.foreachSubset(items, lvl, lvl)(
+            (key, _) => keys += ((key, 1L)))
+          keys
+        }.reduceByKey(_ + _)
+          .filter(_._2 >= Support)
+          .persist(StorageLevel.MEMORY_ONLY)
+        levels += lk
+        // the level's one job: materialize it, return its items
+        active = lk.mapPartitions(rows =>
+          Iterator(rows.flatMap(_._1.toString.split(" "))
+            .map(UTF8String.fromString).toSet))
+          .fold(Set.empty[UTF8String])(_ ++ _)
         k += 1
       }
+      val rows = spark.sparkContext.union(levels.toSeq)
+        .map { case (itemset, cnt) => Row(itemset.toString, cnt) }
+      cut(spark.createDataFrame(rows, StructType(Seq(
+        StructField("itemset", StringType, nullable = false),
+        StructField("cnt", LongType, nullable = false)))))
+    } finally {
+      levels.foreach(_.unpersist())
+      packed.unpersist(): Unit
     }
-    // consolidate the union into ONE retained table and release the
-    // per-level checkpoints: a call leaves behind one frequent-itemset-
-    // sized table (the basket table belongs to the session cache)
-    val out =
-      if (result == null)
-        spark.emptyDataset[(String, Long)].toDF("itemset", "cnt")
-      else cut(result)
-    levels.foreach(graft.Materialize.release)
-    out
   }
 
   /** The RAW variant's unfiltered candidate stream — parity with

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftspec.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.operators.Apriori
 
 /** G1/G3 generator semantics + Apriori pipeline invariants (SURVEY.md
@@ -133,11 +138,11 @@ class AprioriSpec extends SparkSpecBase {
 
   test("level-wise driver budget: actives bounded by frequent items, " +
     "monotone shrinking") {
-    // the ONLY driver-collected state in the level-wise loop is the
-    // active-item set; its documented budget is |frequent 1-items| at
-    // every level, shrinking with k (support monotonicity). Verify off
-    // the OUTPUT: level-k actives = distinct items of frequent
-    // k-itemsets, the exact value the loop collects for level k+1
+    // the one value each level returns to the driver is the active-item
+    // set; its documented budget is |frequent 1-items| at every level,
+    // shrinking with k (support monotonicity). Verify off the OUTPUT:
+    // level-k actives = distinct items of frequent k-itemsets, the
+    // exact set level k's job returns to prune level k+1
     val freqItems = Apriori.freqItems(spark, Sf).collect()
       .map(_.getAs[String]("item")).toSet
     val byLevel = Apriori.freqItemsetsLevelwise(spark, Sf).collect()
@@ -154,6 +159,38 @@ class AprioriSpec extends SparkSpecBase {
         s"level-$b actives not ⊆ level-$a actives")
       case _ => ()
     }
+  }
+
+  test("level-wise census: one job per level, one SQL execution") {
+    // the baskets are packed once and every level is one RDD job that
+    // returns the next active set: levels 2 … max plus the empty stop
+    // level, then the one SQL execution that cuts the union
+    Apriori.freqItemsetsLevelwise(spark, Sf).count(): Unit // warm caches
+    val sc = spark.sparkContext
+    val queries = new AtomicInteger
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart =>
+          queries.incrementAndGet(): Unit
+        case _ => ()
+      }
+    }
+    BusDrain(sc)
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        val out = Apriori.freqItemsetsLevelwise(spark, Sf)
+        BusDrain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+    val levels = out.collect()
+      .map(_.getAs[String]("itemset").split(" ").length).max
+    assert(levels >= 2)
+    assert(jobs.get <= levels + 1, s"${jobs.get} jobs over $levels levels")
+    assert(queries.get <= 1, s"${queries.get} SQL executions")
   }
 
   test("txorder keying splits one item SET by basket order; sorted merges") {

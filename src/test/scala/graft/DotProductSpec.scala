@@ -96,9 +96,9 @@ class DotProductSpec extends SparkSpecBase {
     }
     generateLine(Apriori.candidatesRaw(spark, Sf), "graft_subsets")
     generateLine(Apriori.assocRules(spark, Sf), "graft_antecedents")
-    // the level-wise ENTRY returns a checkpointed consolidation (bare
-    // scan), so assert the level-shaped plan itself: prune → generate
-    // → aggregate, exactly what each loop iteration runs
+    // the SQL k form, `graft_subsets(items, k)`, is public: its
+    // size-filter → generate → aggregate plan must fuse the same way
+    // (the level-wise entry itself runs plain RDD jobs, not this plan)
     val s = spark; import s.implicits._
     graft.functions.SubsetsGenerator.register(spark)
     val level = Seq(Seq("a", "b", "c"), Seq("a", "c", "d"))

@@ -76,6 +76,20 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
+  test("maximal and closed: the drop-one Generate is codegen'd") {
+    // the covering relation explodes each itemset's items and removes
+    // one by value: no lambda, so the Generate stays inside *(n)
+    Seq("maximalItemsets" -> Apriori.maximalItemsets(spark, Sf),
+        "closedItemsets" -> Apriori.closedItemsets(spark, Sf))
+      .foreach { case (name, df) =>
+        val p = finalOnly(df)
+        val gens = p.linesIterator.filter(_.contains("Generate ")).toSeq
+        assert(gens.nonEmpty, s"$name has no Generate:\n$p")
+        gens.foreach(l =>
+          assert(l.contains("*("), s"$name Generate not codegen'd:\n$p"))
+      }
+  }
+
   test("brute-force similarity never shuffles the corpus for scoring") {
     val p = finalPlan(Similarity.bruteForceTopK(spark, Sf))
     assert(!p.contains("CartesianProduct"), p)
