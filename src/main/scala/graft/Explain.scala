@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Plan-dump main: writes `.explain("formatted")` of named SparkEntry
   * queries to `<outDir>/<name>_<tag>.txt` — the before/after plan
@@ -12,6 +12,21 @@ import java.nio.file.{Files, Paths}
   * the bench actually runs.
   */
 object Explain {
+
+  /** Run `df` once, then return the formatted plan of that same
+    * execution. AQE re-plans while a query runs, so only an executed
+    * plan is the final one (`isFinalPlan=true`): it shows the codegen
+    * stage ids and the join and exchange-reuse choices AQE made.
+    * `toRdd` runs `df`'s own query execution, and the rows are dropped
+    * on the executors; `count` would plan and run a new aggregate over
+    * it and leave this plan initial.
+    */
+  def finalPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -38,8 +53,7 @@ object Explain {
         // timed bench reps run, so build once, then explain the rebuilt
         // DataFrame
         fn(spark, sfDir).count(): Unit
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = finalPlan(fn(spark, sfDir))
         Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan): Unit
         println(s"[explain] wrote $name")
       } catch { case scala.util.control.NonFatal(e) =>

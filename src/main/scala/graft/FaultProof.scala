@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *   2. `kill -9` one CoarseGrainedExecutorBackend JVM;
   *   3. serve both entries again from the same session and compare.
   *
-  * Expected outcomes (the point of the conf, r16 form):
+  * Expected outcomes, one per conf value:
   *   - `reliable`: the serve succeeds DIRECTLY with identical hashes
   *     (`rebuilt:false`) — the cached state lives as checkpoint FILES
   *     (a DFS path on a real cluster; a shared local dir here), so a
@@ -23,17 +23,6 @@ import org.apache.spark.sql.SparkSession
   *     fallback, the documented single-JVM-only limitation), and the
   *     [[Materialize.recovering]] boundary RECOVERS it: one
   *     invalidateAll + rebuild, hashes identical (`rebuilt:true`).
-  *     Before r16 this mode was documented-fail; graceful degradation
-  *     is now the contract;
-  *   - `disk`: same as `local` — persist(DISK_ONLY) keeps lineage for
-  *     DAG-shaped caches (the band index would recompute), but the
-  *     ITERATIVE family's cuts map `disk` to [[Materialize.Local]]
-  *     ([[Materialize.sessionTruncating]] — retained lineage doubles a
-  *     self-referencing round's plan), so the rank cache still dies
-  *     with its executor and recovers through the same rebuild. The
-  *     proof records WHY `disk` is not the cluster answer: only
-  *     `reliable` serves every cached artifact, iterative ones
-  *     included, through executor loss WITHOUT paying a rebuild.
   *
   * Prints one JSON line; exit 0 when the observed outcome matches the
   * expectation for the mode, 1 otherwise. See BASELINE.md "Round-16
@@ -103,7 +92,7 @@ object FaultProof {
   }
 
   def main(args: Array[String]): Unit = {
-    val mode = args(0) // local | disk | reliable
+    val mode = args(0) // local | reliable
     val sfDir = args(1)
     val spark = SparkSession.builder()
       .config("spark.sql.shuffle.partitions", "8")
@@ -133,7 +122,7 @@ object FaultProof {
     // blocks can land on one JVM, and killing the other proves nothing
     // (observed r16: local-mode serve succeeded directly, rebuilt
     // never fired). Targeting the block holder makes the scenario
-    // deterministic for every mode: local/disk lose real blocks,
+    // deterministic for both modes: local loses real blocks,
     // reliable survives the loss of the very executor its blocks are on.
     // Crash-safe: the kill itself can fail (TimeoutException from the
     // 30 s onExit wait; the require when no executor matched — wrong
@@ -159,11 +148,10 @@ object FaultProof {
     // invalidates the session's cached artifacts and rebuilds ONCE.
     // `rebuilt` records whether the recovery arm fired — under
     // `reliable` it must NOT (checkpoint files survive the kill, the
-    // serve succeeds directly); under `local`/`disk` the first serve
-    // dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (localCheckpoint
-    // pins blocks to the dead executor; the iterative family maps
-    // `disk` to Local, so its rank cache dies the same way) and must
-    // come back hash-identical after the one rebuild.
+    // serve succeeds directly); under `local` the first serve dies
+    // with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (localCheckpoint pins
+    // blocks to the dead executor) and must come back hash-identical
+    // after the one rebuild.
     var rebuilt = false
     val (serveOk, after, err) =
       try {

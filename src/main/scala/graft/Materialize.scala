@@ -1,22 +1,29 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Materialization strategy for intermediate tables that feed multiple
-  * plan consumers (dedup shingle tables, band indexes): without a cut,
-  * each consumer of a self-joined narrow pipeline recomputes it from the
-  * scan. The default is `localCheckpoint` — cheapest cut, right for
-  * single-JVM local mode — but it pins blocks to executor storage with
-  * no lineage fallback, so a 100 TB deployment flips the
-  * `graft.materialize` conf ([[session]]) to `reliable` — every
-  * session-cached builder reads it — or composes the `…Of` forms with
-  * any custom strategy.
+  * plan consumers (dedup shingle tables, band indexes, the per-round
+  * state of the iterative graph and dedup loops): without a cut, each
+  * consumer of a self-joined narrow pipeline recomputes it from the
+  * scan. The deployment picks one of two cuts through the
+  * `graft.materialize` conf ([[session]]): `local` (the default,
+  * `localCheckpoint` — cheapest, right for a single JVM, but its blocks
+  * have no lineage fallback) or `reliable` (a checkpoint to the
+  * configured checkpoint dir — a DFS path on a cluster). Both
+  * materialize eagerly and truncate lineage, so a build may release
+  * its staged inputs as soon as the cut returns, and a loop round that
+  * reads its predecessor twice plans against a bare scan.
   */
 object Materialize {
 
   /** A materialization point: given the DataFrame to cut, return the
-    * (possibly same) DataFrame consumers should read from.
+    * DataFrame consumers should read from. Contract for every strategy
+    * except [[None]]: the cut materializes EAGERLY (before it returns)
+    * and TRUNCATES lineage (the returned plan's root is the
+    * materialized table). Cached builds rely on both: they release staged
+    * inputs right after deriving from them, and the iterative forms
+    * cut every round.
     */
   type Strategy = DataFrame => DataFrame
 
@@ -25,29 +32,15 @@ object Materialize {
     */
   val Local: Strategy = _.localCheckpoint()
 
-  /** Reliable persistence to executor disk with lineage retained — a
-    * lost block recomputes instead of failing the job. The scale choice
-    * for DAG-SHAPED reuse (serving indexes, shared intermediates read
-    * by several consumers). NOT for per-round cuts in iterative loops:
-    * with lineage retained, a round that references its predecessor
-    * more than once (BFS reads `dist` for the frontier AND the
-    * visited anti-join; truss re-probes `cur`) DOUBLES the logical
-    * plan per round — exponential in round count; measured: the
-    * 5-edge toy-graph truss under Disk OOM'd a 4 GB JVM at plan time
-    * where [[Local]]/[[Reliable]] run in milliseconds. Iteration
-    * needs a lineage-TRUNCATING cut: [[Local]] on one JVM,
-    * [[Reliable]] on a cluster.
-    */
-  val Disk: Strategy = _.persist(StorageLevel.DISK_ONLY)
-
   /** Reliable lineage-truncating checkpoint to the configured
     * checkpoint directory (`spark.sparkContext.setCheckpointDir` — on
-    * a cluster, a DFS path): survives executor loss like [[Disk]] AND
-    * bounds plan depth like [[Local]]. The cluster choice for the
-    * iterative family's per-round cuts. [[release]] DELETES the
-    * checkpoint files (Spark itself reclaims them only under the
-    * non-default `spark.cleaner.referenceTracking.cleanCheckpoints`,
-    * and then only on GC) — without that, every superseded round of a
+    * a cluster, a DFS path): survives executor loss AND bounds plan
+    * depth like [[Local]]. The cluster choice for session-cached
+    * artifacts and the iterative family's per-round cuts. [[release]]
+    * DELETES the checkpoint files (Spark itself reclaims them only
+    * under the non-default
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`, and then only
+    * on GC) — without that, every superseded round of a
     * clustersOf/hits-class loop would retain a full-table checkpoint
     * directory for the application lifetime.
     */
@@ -66,43 +59,43 @@ object Materialize {
     * after a mid-session flip) and made any deployment-custom
     * strategy unable to ever reach the cached branch on purpose.
     * If actually APPLIED as a strategy (passed somewhere that cuts
-    * with it rather than dispatching on it), it degrades to the
-    * input's own session-conf strategy — sound ONLY for one-shot
-    * DAG-shaped cuts. The iterative `…Of` forms must never apply it
-    * per round (under `graft.materialize=disk` each application would
-    * resolve [[Disk]], the lineage-retaining plan-doubling path):
-    * [[requireTruncating]] resolves the sentinel at operator ENTRY via
-    * [[sessionTruncating]], so loops only ever see a concrete
-    * truncating strategy.
+    * with it rather than dispatching on it — an iterative `…Of` form
+    * cuts every round with it), it resolves to the input's own
+    * session-conf strategy on each application; both conf values
+    * truncate, so that is sound per round too.
     */
   val Session: Strategy = df => session(df.sparkSession)(df)
 
   /** The deployment-selected strategy for SESSION-CACHED artifacts
-    * (serving indexes, converged fixed-points, kept sets, trained θ),
-    * read from the session conf:
+    * (serving indexes, converged fixed-points, kept sets, trained θ)
+    * and the iterative operators' per-round cuts, read from the session
+    * conf:
     *
-    *   `graft.materialize` = `local` (default) | `disk` | `reliable`
+    *   `graft.materialize` = `local` (default) | `reliable`
     *
     * `local` is right for a single JVM; a real cluster flips the conf
     * to `reliable` (with `sparkContext.setCheckpointDir` pointing at a
     * DFS path) so cached state survives executor loss — a conf flip,
-    * not a code edit. `disk` keeps cached state as GC-reclaimable
-    * cache-manager entries with lineage fallback, at a measured cost:
-    * the row-reread kernels (dedup band/shingle indexes) scan the
-    * columnar cache 2–4× slower than checkpointed row blocks (the
-    * [[graft.operators.Dedup]] cachedIdx measurement) — `reliable` is
-    * the recommended cluster value. Returns the singleton strategies,
-    * so seam code
-    * may compare with `eq` (the [[graft.operators.Curation]]
-    * cached-vs-owned branch). Read at BUILD time: flipping the conf
-    * mid-session does not migrate artifacts already cached under the
-    * previous strategy (they are value-identical either way; call the
-    * operator's `invalidate…` hook to rebuild under the new one).
+    * not a code edit. Any other value fails here, at the first build
+    * that reads it. Returns the singleton strategies, so seam code may
+    * compare with `eq` (the [[graft.operators.Curation]] cached-vs-owned
+    * branch). Read at BUILD time: flipping the conf mid-session does
+    * not migrate artifacts already cached under the previous strategy
+    * (they are value-identical either way; call [[invalidateAll]] or
+    * the operator's `invalidate…` hook to rebuild under the new one).
     * Transient per-call cuts that are released within the same call
-    * (the apriori level-wise tables, 1-row eager scalars) stay
-    * [[Local]]: on executor loss the query retries and rebuilds them,
-    * nothing outlives the call.
+    * (1-row eager scalars, staged shortlists) stay [[Local]]: on
+    * executor loss the query retries and rebuilds them, nothing
+    * outlives the call.
     */
+  def session(spark: org.apache.spark.sql.SparkSession): Strategy =
+    spark.conf.get("graft.materialize", "local") match {
+      case "local" => Local
+      case "reliable" => Reliable
+      case other => throw new IllegalArgumentException(
+        s"graft.materialize=$other (expected local|reliable)")
+    }
+
   /** Cut a serving table with `mat`, then widen the MATERIALIZED cut
     * up to the session's shuffle parallelism if it came out narrower —
     * the r16 fix for single-split inputs: a checkpoint PRESERVES its
@@ -111,8 +104,8 @@ object Materialize {
     * later query 1-task-wide no matter how many cores exist.
     *
     * The width is read from the ALREADY-materialized cut (a
-    * checkpoint/persisted table's plan is a bare scan — no exchanges,
-    * so `.rdd` here builds the RDD without running anything). The r16
+    * checkpointed table's plan is a bare scan — no exchanges, so
+    * `.rdd` here builds the RDD without running anything). The r16
     * form probed `df.rdd` on the un-cut BUILD plan, and under AQE
     * (default) that materializes every shuffle query stage; the narrow
     * branch's `repartition` then re-planned and re-executed them —
@@ -133,88 +126,16 @@ object Materialize {
     * (the bow vector index, DSIR's strict-docs table); r16 measured a
     * blanket version NEGATIVE on trivial-serve indexes.
     */
-  def widened(mat: Strategy)(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def widened(mat: Strategy)(df: DataFrame): DataFrame = {
     val cut = mat(df)
-    // a lazy strategy (Disk) must be forced before its width is read,
-    // or .rdd plans the original exchange-bearing build again
-    if (!eager(mat)) cut.count(): Unit
     val n = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt
     if (cut.rdd.getNumPartitions >= n) cut
     else {
       val wide = mat(cut.repartition(n))
-      if (!eager(mat)) wide.count(): Unit
       release(cut)
       wide
     }
-  }
-
-  def session(spark: org.apache.spark.sql.SparkSession): Strategy =
-    spark.conf.get("graft.materialize", "local") match {
-      case "local" => Local
-      case "disk" => Disk
-      case "reliable" => Reliable
-      case other => throw new IllegalArgumentException(
-        s"graft.materialize=$other (expected local|disk|reliable)")
-    }
-
-  /** True for the strategies that materialize EAGERLY at the call
-    * ([[Local]]/[[Reliable]] run their checkpoint job immediately);
-    * [[Disk]] persists lazily (first action) and [[None]] never.
-    * Builders that RELEASE a staged input after deriving from it must
-    * force the derived table first when the strategy is lazy, or the
-    * deferred first action recomputes through the unpersisted input
-    * and the staged build never materializes at all.
-    */
-  def eager(s: Strategy): Boolean = (s eq Local) || (s eq Reliable)
-
-  /** [[session]] for ITERATIVE builders (per-round cuts in BFS/peel/
-    * fixed-point loops): [[Disk]] retains lineage and doubles the
-    * logical plan per self-referencing round (see the [[Disk]] note —
-    * measured OOM at plan time), so a `disk` conf maps to [[Local]]
-    * here; loops need a lineage-TRUNCATING cut ([[Local]] on one JVM,
-    * `reliable` on a cluster).
-    */
-  def sessionTruncating(spark: org.apache.spark.sql.SparkSession)
-      : Strategy =
-    session(spark) match {
-      case s if s eq Disk => Local
-      case s => s
-    }
-
-  /** Entry guard + sentinel resolution for the ITERATIVE `…Of` forms
-    * (self-referencing per-round cuts). Two jobs, both at ENTRY so the
-    * loop body only ever sees a concrete truncating strategy:
-    *
-    *  1. the [[Session]] SENTINEL resolves here via
-    *     [[sessionTruncating]] — NOT per-application inside the loop.
-    *     Applied per-round, the sentinel re-reads the conf each cut, so
-    *     `graft.materialize=disk` would route [[Disk]] into the loop —
-    *     exactly the lineage-retaining plan-doubling/OOM path this
-    *     guard exists to reject (the disk→[[Local]] mapping must apply
-    *     to the sentinel like it does to the direct conf path);
-    *  2. [[Disk]] (explicit, post-resolution) is rejected outright:
-    *     it retains lineage, so a round that references its
-    *     predecessor more than once DOUBLES the logical plan per round
-    *     — measured OOM at plan time (the [[Disk]] note). This closes
-    *     the public-API path that passes [[Disk]] explicitly, which
-    *     previously planned itself to death N rounds in.
-    *
-    * Custom caller strategies pass — a deployment composing its own
-    * cut is expected to make it truncating (e.g. a parquet
-    * round-trip), per the [[Disk]] scaladoc contract. Returns the
-    * strategy the loop must use for every cut.
-    */
-  def requireTruncating(mat: Strategy,
-      spark: org.apache.spark.sql.SparkSession, op: String): Strategy = {
-    val resolved = if (mat eq Session) sessionTruncating(spark) else mat
-    require(resolved ne Disk,
-      s"$op is iterative: Materialize.Disk retains lineage and doubles " +
-        "the logical plan per self-referencing round (measured OOM at " +
-        "plan time) - pass Local/Reliable (or sessionTruncating(spark)), " +
-        "or a custom lineage-truncating cut")
-    resolved
   }
 
   /** Drop EVERY session-cached artifact this session holds, across all
@@ -231,8 +152,7 @@ object Materialize {
 
   /** True when a failure (anywhere in its cause chain) is the
     * checkpoint-block-loss class — the signature of serving a
-    * [[Local]]-checkpointed (or disk-persisted-then-truncated) cached
-    * artifact after the executor holding its blocks died:
+    * [[Local]]-checkpointed cached artifact after the executor holding its blocks died:
     * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` / "Checkpoint block rdd_N_M
     * not found". A localCheckpoint has NO lineage fallback by design,
     * so this failure is never transient — the artifact must be
@@ -267,8 +187,8 @@ object Materialize {
     * job should fail loudly).
     *
     * This is the graceful degradation path for
-    * `graft.materialize=local|disk` under executor loss (the r15
-    * matrix recorded both as documented-fail): the serve now recovers
+    * `graft.materialize=local` under executor loss (the r15 matrix
+    * recorded it as documented-fail): the serve now recovers
     * after one rebuild instead of failing the application —
     * `tools/faultproof.sh` proves it under a real `kill -9`.
     * `reliable` never enters the recovery arm (checkpoint FILES
@@ -290,15 +210,15 @@ object Materialize {
     * iterative operators ([[graft.operators.Dedup.clustersOf]]) supersede
     * a materialized table every round, and without an explicit release the
     * pinned blocks accumulate linearly with round count. `unpersist`
-    * covers [[Disk]] (cache-manager entries); the root match covers
-    * [[Local]], whose blocks belong to the checkpointed RDD behind the
+    * covers persisted tables (cache-manager entries); the root match
+    * covers [[Local]], whose blocks belong to the checkpointed RDD behind the
     * plan's ROOT `LogicalRDD`, not to any cache-manager entry.
     *
     * Deliberately releases ONLY the table it is handed: it matches the
     * plan root (through aliases/`toDF`/pure-rename projections), never
     * walking into
-    * leaves, because a lineage-retaining plan ([[Disk]]/[[None]] output
-    * derived from checkpointed inputs) legitimately contains upstream
+    * leaves, because a lineage-retaining plan (persisted or [[None]]
+    * output derived from checkpointed inputs) legitimately contains upstream
     * `LogicalRDD` leaves this call does not own — e.g. the session dedup
     * index — and unpersisting a localCheckpoint someone else still reads
     * is unrecoverable (no lineage fallback). Safe on [[None]] output

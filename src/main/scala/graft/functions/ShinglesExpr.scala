@@ -24,7 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * and participates in whole-stage codegen through a static call, so
   * the shingle stage stops being the pipeline's bottleneck. Same
   * non-null-input contract as the split it replaces (fixture text is
-  * non-null; a null text yields null, which no caller observes).
+  * non-null; a null text yields null, which no caller observes). `n`
+  * must be a foldable INT ≥ 1, checked at analysis: a width of 0 or
+  * less has no shingles to emit.
   */
 case class ShinglesExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -32,7 +34,11 @@ case class ShinglesExpr(left: Expression, right: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+        right.eval() match {
+          case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
+          case n => TypeCheckResult.TypeCheckFailure(
+            s"graft_shingles expects n >= 1, got $n")
+        }
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"graft_shingles expects (string, int literal), got ($l, $r)")
     }

@@ -7,7 +7,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -29,6 +30,9 @@ import org.apache.spark.sql.types._
   *
   * Buffer state is O(k); serialization is a flat (count, score, id)*
   * byte stream.
+  *
+  * Input contract, checked at analysis: score DOUBLE, id BIGINT, k a
+  * foldable INT ≥ 1 (the heap size is fixed before the first row).
   */
 case class TopKAgg(
     scoreExpr: Expression,
@@ -38,11 +42,20 @@ case class TopKAgg(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, Long)]] {
 
-  private lazy val k: Int = kExpr match {
-    case Literal(v, _) => v.toString.toInt
-    case other => throw new IllegalArgumentException(
-      s"graft_topk: k must be a literal, got $other")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    (scoreExpr.dataType, idExpr.dataType, kExpr.dataType) match {
+      case (DoubleType, LongType, IntegerType) if kExpr.foldable =>
+        kExpr.eval() match {
+          case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
+          case n => TypeCheckResult.TypeCheckFailure(
+            s"graft_topk expects k >= 1, got $n")
+        }
+      case (st, it, kt) => TypeCheckResult.TypeCheckFailure(
+        "graft_topk expects (double score, bigint id, foldable int " +
+          s"k >= 1), got ($st, $it, $kt foldable=${kExpr.foldable})")
+    }
+
+  private lazy val k: Int = kExpr.eval().asInstanceOf[Int]
 
   // head = the WORST kept pair (lowest score; among ties, highest id),
   // so exceeding size k evicts correctly in O(log k).

@@ -294,10 +294,6 @@ object Apriori {
       val mat = graft.Materialize.session(spark)
       val staged = mat(tx)
       val built = mat(basketsOf(staged, Support, prune))
-      // a LAZY mat (Disk) defers built's materialization to the first
-      // action — force it while staged is still persisted, or the
-      // release below undoes the build (Materialize.eager note)
-      if (!graft.Materialize.eager(mat)) built.count(): Unit
       graft.Materialize.release(staged)
       built
     }
@@ -484,9 +480,8 @@ object Apriori {
     */
   def freqItemsetsLevelwise(spark: SparkSession, dir: String): DataFrame = {
     // the union cut honors the session conf (reliable on a cluster —
-    // localCheckpoint has no lineage fallback; sessionTruncating maps
-    // disk→local per the Materialize plan-growth note)
-    val cut = graft.Materialize.sessionTruncating(spark)
+    // localCheckpoint has no lineage fallback)
+    val cut = graft.Materialize.session(spark)
     // baskets with fewer than 2 frequent items take part in no level;
     // the rows are read as InternalRows (no Row decode, no SQL
     // execution) and each item copied out of the reused row buffer

@@ -837,7 +837,7 @@ object Curation {
   def bpeDriftOf(oldCorpus: DataFrame, nextCorpus: DataFrame)
       : DataFrame = {
     val n = TextOps.BpeMerges
-    val cut = graft.Materialize.sessionTruncating(oldCorpus.sparkSession)
+    val cut = graft.Materialize.session(oldCorpus.sparkSession)
     val a = TextOps.bpeMergesOf(TextOps.wordFreqOf(oldCorpus), n, cut)
       .select(col("step"), col("merged").as("merged_old"),
         col("cnt").as("cnt_old"))
@@ -1024,8 +1024,8 @@ object Curation {
     * fixture entry passes) serves the session-cached kept set; any
     * OTHER strategy gets a fresh cut of the declarative gate tree that
     * the CALLER owns (`None` returns the tree itself, so Catalyst sees
-    * every gate; a non-default `Disk`/`Reliable` cuts the KEPT SET
-    * with the caller's strategy). Dispatch is on the sentinel, NOT on
+    * every gate; `Local`/`Reliable` cuts the KEPT SET with the
+    * caller's strategy). Dispatch is on the sentinel, NOT on
     * `mat eq Materialize.session(spark)`: the conf re-read made the
     * cached-vs-owned branch depend on conf-flip TIMING (a caller
     * holding the previous session strategy silently rerouted into a
@@ -1617,23 +1617,25 @@ object Curation {
   def pipelineTokensMat(spark: SparkSession, dir: String,
       mat: graft.Materialize.Strategy): DataFrame = {
     // the kept set follows the SAME strategy as the chunk cut: a None
-    // caller gets the whole pipeline as one declarative tree, a
-    // Disk cluster caller never rides a hidden localCheckpoint.
-    // EXCEPT Reliable → Disk for these INTERNAL cuts: they are
-    // DAG-shaped reuse (Reliable's documented role is per-round loop
-    // cuts), this method consumes the handles internally so the
-    // caller can never release() them, and reliable-checkpoint FILES
-    // outlive the ContextCleaner (Materialize.Reliable doc) while
-    // Disk blocks are cache-manager entries the cleaner reclaims on
-    // GC — a Reliable caller would otherwise leak two full-table
-    // checkpoint dirs per invocation for the application lifetime
+    // caller gets the whole pipeline as one declarative tree.
+    // EXCEPT Reliable → a DISK_ONLY persist for these INTERNAL cuts:
+    // this method consumes the handles internally so the caller can
+    // never release() them, and reliable-checkpoint FILES outlive the
+    // ContextCleaner (Materialize.Reliable doc) while persisted blocks
+    // are cache-manager entries the cleaner reclaims on GC — a
+    // Reliable caller would otherwise leak two full-table checkpoint
+    // dirs per invocation for the application lifetime. The cuts are
+    // DAG-shaped (read by three branches, never by a later round), so
+    // the lineage a persist keeps is harmless here.
     // the Session SENTINEL resolves its concrete cut strategy from the
     // conf HERE (once, at call time — not identity-compared against a
-    // conf re-read), then rides the same Reliable→Disk mapping
+    // conf re-read), then rides the same Reliable mapping
     val resolved = if (mat eq graft.Materialize.Session)
       graft.Materialize.session(spark) else mat
-    val cutMat = if (resolved eq graft.Materialize.Reliable)
-      graft.Materialize.Disk else resolved
+    val cutMat: graft.Materialize.Strategy =
+      if (resolved eq graft.Materialize.Reliable)
+        _.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      else resolved
     // the kept set keeps the SENTINEL when that is what the caller
     // passed — curateStrictMat then serves the session-cached kept set
     // (the CACHE owns the cut, so the Reliable-leak rationale above

@@ -775,18 +775,13 @@ object Dedup {
     * Output: (doc_id, cluster_id) for every doc in ≥ 1 pair.
     */
   def clustersOf(pairs: DataFrame,
-                 mat0: Materialize.Strategy = Materialize.Local): DataFrame = {
+                 mat: Materialize.Strategy = Materialize.Local): DataFrame = {
     // an un-cut label table would embed every previous round's plan —
     // lineage doubles per iteration and the convergence count recomputes
     // the whole history; this loop REQUIRES a real materialization
-    require(mat0 ne Materialize.None,
+    require(mat ne Materialize.None,
       "clustersOf is iterative; Materialize.None would recompute " +
         "exponentially growing lineage each round")
-    // …and a lineage-RETAINING cut has the same exponential-plan
-    // problem (labels enters each round twice); reject Disk outright —
-    // including a Session sentinel resolving to it (entry resolution)
-    val mat = Materialize.requireTruncating(
-      mat0, pairs.sparkSession, "clustersOf")
     val edges = mat(pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .distinct())
@@ -827,7 +822,7 @@ object Dedup {
   def clusters(spark: SparkSession, dir: String): DataFrame =
     indexCache.getOrBuild(spark, (dir, "clusters"))(
       clustersOf(minhashLsh(spark, dir),
-        Materialize.sessionTruncating(spark)))
+        Materialize.session(spark)))
 
   /** Cluster-size distribution — the dedup QA report a pipeline records
     * per pass: how many near-dup components of each size exist (pairs

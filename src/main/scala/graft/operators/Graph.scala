@@ -206,13 +206,7 @@ object Graph {
     // all three once support/triCount are cut — the cached state is
     // the bounded (≤|E| support, ≤|V| triCount, |V| deg) tables, not
     // the two edge-scale orientation intermediates (no-ops under
-    // mat = None, where nothing was materialized). A LAZY mat (Disk)
-    // must force the terminal tables BEFORE the release, or the
-    // staged intermediates are unpersisted unused and the first serve
-    // recomputes the incidence separately per consumer — the exact 2×
-    // the kernel exists to remove.
-    if ((mat ne graft.Materialize.None) && !graft.Materialize.eager(mat))
-      Seq(deg, support, triCount).foreach(_.count(): Unit)
+    // mat = None, where nothing was materialized).
     Seq(triNodes, adjOut, oriented).foreach(graft.Materialize.release)
     TriKernel(ed, deg, support, triCount)
   }
@@ -263,26 +257,15 @@ object Graph {
 
   def trianglesOf(edgesRaw: DataFrame,
       mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    // the Filter barrier matters under a NON-checkpointing mat (Disk
-    // persists without replacing the plan root): release(ed) below
-    // would otherwise unwrap the bare (a, b) projection into the
-    // CALLER's table and unpersist a checkpoint this call does not
-    // own — the release() ownership contract. Local/Reliable replace
-    // the root with their own LogicalRDD (barrier inert), and
-    // Catalyst folds `WHERE true` out of execution.
-    val ed = mat(edgesRaw.select("a", "b").where(lit(true)))
+    val ed = mat(edgesRaw.select("a", "b"))
     val out = trianglesFrom(triKernelOf(ed))
-    // the 1-row census is cut eagerly so the edge table THIS call
-    // materialized can be released (Apriori level-wise discipline);
-    // under mat = None nothing was materialized, nothing is released.
-    // A LAZY mat (Disk) must force the census before ed is released,
-    // or the deferred first action recomputes through the unpersisted
-    // input.
+    // the 1-row census is cut so the edge table THIS call materialized
+    // can be released; under mat = None nothing was materialized,
+    // nothing is released.
     if (mat ne Materialize.None) {
-      val forced = mat(out)
-      if (!Materialize.eager(mat)) forced.count(): Unit
+      val census = mat(out)
       Materialize.release(ed)
-      forced
+      census
     } else out
   }
 
@@ -411,12 +394,10 @@ object Graph {
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "pr"))(
-      pagerankOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      pagerankOf(edges(spark, dir), Materialize.session(spark)))
 
   def pagerankOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "pagerankOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val sym = symOf(edgesRaw.select("a", "b"))
     // out-degree rides the |V|-row RANK table, not the |E|-row
     // adjacency: the only table this call materializes is vocabulary-
@@ -502,7 +483,7 @@ object Graph {
   def components(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "components"))(
       componentsOf(edges(spark, dir),
-        Materialize.sessionTruncating(spark)))
+        Materialize.session(spark)))
 
   /** Forces the (≤ distinct-sizes)-row histogram eagerly and releases
     * the |V|-row final-round label checkpoint [[Dedup.clustersOf]]
@@ -511,9 +492,7 @@ object Graph {
     * left to the ContextCleaner).
     */
   def componentsOf(ed: DataFrame,
-      mat0: Materialize.Strategy = Materialize.Local): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, ed.sparkSession, "componentsOf")
+      mat: Materialize.Strategy = Materialize.Local): DataFrame = {
     val labels = Dedup.clustersOf(ed.where(col("w") >= StrongW)
       .select(col("a").as("doc_a"), col("b").as("doc_b")), mat)
     finishIterative(labels
@@ -523,22 +502,15 @@ object Graph {
   }
 
   /** Closing step shared by the iterative `…Of` forms: cut the bounded
-    * result with the caller's strategy, FORCE it when the strategy is
-    * lazy (releasing the per-round cuts under a lazy result would make
-    * the first action recompute the whole loop through the released
-    * inputs — the [[triKernelOf]] ordering note), then release every
-    * per-round cut. Entry-side, each form rejects [[Materialize.Disk]]
-    * outright ([[Materialize.requireTruncating]] — retained lineage
-    * doubles a self-referencing round's plan; custom lazy strategies
-    * are the caller's informed choice and get the force-first path).
+    * result with the caller's strategy, then release every per-round
+    * cut (the result no longer reads them).
     */
   private def finishIterative(out: DataFrame,
       mat: Materialize.Strategy, cuts: Seq[DataFrame]): DataFrame =
     if (mat ne Materialize.None) {
-      val forced = mat(out)
-      if (!Materialize.eager(mat)) forced.count(): Unit
+      val result = mat(out)
       cuts.foreach(Materialize.release)
-      forced
+      result
     } else out
 
   /** Minimum residual degree for the [[kcore]] peel. */
@@ -566,12 +538,10 @@ object Graph {
     */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "kcore"))(
-      kcoreOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      kcoreOf(edges(spark, dir), Materialize.session(spark)))
 
   def kcoreOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "kcoreOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -666,12 +636,10 @@ object Graph {
     */
   def truss(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "truss"))(
-      trussOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      trussOf(edges(spark, dir), Materialize.session(spark)))
 
   def trussOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "trussOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -711,12 +679,10 @@ object Graph {
     */
   def distances(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "distances"))(
-      distancesOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      distancesOf(edges(spark, dir), Materialize.session(spark)))
 
   def distancesOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "distancesOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -771,12 +737,10 @@ object Graph {
     */
   def closeness(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "closeness"))(
-      closenessOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      closenessOf(edges(spark, dir), Materialize.session(spark)))
 
   def closenessOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "closenessOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -840,12 +804,10 @@ object Graph {
   def betweenness(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "betweenness"))(
       betweennessOf(edges(spark, dir),
-        Materialize.sessionTruncating(spark)))
+        Materialize.session(spark)))
 
   def betweennessOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "betweennessOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -925,12 +887,10 @@ object Graph {
     */
   def ppr(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "ppr"))(
-      pprOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      pprOf(edges(spark, dir), Materialize.session(spark)))
 
   def pprOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "pprOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -998,7 +958,7 @@ object Graph {
     */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "labelprop"))(
-      labelPropOf(edges(spark, dir), Materialize.sessionTruncating(spark)))
+      labelPropOf(edges(spark, dir), Materialize.session(spark)))
 
   /** The synchronous LPA label table after [[LpIters]] rounds —
     * shared by [[labelPropOf]] (community census) and
@@ -1019,9 +979,7 @@ object Graph {
   }
 
   def labelPropOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "labelPropOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -1059,12 +1017,10 @@ object Graph {
   def modularity(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "modularity"))(
       modularityOf(edges(spark, dir),
-        Materialize.sessionTruncating(spark)))
+        Materialize.session(spark)))
 
   def modularityOf(edgesRaw: DataFrame,
-      mat0: Materialize.Strategy = Materialize.None): DataFrame = {
-    val mat = Materialize.requireTruncating(
-      mat0, edgesRaw.sparkSession, "modularityOf")
+      mat: Materialize.Strategy = Materialize.None): DataFrame = {
     val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame =
       if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
@@ -1143,7 +1099,7 @@ object Graph {
   def hits(spark: SparkSession, dir: String): DataFrame =
     rankCache.getOrBuild(spark, (dir, "hits"))(
       hitsOnMembers(members(spark, dir),
-        Materialize.sessionTruncating(spark), ownM = false))
+        Materialize.session(spark), ownM = false))
 
   def hitsOf(lineitem: DataFrame,
       mat: Materialize.Strategy = Materialize.None): DataFrame =
@@ -1151,9 +1107,8 @@ object Graph {
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()), mat, ownM = true)
 
-  private def hitsOnMembers(m: DataFrame, mat0: Materialize.Strategy,
+  private def hitsOnMembers(m: DataFrame, mat: Materialize.Strategy,
       ownM: Boolean): DataFrame = {
-    val mat = Materialize.requireTruncating(mat0, m.sparkSession, "hitsOf")
     def rescale(v: DataFrame, c: String): DataFrame =
       v.crossJoin(broadcast(v.agg(max(col(c)).as("mx"))))
         .select(v.columns.filter(_ != c).map(col) :+
@@ -1292,7 +1247,7 @@ object Graph {
   private def buildAlsModel(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val dec = "decimal(24,6)"
-    val mat = Materialize.sessionTruncating(spark)
+    val mat = Materialize.session(spark)
     val rt = mat(ratings(spark, dir))
     var v = rt.select(col("p")).distinct().withColumn("v", lit(1.0))
     var u: DataFrame = null

@@ -1301,21 +1301,18 @@ object TextOps {
     * match across symbol boundaries.
     */
   def bpeMergesOf(vocab: DataFrame, n: Int,
-      mat0: graft.Materialize.Strategy = graft.Materialize.Local)
+      mat: graft.Materialize.Strategy = graft.Materialize.Local)
       : DataFrame = {
     // one cut per merge step, superseded-and-released as the vocabulary
     // rewrites — the clustersOf loop discipline: None would recompute
     // the whole replace chain at every step's argmax collect (O(n²)
-    // jobs), and Disk retains lineage across steps (the Materialize
-    // plan-growth note) — callers with a session pass
-    // Materialize.sessionTruncating so a cluster's `reliable` conf
-    // reaches the loop (localCheckpoint has no lineage fallback; one
-    // executor loss mid-train would fail the whole entry).
-    require(mat0 ne graft.Materialize.None,
+    // jobs) — callers with a session pass Materialize.session so a
+    // cluster's `reliable` conf reaches the loop (localCheckpoint has
+    // no lineage fallback; one executor loss mid-train would fail the
+    // whole entry).
+    require(mat ne graft.Materialize.None,
       "bpeMergesOf iterates: Materialize.None recomputes the whole " +
         "rewrite chain at every step's argmax")
-    val mat = graft.Materialize.requireTruncating(
-      mat0, vocab.sparkSession, "bpeMergesOf")
     val spark = vocab.sparkSession
     val s = spark; import s.implicits._
     var words = mat(vocab.select(
@@ -1364,7 +1361,7 @@ object TextOps {
   /** Fixture entry: merges learned from the documents word frequencies. */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
     bpeMergesOf(wordFreqOf(docs(spark, dir)), BpeMerges,
-      graft.Materialize.sessionTruncating(spark))
+      graft.Materialize.session(spark))
 
   /** Session-lifetime learned-merge cache (driver-side: n tiny rows per
     * (session, dir)): training runs once; every encode invocation AND

@@ -113,13 +113,6 @@ class ConfKnobsSpec extends SparkSpecBase {
     val rel = spark.newSession()
     rel.conf.set("graft.materialize", "reliable")
     assert(Materialize.session(rel) eq Materialize.Reliable)
-    assert(Materialize.sessionTruncating(rel) eq Materialize.Reliable)
-    // disk retains lineage — the iterative family must map it to a
-    // truncating cut (the Materialize.Disk plan-doubling note)
-    val dsk = spark.newSession()
-    dsk.conf.set("graft.materialize", "disk")
-    assert(Materialize.session(dsk) eq Materialize.Disk)
-    assert(Materialize.sessionTruncating(dsk) eq Materialize.Local)
     try {
       def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.collect().map(_.toString).sorted.toSeq
@@ -127,16 +120,6 @@ class ConfKnobsSpec extends SparkSpecBase {
         val base = rows(SparkEntry.queries(name)(spark, Sf))
         val flip = rows(SparkEntry.queries(name)(rel, Sf))
         assert(flip == base, s"$name diverged under reliable")
-      }
-      // disk end-to-end: Disk persists LAZILY, so these two entries
-      // exercise the force-before-release ordering in the triangle
-      // kernel and the frequent-basket build (a regression there
-      // recomputes instead of corrupting — this pins value identity
-      // and that the lazy path still runs at all)
-      Seq("graph_triangles", "apriori_freq_itemsets").foreach { name =>
-        val base = rows(SparkEntry.queries(name)(spark, Sf))
-        val flip = rows(SparkEntry.queries(name)(dsk, Sf))
-        assert(flip == base, s"$name diverged under disk")
       }
       // the flip really checkpointed: rdd-* dirs exist under ckDir
       def rddDirs() = Option(new java.io.File(ckDir).listFiles()).toSeq
@@ -150,11 +133,8 @@ class ConfKnobsSpec extends SparkSpecBase {
       // entry over a deleted reliable checkpoint fails its next read.
       // (Suites that use .checkpoint() set their own dir first —
       // SparkSpecBase shares one context — so deleting ours is safe.)
-      Seq(rel, dsk).foreach { s =>
-        operators.Dedup.invalidateIndex(s)
-        operators.Graph.invalidateEdges(s)
-        operators.Apriori.invalidateSupports(s)
-      }
+      operators.Dedup.invalidateIndex(rel)
+      operators.Graph.invalidateEdges(rel)
       def rm(f: java.io.File): Unit = {
         val kids = f.listFiles()
         if (kids != null) kids.foreach(rm)
@@ -167,6 +147,17 @@ class ConfKnobsSpec extends SparkSpecBase {
         java.nio.file.Files.createTempDirectory("graft-ck-keep")
           .toString))
     }
+  }
+
+  test("graft.materialize=disk fails in Materialize.session naming " +
+    "local|reliable") {
+    // both accepted values materialize eagerly and truncate lineage;
+    // the builders and iterative loops rely on that, so any other
+    // value fails at the first build instead of running a lazy cut
+    val dsk = spark.newSession()
+    dsk.conf.set("graft.materialize", "disk")
+    val e = intercept[IllegalArgumentException](Materialize.session(dsk))
+    assert(e.getMessage.contains("local|reliable"), e.getMessage)
   }
 
   test("mid-session conf flip + Materialize.invalidateAll rebuilds under " +

@@ -852,13 +852,15 @@ class CurationSpec extends SparkSpecBase {
     // None: the fully-declarative tree — same kept set, no hidden cut
     val none = Curation.curateStrictMat(spark, Sf, graft.Materialize.None)
     assert(none.collect().map(_.getAs[Long]("doc_id")).toSet == cached)
-    // Disk: a caller-owned recoverable cut, not the Local checkpoint
-    val disk = Curation.curateStrictMat(spark, Sf, graft.Materialize.Disk)
+    // Local: a caller-owned cut of its own, released below without
+    // touching the session-cached kept set (checked at the end)
+    val local = Curation.curateStrictMat(spark, Sf, graft.Materialize.Local)
     try {
-      assert(disk.collect().map(_.getAs[Long]("doc_id")).toSet == cached)
-      assert(disk.storageLevel.useDisk,
-        "Disk strategy output is not persisted to disk")
-    } finally graft.Materialize.release(disk)
+      assert(local.collect().map(_.getAs[Long]("doc_id")).toSet == cached)
+      assert(local.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+        "Local strategy output is not a checkpoint")
+    } finally graft.Materialize.release(local)
     // Session SENTINEL: serves the cached kept set (same rows), and a
     // caller release()-ing what it got back must NOT corrupt the
     // shared cache (the Filter-barrier ownership guard) — dispatch is

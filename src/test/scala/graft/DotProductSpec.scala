@@ -169,6 +169,44 @@ class DotProductSpec extends SparkSpecBase {
     assert(e.getMessage.contains("foldable"), e.getMessage)
   }
 
+  test("graft_shingles rejects n <= 0 and a null n at analysis") {
+    val s = spark; import s.implicits._
+    val df = Seq("a b c").toDF("text")
+    Seq("0", "-2", "CAST(NULL AS INT)").foreach { n =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.selectExpr(s"graft_shingles(text, $n) AS s"))
+      assert(e.getMessage.contains("graft_shingles"), e.getMessage)
+    }
+  }
+
+  /** `graft_topk` over (score, id) rows with the given SQL arguments. */
+  private def topk(args: String): Unit = {
+    val s = spark; import s.implicits._
+    graft.functions.TopKAgg.register(spark)
+    Seq((1L, 0.5, 7L, 3, 0.5f)).toDF("g", "score", "id", "n", "fscore")
+      .groupBy("g").agg(expr(s"graft_topk($args)")): Unit
+  }
+
+  private def rejectsTopK(args: String): Unit = {
+    val e = intercept[org.apache.spark.sql.AnalysisException](topk(args))
+    assert(e.getMessage.contains("graft_topk"), e.getMessage)
+  }
+
+  test("graft_topk rejects a non-DOUBLE score at analysis") {
+    topk("score, id, 2") // the accepted shape
+    rejectsTopK("fscore, id, 2")
+  }
+
+  test("graft_topk rejects a non-BIGINT id at analysis") {
+    rejectsTopK("score, CAST(id AS INT), 2")
+  }
+
+  test("graft_topk rejects a non-literal or non-positive k at analysis") {
+    rejectsTopK("score, id, n")
+    rejectsTopK("score, id, 0")
+    rejectsTopK("score, id, CAST(NULL AS INT)")
+  }
+
   test("graft_antecedents matches the typed antecedents kernel " +
     "row-for-row") {
     val s = spark; import s.implicits._

@@ -708,14 +708,10 @@ class GraphSpec extends SparkSpecBase {
   }
 
   test("cluster Materialize strategies reproduce the Local graph outputs") {
-    // The cluster stories must be proven, not argued — and they are
-    // DIFFERENT per shape (Materialize.Disk docstring): Disk (lineage
-    // retained) serves DAG-shaped cuts; iterative per-round cuts that
-    // re-reference their predecessor need a lineage-TRUNCATING cut or
-    // the plan doubles per round (the toy truss under Disk OOM'd a
-    // 4 GB JVM at plan time — found by this test's first draft), so
-    // the cluster strategy there is Reliable (checkpoint to the
-    // configured dir). Both must hash-match Local.
+    // The cluster story must be proven, not argued: Reliable
+    // (checkpoint to the configured dir) must hash-match Local for
+    // the DAG-shaped triangle cut and for the iterative per-round
+    // cuts.
     val ckDir = java.nio.file.Files
       .createTempDirectory("graft_ck").toString
     spark.sparkContext.setCheckpointDir(ckDir)
@@ -723,10 +719,10 @@ class GraphSpec extends SparkSpecBase {
       val edges = Graph.edgesOf(tinyLineitem)
       def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
         df.collect().map(_.toString).toSet
-      // DAG-shaped cut (the single edge-table materialization): Disk
+      // DAG-shaped cut (the single edge-table materialization)
       val triLocal = rows(Graph.trianglesOf(edges, Materialize.Local))
-      val triDisk = rows(Graph.trianglesOf(edges, Materialize.Disk))
-      assert(triDisk == triLocal && triLocal.nonEmpty)
+      val triRel = rows(Graph.trianglesOf(edges, Materialize.Reliable))
+      assert(triRel == triLocal && triLocal.nonEmpty)
       // iterative per-round cuts: Reliable, toy and fixture scale
       val prLocal = rows(Graph.pagerankOf(edges, Materialize.Local))
       val prRel = rows(Graph.pagerankOf(edges, Materialize.Reliable))

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * within the same call, where on executor loss the query retries and
   * rebuilds them — nothing outlives the call). Everything
   * session-cached or iterative goes through the `graft.materialize`
-  * seam ([[Materialize.session]]/[[Materialize.sessionTruncating]]) so
-  * a cluster's `reliable` conf reaches it; this spec freezes the
-  * audited transient sites so a NEW bare cut fails commit-time until
+  * seam ([[Materialize.session]]) so a cluster's `reliable` conf
+  * reaches it; this spec freezes the audited transient sites so a NEW bare cut fails commit-time until
   * it is reviewed — the same discipline CollectLintSpec applies to
   * `.collect()`. Source-level by design (a plan check can't tell a
   * conf-backed checkpoint from a hardwired one).
@@ -66,38 +65,8 @@ class MaterializeLintSpec extends AnyFunSuite {
     }
     assert(drift.isEmpty,
       s"""bare localCheckpoint drift — session-cached/iterative state
-         |must ride Materialize.session/sessionTruncating; pin only
+         |must ride Materialize.session; pin only
          |reviewed within-call transients:
          |  ${drift.mkString("\n  ")}""".stripMargin)
-  }
-
-  test("every requireTruncating call site BINDS the resolved strategy") {
-    // requireTruncating returns the concrete strategy (the Session
-    // sentinel resolves there, at operator ENTRY — r15). The build has
-    // no -Wvalue-discard, so a site written statement-style would
-    // compile, silently keep using the UNRESOLVED parameter, and
-    // reintroduce the per-round sentinel re-resolution hazard the
-    // return value exists to close (conf=disk applying Disk inside an
-    // iterative loop). Source lint: every call site outside the
-    // defining file must read `val <name> = …requireTruncating(`.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val sites = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.toString.endsWith("Materialize.scala"))
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
-          .filter(_._1.contains("requireTruncating("))
-          .map { case (l, i) => (s"$p:${i + 1}", l.trim) }
-      }.toSeq
-    // the iterative entries: 11 Graph forms + Dedup.clustersOf +
-    // TextOps.bpeMergesOf (update when adding an iterative operator)
-    assert(sites.size == 13,
-      s"requireTruncating call-site drift (${sites.size} != 13):\n  " +
-        sites.map(_._1).mkString("\n  "))
-    val unbound = sites.filterNot(_._2.startsWith("val "))
-    assert(unbound.isEmpty,
-      "requireTruncating result discarded (the site keeps the " +
-        s"unresolved strategy): ${unbound.mkString("; ")}")
   }
 }

@@ -63,7 +63,7 @@ class MaterializeSpec extends SparkSpecBase {
     // wraps the view in `WHERE true` — inert at execution (Catalyst
     // folds it), but the ANALYZED plan release walks keeps it, so the
     // walk stops before the shared root (curateStrictMat's cached
-    // branch; trianglesOf's edge projection under Disk)
+    // branch)
     val shared = Materialize.Local(
       spark.range(40).toDF("id").select(col("id"), (col("id") * 3).as("v")))
     val rdd = rootRdd(shared)
@@ -75,15 +75,6 @@ class MaterializeSpec extends SparkSpecBase {
       "release pierced the WHERE-true barrier and killed the shared table")
     assert(view.count() == 40) // the barrier costs nothing at execution
     Materialize.release(shared)
-  }
-
-  test("eager classifies the strategies by when they materialize") {
-    assert(Materialize.eager(Materialize.Local))
-    assert(Materialize.eager(Materialize.Reliable))
-    // Disk persists on FIRST ACTION — builders releasing staged inputs
-    // must force derived tables first (triKernelOf, frequentBaskets)
-    assert(!Materialize.eager(Materialize.Disk))
-    assert(!Materialize.eager(Materialize.None))
   }
 
   test("Session sentinel: applied as a strategy it degrades to the " +
@@ -101,22 +92,15 @@ class MaterializeSpec extends SparkSpecBase {
         .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
         "Session under the local default must checkpoint like Local")
     } finally Materialize.release(cut)
-  }
-
-  test("requireTruncating rejects Disk in the iterative forms") {
-    // the public-API path: sessionTruncating never yields Disk, but a
-    // caller passing it explicitly must fail fast (plan-doubling OOM)
-    // rather than N rounds in
-    val ed = spark.range(4).selectExpr("id AS a", "id + 1 AS b",
-      "CAST(5 AS LONG) AS w")
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Graph.kcoreOf(ed.toDF(), Materialize.Disk)
-    }
-    assert(e.getMessage.contains("iterative"))
-    // …while the conf path maps disk to a truncating cut and runs
-    val viaConf = spark.newSession()
-    viaConf.conf.set("graft.materialize", "disk")
-    assert(Materialize.sessionTruncating(viaConf) eq Materialize.Local)
+    // an iterative form fed the sentinel cuts every round with it: a
+    // 4-node chain reaches its one-component fixed point
+    val pairs = spark.range(3).selectExpr("id AS doc_a", "id + 1 AS doc_b")
+    val labels = graft.operators.Dedup.clustersOf(
+      pairs.toDF(), Materialize.Session)
+    try {
+      val lbls = labels.collect().map(r => r.getLong(1)).distinct
+      assert(lbls.length == 1, "a 4-node chain is one component")
+    } finally Materialize.release(labels)
   }
 
   test("isCheckpointLoss matches the REAL lost-block failure and walks " +
@@ -124,7 +108,7 @@ class MaterializeSpec extends SparkSpecBase {
     // the real thing: a localCheckpoint whose blocks are gone serves
     // the same failure class an executor kill produces
     // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — the r15 matrix's recorded
-    // local/disk outcome)
+    // local outcome)
     val ck = Materialize.Local(
       spark.range(100).toDF("id").select(col("id"), (col("id") + 1).as("v")))
     rootRdd(ck).unpersist(blocking = true)
@@ -189,41 +173,5 @@ class MaterializeSpec extends SparkSpecBase {
     assert(org.apache.spark.GraftBlockBridge
       .executorsHoldingRddBlocks(spark.sparkContext).isEmpty)
     df.unpersist(blocking = true): Unit
-  }
-
-  test("requireTruncating resolves the Session sentinel at ENTRY, " +
-    "mapping a disk conf to a truncating cut") {
-    // the r14 hazard: Session passed to an iterative form slipped the
-    // Disk guard (it is neither Disk nor None), then every per-round
-    // APPLICATION re-read the conf — under graft.materialize=disk that
-    // cut each round with Disk, the lineage-retaining plan-doubling
-    // path the guard exists to reject. Entry resolution must hand the
-    // loop sessionTruncating's mapping instead.
-    val viaConf = spark.newSession()
-    viaConf.conf.set("graft.materialize", "disk")
-    assert(Materialize.requireTruncating(
-      Materialize.Session, viaConf, "spec") eq Materialize.Local)
-    viaConf.conf.set("graft.materialize", "reliable")
-    assert(Materialize.requireTruncating(
-      Materialize.Session, viaConf, "spec") eq Materialize.Reliable)
-    // concrete strategies pass through unchanged (None stays legal for
-    // the non-looping …Of forms that accept it)
-    assert(Materialize.requireTruncating(
-      Materialize.Local, viaConf, "spec") eq Materialize.Local)
-    assert(Materialize.requireTruncating(
-      Materialize.None, viaConf, "spec") eq Materialize.None)
-    // …and an iterative form fed the sentinel under a disk conf RUNS
-    // (resolved to Local at entry) instead of plan-doubling: 4-node
-    // chain, one clustersOf fixed point
-    val disky = spark.newSession()
-    disky.conf.set("graft.materialize", "disk")
-    val pairs = disky.range(3).selectExpr(
-      "id AS doc_a", "id + 1 AS doc_b")
-    val labels = graft.operators.Dedup.clustersOf(
-      pairs.toDF(), Materialize.Session)
-    try {
-      val lbls = labels.collect().map(r => r.getLong(1)).distinct
-      assert(lbls.length == 1, "a 4-node chain is one component")
-    } finally Materialize.release(labels)
   }
 }

@@ -436,10 +436,10 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("Materialize.release only touches the table it is handed") {
     import spark.implicits._
     val base = Seq(1, 2, 3).toDF("x").localCheckpoint()
-    // lineage-retaining strategy output DERIVED from the checkpoint: its
+    // a lineage-retaining persist DERIVED from the checkpoint: its
     // plan contains base's LogicalRDD as a leaf, which release must not
     // unpersist (a released localCheckpoint cannot recompute)
-    val derived = Materialize.Disk(base.where($"x" > 1))
+    val derived = base.where($"x" > 1).persist()
     assert(derived.count() == 2)
     Materialize.release(derived)
     assert(base.count() == 3) // upstream checkpoint blocks intact

@@ -846,4 +846,13 @@ class PlanShapeSpec extends SparkSpecBase {
       assert(sk == expect, s"trial=$trial rows=$rows")
     }
   }
+
+  test("Explain.finalPlan dumps AQE's final plan of the executed query") {
+    val s = spark; import s.implicits._
+    val a = (1 to 40).map(i => (i, i % 5)).toDF("k", "v")
+    val b = (0 until 5).map(i => (i, s"w$i")).toDF("v", "w")
+    val p = Explain.finalPlan(a.join(b, "v").groupBy("w").count())
+    assert(p.contains("isFinalPlan=true"), p)
+    assert(!p.contains("isFinalPlan=false"), p)
+  }
 }

@@ -2,25 +2,20 @@
 # Executor-loss fault-tolerance proof for graft.materialize (see
 # graft.FaultProof scaladoc and BASELINE.md "Round-16 executor-loss
 # recovery"): runs the kill-an-executor scenario on a multi-JVM
-# local-cluster under all three conf values and expects
+# local-cluster under both conf values and expects
 #   reliable -> serve survives DIRECTLY, hashes identical, rebuilt:false
 #               (checkpoint files outlive the executor)
 #   local    -> raw serve dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
 #               then the Materialize.recovering boundary invalidates the
 #               session caches and rebuilds ONCE: hashes identical,
 #               rebuilt:true (r16 — was documented-fail before)
-#   disk     -> same recover-after-rebuild path: the iterative family's
-#               cuts map disk to Local (sessionTruncating), so the rank
-#               cache dies with its executor — the recorded reason disk
-#               is not the cluster answer (only reliable serves through
-#               the kill without paying a rebuild)
 # Usage: tools/faultproof.sh [sfDir]   (default /root/testdata/sf0.01)
 set -u
 SF="${1:-/root/testdata/sf0.01}"
 JAR="target/scala-2.13/mapreduce_codespark_2.13-0.1.0.jar"
 [ -f "$JAR" ] || { echo "run 'sbt package' first"; exit 2; }
 rc=0
-for mode in reliable local disk; do
+for mode in reliable local; do
   echo "== faultproof mode=$mode =="
   # capture, don't pipe: a pipeline's status is the LAST command's, so
   # `spark-submit | grep '"proof"'` reported grep's success even when

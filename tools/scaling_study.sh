@@ -30,7 +30,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 
 bench() { # $1 sfdir, $2 tag
-  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_BENCH_EXTRA_ABOVE=1e9 \
   SPARK_GRAFT_BENCH_SAMPLES="/tmp/scaling_$2.json" \
   java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
