@@ -22,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   *     localCheckpoint pins blocks to executor storage with no lineage
   *     fallback, the documented single-JVM-only limitation), and the
   *     [[Materialize.recovering]] boundary RECOVERS it: one
-  *     invalidateAll + rebuild, hashes identical (`rebuilt:true`).
+  *     `SessionCache.invalidate(spark)` + rebuild, hashes identical
+  *     (`rebuilt:true`).
   *
   * Prints one JSON line; exit 0 when the observed outcome matches the
   * expectation for the mode, 1 otherwise. See BASELINE.md "Round-16

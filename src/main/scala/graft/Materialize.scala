@@ -81,8 +81,8 @@ object Materialize {
     * compare with `eq` (the [[graft.operators.Curation]] cached-vs-owned
     * branch). Read at BUILD time: flipping the conf mid-session does
     * not migrate artifacts already cached under the previous strategy
-    * (they are value-identical either way; call [[invalidateAll]] or
-    * the operator's `invalidate…` hook to rebuild under the new one).
+    * (they are value-identical either way; call
+    * [[SessionCache.invalidate]] to rebuild under the new one).
     * Transient per-call cuts that are released within the same call
     * (1-row eager scalars, staged shortlists) stay [[Local]]: on
     * executor loss the query retries and rebuilds them, nothing
@@ -138,18 +138,6 @@ object Materialize {
     }
   }
 
-  /** Drop EVERY session-cached artifact this session holds, across all
-    * registered [[SessionCache]]s — the one-call remedy for the
-    * documented [[session]] caveat that a mid-session
-    * `graft.materialize` flip does not migrate artifacts built under
-    * the previous strategy: flip the conf, `invalidateAll(spark)`, and
-    * the next access rebuilds under the new one. (Per-operator
-    * `invalidate…` hooks remain the precise tool when only one
-    * fixture dir changed.)
-    */
-  def invalidateAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionCache.invalidateAll(spark)
-
   /** True when a failure (anywhere in its cause chain) is the
     * checkpoint-block-loss class — the signature of serving a
     * [[Local]]-checkpointed cached artifact after the executor holding its blocks died:
@@ -177,7 +165,8 @@ object Materialize {
   /** The SERVE boundary for session-cached artifacts: run `serve` (an
     * action over DataFrames derived from cached artifacts); if it
     * fails with [[isCheckpointLoss]], drop every artifact this session
-    * holds ([[invalidateAll]] — the lost blocks are unrecoverable, and
+    * holds ([[SessionCache.invalidate]] — the lost blocks are
+    * unrecoverable, and
     * which cached table they belonged to is not attributable from the
     * block id), rebuild by re-running `serve` ONCE (the operator
     * builders repopulate their caches on access), and return that
@@ -201,7 +190,7 @@ object Materialize {
     try serve
     catch {
       case e: Throwable if isCheckpointLoss(e) =>
-        invalidateAll(spark)
+        SessionCache.invalidate(spark)
         onRebuild(Option(e.getMessage).getOrElse(e.getClass.getName))
         serve
     }

@@ -35,10 +35,12 @@ object Tables {
     * multi-second driver stall (guide §6 "file listing"). Same
     * lifetime/staleness contract as every other [[SessionCache]]:
     * fixture dirs are immutable; a consumer that rewrites parquet under
-    * a cached path calls [[invalidateRelations]] at the boundary.
+    * a cached dir calls [[SessionCache.invalidate]] at the boundary —
+    * the relation's file listing is stale after a rewrite, so a
+    * retained entry fails its next scan with FILE_NOT_EXIST.
     * Release is a no-op — there are no persisted blocks to reclaim.
     */
-  private val relCache = new SessionCache[String, DataFrame](_ => ())
+  private val relCache = new SessionCache[DataFrame](_ => ())
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Self-heal for library consumers whose session builder missed
@@ -52,16 +54,7 @@ object Tables {
     if (name == "events") RequiredConf.foreach { case (k, v) =>
       if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
     }
-    relCache.getOrBuild(spark, s"$dir/$name.parquet")(
+    relCache.getOrBuild(spark, dir, name)(
       spark.read.parquet(s"$dir/$name.parquet"))
   }
-
-  /** Drop cached relations — a (session, dir) pair, a whole session
-    * (`dir = null`), or everything (no args): the hook for consumers
-    * that rewrite parquet under a previously-read path.
-    */
-  def invalidateRelations(spark: SparkSession = null,
-                          dir: String = null): Unit =
-    relCache.invalidate(spark,
-      k => dir == null || k.startsWith(dir + "/"))
 }

@@ -34,8 +34,9 @@ object Verify {
       if (selected(name))
         // each dump serves through the r16 recovery boundary: if a
         // session-cached artifact's checkpoint blocks died with an
-        // executor mid-run, the caches invalidate and the query
-        // rebuilds ONCE instead of failing the whole dump
+        // executor mid-run, SessionCache.invalidate(spark) drops every
+        // session cache and the query rebuilds ONCE instead of failing
+        // the whole dump
         // ([[Materialize.recovering]]; any other failure class still
         // lands in the loud-red path below)
         try Materialize.recovering(spark,

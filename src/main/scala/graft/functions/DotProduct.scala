@@ -78,7 +78,7 @@ object DotProduct {
   private val info =
     new ExpressionInfo(classOf[DotProduct].getName, null, "graft_dot")
 
-  private val builder: Seq[Expression] => Expression = {
+  private[functions] val builder: Seq[Expression] => Expression = {
     case Seq(a, b) => DotProduct(a, b)
     case other => throw new IllegalArgumentException(
       s"graft_dot expects 2 arguments, got ${other.size}")
@@ -100,29 +100,24 @@ object DotProduct {
 
 /** SparkSessionExtensions entry point: add
   * `spark.sql.extensions=graft.functions.GraftExtensions` and
-  * `graft_dot` is available in SQL and the Column API from session
-  * start (the harness mains and specs set this).
+  * the `graft_*` functions below are available in SQL and the Column
+  * API from session start (the harness mains and specs set this). Each
+  * registers through its arity-checked builder: a wrong argument count
+  * fails naming the function instead of indexing past the arguments
+  * or silently dropping the extras.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, null, "graft_dot"),
-      { exprs: Seq[Expression] => DotProduct(exprs(0), exprs(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKAgg].getName, null, "graft_topk"),
-      { exprs: Seq[Expression] => TopKAgg(exprs(0), exprs(1), exprs(2)) }))
-    ext.injectFunction((FunctionIdentifier("graft_subsets"),
-      new ExpressionInfo(classOf[SubsetsGenerator].getName, null,
-        "graft_subsets"),
-      SubsetsGenerator.builder))
-    ext.injectFunction((FunctionIdentifier("graft_token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, null,
-        "graft_token_count"),
-      { exprs: Seq[Expression] => TokenCount(exprs(0), exprs(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, null,
-        "graft_shingles"),
-      { exprs: Seq[Expression] => ShinglesExpr(exprs(0), exprs(1)) }))
+    Seq(
+      ("graft_dot", classOf[DotProduct], DotProduct.builder),
+      ("graft_topk", classOf[TopKAgg], TopKAgg.builder),
+      ("graft_subsets", classOf[SubsetsGenerator], SubsetsGenerator.builder),
+      ("graft_token_count", classOf[TokenCount], TokenCount.builder),
+      ("graft_shingles", classOf[ShinglesExpr], ShinglesExpr.builder)
+    ).foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, null, name), builder))
+    }
     // every size(split(s, <plain char>)) in any plan becomes the
     // allocation-free TokenCount — see RewriteSizeOfSplit's contract
     ext.injectOptimizerRule(_ => RewriteSizeOfSplit)

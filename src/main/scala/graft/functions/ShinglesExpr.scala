@@ -63,6 +63,12 @@ case class ShinglesExpr(left: Expression, right: Expression)
 
 object ShinglesExpr {
 
+  private[functions] val builder: Seq[Expression] => Expression = {
+    case Seq(text, n) => ShinglesExpr(text, n)
+    case other => throw new IllegalArgumentException(
+      s"graft_shingles expects 2 arguments, got ${other.size}")
+  }
+
   /** One-pass shingling kernel (static so generated code can call it).
     * Split semantics match `split(text, ' ')` (regex-free single-char
     * split, trailing empties kept); dedup keeps first-occurrence order

@@ -32,15 +32,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * Regex-meaningful delimiters (`.`,`|`,…) and non-literal patterns are
   * left untouched; so is the legacy `size(NULL) = -1` mode (the rewrite
   * preserves ANSI null-in-null-out only).
+  *
+  * The delimiter must be a foldable, non-null, one-character STRING —
+  * the only shape the rewrite emits — checked at analysis: an empty
+  * delimiter matches at every position (the count loop never ends),
+  * and a longer one counts overlapping matches (`('aaa', 'aa')` → 3
+  * where `size(split(..))` gives 2).
   */
 case class TokenCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
+      case (StringType, StringType) if right.foldable =>
+        right.eval() match {
+          case d: UTF8String if d.numChars() == 1 =>
+            TypeCheckResult.TypeCheckSuccess
+          case d => TypeCheckResult.TypeCheckFailure(
+            s"graft_token_count expects a one-character delimiter, got $d")
+        }
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_token_count expects (string, string), got ($l, $r)")
+        s"graft_token_count expects (string, one-character string " +
+          s"literal), got ($l, $r)")
     }
 
   override def dataType: DataType = IntegerType
@@ -72,6 +85,15 @@ case class TokenCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object TokenCount {
+
+  private[functions] val builder: Seq[Expression] => Expression = {
+    case Seq(s, d) => TokenCount(s, d)
+    case other => throw new IllegalArgumentException(
+      s"graft_token_count expects 2 arguments, got ${other.size}")
+  }
 }
 
 /** The injected optimizer rule (see [[TokenCount]]). Runs inside the

@@ -145,7 +145,7 @@ object TopKAgg {
   private val info =
     new ExpressionInfo(classOf[TopKAgg].getName, null, "graft_topk")
 
-  private val builder: Seq[Expression] => Expression = {
+  private[functions] val builder: Seq[Expression] => Expression = {
     case Seq(s, id, k) => TopKAgg(s, id, k)
     case other => throw new IllegalArgumentException(
       s"graft_topk expects 3 arguments, got ${other.size}")

@@ -306,15 +306,11 @@ object Contamination {
     * every entry invocation (and bench rep) probes the literal.
     */
   private val bloomCache =
-    new graft.SessionCache[String, Array[Long]](_ => ())
+    new graft.SessionCache[Array[Long]](_ => ())
 
   private def cachedBloom(spark: SparkSession, dir: String): Array[Long] =
     bloomCache.getOrBuild(spark, dir)(bloomFilterOf(
       docs(spark, dir).where(col("doc_id") % EvalMod === 0)))
-
-  def invalidateBloom(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    bloomCache.invalidate(spark, k => dir == null || k == dir)
 
   /** Fixture entry: same train/eval split as [[decontaminate]], the
     * probe riding the session-cached literal filter.

@@ -850,27 +850,27 @@ object Curation {
         col("cnt_old"), col("cnt_new"))
   }
 
-  /** Session cache: [[TextOps.bpeMergesOf]] trains eagerly and returns
-    * a LOCAL n-row table, so caching the returned DataFrame caches both
-    * trainings — without it every bench rep re-runs 2n driver-loop
-    * steps.
+  /** Session cache of trained REPORTS per (session, dir, kind) — the
+    * training runs at plan-build time, so caching the returned
+    * DataFrame caches the training:
+    *  - `drift`: [[TextOps.bpeMergesOf]] trains eagerly and returns a
+    *    LOCAL n-row table, so the entry holds both trainings — without
+    *    it every bench rep re-runs 2n driver-loop steps;
+    *  - `eval`: the learned θ bakes into the returned plan as literals,
+    *    so each collect re-runs only the final 3-row aggregation. The
+    *    plan reads [[Quality.probeFeatures]]' checkpoint with NO
+    *    lineage fallback; the one dir-scoped
+    *    [[graft.SessionCache.invalidate]] drops this entry together
+    *    with that checkpoint (a retained entry would fail its next
+    *    collect with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+    * Release is a no-op: the entries own no executor state.
     */
-  private val driftCache =
-    new graft.SessionCache[String, DataFrame](_ => ())
+  private val reportCache = new graft.SessionCache[DataFrame](_ => ())
 
   def bpeDrift(spark: SparkSession, dir: String): DataFrame =
-    driftCache.getOrBuild(spark, dir)(bpeDriftOf(
+    reportCache.getOrBuild(spark, dir, "drift")(bpeDriftOf(
       docs(spark, dir).select(col("doc_id"), col("text")),
       nextSnapshot(spark, dir)))
-
-  /** Drop cached drift reports — same boundary contract as
-    * [[Quality.invalidateProbe]] / [[Apriori.invalidateSupports]]: call
-    * when a fixture dir is regenerated within a session (the cached
-    * n-row local table is otherwise served for the JVM lifetime).
-    */
-  def invalidateDrift(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    driftCache.invalidate(spark, k => dir == null || k == dir)
 
   /** Cross-snapshot QUALITY drift — the monitoring row a pipeline
     * checks before ingesting a re-crawl, next to [[bpeDriftOf]]'s
@@ -944,7 +944,7 @@ object Curation {
     * index.
     */
   def curate(spark: SparkSession, dir: String): DataFrame =
-    keptCache.getOrBuild(spark, (dir, "curate"))(
+    keptCache.getOrBuild(spark, dir, "curate")(
       graft.Materialize.session(spark)(curateUncached(spark, dir)))
 
   private def curateUncached(spark: SparkSession, dir: String)
@@ -968,27 +968,17 @@ object Curation {
     * several corpus scans), while a real pipeline computes its kept
     * set once per snapshot and every downstream stage reads it. The
     * kept sets are doc_id-only tables, so the checkpoints are tiny;
-    * lineage is truncated, so invalidating an upstream index
-    * ([[Dedup.invalidateIndex]], [[Contamination.invalidateBloom]])
-    * cannot strand them — but callers that rewrite the corpus under a
-    * cached dir must call [[invalidateCurate]] alongside those hooks
-    * (staleness, not crashes, is the failure mode). The declarative
-    * single-tree composition stays available through the uncached
-    * bodies (PlanShapeSpec pins it via `pipelineTokensMat(…, None)`).
+    * lineage is truncated, so releasing an upstream index cannot
+    * strand them, and [[graft.SessionCache.invalidate]] drops them with
+    * every other artifact of their dir (including [[Dsir]]'s survivor
+    * tables derived from them). The same cache holds the
+    * [[coverageSelect]] incidence and the gate/card reports. The
+    * declarative single-tree composition stays available through the
+    * uncached bodies (PlanShapeSpec pins it via
+    * `pipelineTokensMat(…, None)`).
     */
   private val keptCache =
-    new graft.SessionCache[(String, String), DataFrame](
-      graft.Materialize.release)
-
-  def invalidateCurate(spark: SparkSession = null, dir: String = null)
-      : Unit = {
-    keptCache.invalidate(spark, k => dir == null || k._1 == dir)
-    // Dsir's strict-survivor corpus and its bucket distributions are
-    // DERIVED FROM curateStrict's kept set (the Graph.invalidateEdges
-    // stale-together principle): retained DSIR state would silently
-    // select against the OLD gate after the kept set rebuilds
-    Dsir.invalidateDsir(spark, dir)
-  }
+    new graft.SessionCache[DataFrame](graft.Materialize.release)
 
   /** The strict corpus gate: [[curate]]'s quality ∩ English ∩ not-near-
     * dup, additionally requiring the repetition gate
@@ -1001,7 +991,7 @@ object Curation {
     * index.
     */
   def curateStrict(spark: SparkSession, dir: String): DataFrame =
-    keptCache.getOrBuild(spark, (dir, "strict"))(
+    keptCache.getOrBuild(spark, dir, "strict")(
       graft.Materialize.session(spark)(
         strictGatesOn(curate(spark, dir), spark, dir)))
 
@@ -1160,20 +1150,13 @@ object Curation {
   /** Session-lifetime checkpoint of the incidence per (session, dir,
     * universe) — the serving-index discipline: the two corpus scans +
     * checkpoint are paid once, each coverageSelect call costs only its
-    * K greedy jobs. Released by [[invalidateCoverage]].
+    * K greedy jobs. Rides [[keptCache]].
     */
-  private val covCache = new graft.SessionCache[(String, Int), DataFrame](
-    graft.Materialize.release)
-
   private def cachedCovIncidence(spark: SparkSession, dir: String,
       uSize: Int): DataFrame =
-    covCache.getOrBuild(spark, (dir, uSize))(
+    keptCache.getOrBuild(spark, dir, ("coverage", uSize))(
       graft.Materialize.session(spark)(
         covIncidenceOf(docs(spark, dir), uSize)))
-
-  def invalidateCoverage(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    covCache.invalidate(spark, k => dir == null || k._1 == dir)
 
   private def coverageGreedy(spark: SparkSession, incU: DataFrame,
       k: Int): DataFrame = {
@@ -1261,30 +1244,13 @@ object Curation {
     * 3 rows.
     */
   def qualityEval(spark: SparkSession, dir: String): DataFrame =
-    evalCache.getOrBuild(spark, dir)(
+    reportCache.getOrBuild(spark, dir, "eval")(
       evalReport(Quality.probeFeatures(spark, dir)))
 
   def qualityEvalOf(corpus: DataFrame,
       mat: graft.Materialize.Strategy = graft.Materialize.Local)
       : DataFrame =
     evalReport(mat(Quality.probeFeaturesOf(corpus)))
-
-  /** θ caching note: the learned θ bakes into the returned plan as
-    * literals at build time, so caching the DataFrame caches the
-    * training; each collect re-runs only the final 3-row aggregation.
-    */
-  private val evalCache =
-    new graft.SessionCache[String, DataFrame](_ => ())
-
-  /** Drop cached eval reports. The cached DataFrame reads
-    * [[Quality.probeFeatures]]' localCheckpoint with NO lineage
-    * fallback, so [[Quality.invalidateProbe]] — which unpersists those
-    * blocks — MUST cascade here (it does): a retained entry would fail
-    * its next collect with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-    */
-  def invalidateEval(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    evalCache.invalidate(spark, k => dir == null || k == dir)
 
   private def evalReport(feat: DataFrame): DataFrame = {
     val fs = feat.withColumn("split", splitFromU(splitU(col("doc_id"))))
@@ -1324,7 +1290,7 @@ object Curation {
     // the #sources-row dashboard is nested by [[corpusCard]], so it
     // rides the same session cache as the kept sets (the report is
     // the other artifact a pipeline derives once per snapshot)
-    keptCache.getOrBuild(spark, (dir, "gate_report"))(
+    keptCache.getOrBuild(spark, dir, "gate_report")(
       graft.Materialize.session(spark)(gateReportUncached(spark, dir)))
 
   private[graft] def gateReportUncached(spark: SparkSession, dir: String)
@@ -1394,8 +1360,8 @@ object Curation {
     // discipline), not a per-call localCheckpoint: the r16 form
     // checkpointed per invocation with no release, accumulating pinned
     // blocks across a long session (r16 ADVICE item 3) — the cache
-    // releases on [[invalidateCurate]] like every other kept artifact.
-    val base = keptCache.getOrBuild(spark, (dir, "card_base"))(
+    // releases it on invalidation like every other kept artifact.
+    val base = keptCache.getOrBuild(spark, dir, "card_base")(
       graft.Materialize.session(spark)(
         Tables(spark, dir, "documents")
           .select(col("lang"), col("source"),
@@ -1468,7 +1434,7 @@ object Curation {
     * read (the gate_report discipline, one level lower).
     */
   private def gateCols(spark: SparkSession, dir: String): DataFrame =
-    keptCache.getOrBuild(spark, (dir, "gate_cols"))(
+    keptCache.getOrBuild(spark, dir, "gate_cols")(
       graft.Materialize.session(spark) {
         val d = Tables(spark, dir, "documents").select("doc_id", "source")
         val q = TextOps.qualityScore(spark, dir)

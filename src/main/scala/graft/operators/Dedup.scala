@@ -97,14 +97,17 @@ object Dedup {
     * tables, simhash the same shingles, and a real pipeline keeps these
     * as its persistent index rather than re-deriving them per pass. One
     * persisted table per (session, dir, kind); entries live until
-    * [[invalidateIndex]] (same lifetime contract as Apriori's cache —
-    * callers that rewrite parquet under a cached dir or cycle sessions
-    * invalidate at the boundary). The `…Of` forms stay cache-free: they
-    * take arbitrary DataFrames, so identity-keyed caching would leak.
+    * [[graft.SessionCache.invalidate]] (same lifetime contract as
+    * Apriori's cache — callers that rewrite parquet under a cached dir
+    * or cycle sessions invalidate at the boundary, and
+    * [[graft.Materialize.release]] reclaims whatever the session's
+    * `graft.materialize` strategy allocated — checkpoint blocks
+    * unpersisted, reliable checkpoint FILES deleted). The `…Of` forms
+    * stay cache-free: they take arbitrary DataFrames, so identity-keyed
+    * caching would leak.
     */
   private val indexCache =
-    new graft.SessionCache[(String, String), DataFrame](
-      graft.Materialize.release)
+    new graft.SessionCache[DataFrame](graft.Materialize.release)
 
   private def cachedIdx(spark: SparkSession, dir: String, kind: String,
       widen: Boolean = false)(
@@ -125,21 +128,10 @@ object Dedup {
     // (minhash/ngram candidate maps are trivial per row; 32 tasks of
     // scheduling overhead beat 1 task of work) and 2x POSITIVE on bow
     // — see [[graft.Materialize.widened]].
-    indexCache.getOrBuild(spark, (dir, kind))(
+    indexCache.getOrBuild(spark, dir, kind)(
       if (widen)
         graft.Materialize.widened(graft.Materialize.session(spark))(build)
       else graft.Materialize.session(spark)(build))
-
-  /** Drop cached dedup indexes (a (session, dir) pair, a whole session
-    * with `dir = null`, or everything). [[graft.Materialize.release]]
-    * runs per dropped entry and reclaims whatever the session's
-    * `graft.materialize` strategy allocated — checkpoint blocks
-    * unpersisted, reliable checkpoint FILES deleted, persist entries
-    * dropped. After invalidation, the next query rebuilds from the
-    * current parquet state.
-    */
-  def invalidateIndex(spark: SparkSession = null, dir: String = null): Unit =
-    indexCache.invalidate(spark, k => dir == null || k._1 == dir)
 
   private def sh3(spark: SparkSession, dir: String): DataFrame =
     cachedIdx(spark, dir, "sh3")(
@@ -817,10 +809,10 @@ object Dedup {
     * corpus-scale table and one extra materialization job): the
     * loop's own final-round checkpoint IS the cached copy (its
     * rename projection is transparent to [[Materialize.release]], so
-    * [[invalidateIndex]] reclaims it like any other entry).
+    * invalidation reclaims it like any other entry).
     */
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    indexCache.getOrBuild(spark, (dir, "clusters"))(
+    indexCache.getOrBuild(spark, dir, "clusters")(
       clustersOf(minhashLsh(spark, dir),
         Materialize.session(spark)))
 

@@ -116,24 +116,16 @@ object Dsir {
     * rank — the honest per-query remainder. The `…Of` forms stay
     * cache-free (arbitrary-DataFrame inputs; identity-keyed caching
     * would leak). Boundary contract: callers that rewrite parquet
-    * under a cached dir call
-    * [[graft.operators.Curation.invalidateCurate]] — the survivors
-    * here derive from its kept set, and that hook CASCADES here, so
-    * both layers refresh together. [[invalidateDsir]] alone only
-    * drops the derived tables (they would rebuild against a stale
-    * kept set after a corpus rewrite).
+    * under a cached dir call [[graft.SessionCache.invalidate]] — the
+    * survivors here derive from [[Curation]]'s kept set under the same
+    * dir, so both layers refresh together.
     */
   private val cache =
-    new graft.SessionCache[(String, String), DataFrame](
-      graft.Materialize.release)
-
-  def invalidateDsir(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    cache.invalidate(spark, k => dir == null || k._1 == dir)
+    new graft.SessionCache[DataFrame](graft.Materialize.release)
 
   private def cachedStrictDocs(spark: SparkSession, dir: String)
       : DataFrame =
-    cache.getOrBuild(spark, (dir, "strict"))(
+    cache.getOrBuild(spark, dir, "strict")(
       graft.Materialize.widened(graft.Materialize.session(spark))(
         Tables(spark, dir, "documents")
           .join(Curation.curateStrict(spark, dir).select("doc_id"),
@@ -141,7 +133,7 @@ object Dsir {
 
   private def cachedRatios(spark: SparkSession, dir: String,
       kind: String, docs: => DataFrame): DataFrame =
-    cache.getOrBuild(spark, (dir, "ratios_" + kind))(
+    cache.getOrBuild(spark, dir, "ratios_" + kind)(
       graft.Materialize.session(spark)(bucketRatios(docs)))
 
   /** Per-document importance weights over the WHOLE raw pool:

@@ -51,55 +51,41 @@ object Graph {
   /** How many top-ranked parts [[pagerank]] reports. */
   val PrTopK = 20
 
-  /** Session-lifetime edge-table cache: ONE eager checkpoint of the
-    * co-purchase edges per (session, dir) — all three graph entries
-    * (and every bench rep) read it instead of re-deriving the baskets
-    * from lineitem per invocation. get + putIfAbsent, not
-    * computeIfAbsent (the [[Apriori]]/[[Dedup]] cache rationale: never
-    * hold a map bin lock through a Spark job; a lost race rebuilds a
-    * deterministic table once). Callers that rewrite the parquet under
-    * a cached path or cycle sessions call [[invalidateEdges]].
+  /** Session-lifetime graph tables per (session, dir, kind), each one
+    * eager checkpoint:
+    *  - `edges`: the co-purchase edges — all three graph entries (and
+    *    every bench rep) read it instead of re-deriving the baskets
+    *    from lineitem per invocation;
+    *  - `members`: the (order, part) membership, the HITS input;
+    *  - `link`: the link-prediction pair-score index ([[linkIndex]]);
+    *  - one CONVERGED rank table per iterative/peel family entry
+    *    (`pr`, `hits`, `components`, `kcore`, `truss`, `distances`,
+    *    `closeness`, `betweenness`, `ppr`, `labelprop`,
+    *    `modularity`). The fixed-point loops are once-per-snapshot
+    *    computations in a real pipeline (ranks are recomputed when
+    *    the graph changes, then SERVED); without this every
+    *    `graph_pagerank` / `graph_hits` call re-ran all O(rounds)
+    *    join+agg jobs against the already-cached edge/membership
+    *    tables. The cached value is the ≤ top-K-row Local-forced
+    *    result whose loop internals were already released by the
+    *    builder, so the entry holds no corpus-scale state.
+    * get + putIfAbsent, not computeIfAbsent (the [[graft.SessionCache]]
+    * rationale: never hold a map bin lock through a Spark job; a lost
+    * race rebuilds a deterministic table once). The `…Of` forms stay
+    * cache-free; [[graft.SessionCache.invalidate]] drops the ranks
+    * together with the inputs they were converged from.
     */
-  private val edgeCache =
-    new graft.SessionCache[String, DataFrame](graft.Materialize.release)
+  private val graphCache =
+    new graft.SessionCache[DataFrame](graft.Materialize.release)
 
   /** Undirected co-purchase edges (a, b, w) with a < b and w = number
     * of distinct orders containing both parts. Served from the session
     * cache; the first call per (session, dir) pays the basket build.
     */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrBuild(spark, dir)(
+    graphCache.getOrBuild(spark, dir, "edges")(
       graft.Materialize.session(spark)(
         edgesOf(Tables(spark, dir, "lineitem"))))
-
-  /** Session-lifetime CONVERGED rank tables per (session, dir, kind) —
-    * one kind per iterative/peel family entry (pagerank, hits,
-    * components, kcore, truss, distances, closeness, betweenness, ppr,
-    * label-prop, modularity). The fixed-point loops are
-    * once-per-snapshot
-    * computations in a real pipeline (ranks are recomputed when the
-    * graph changes, then SERVED); without this every `graph_pagerank` /
-    * `graph_hits` call re-ran all O(rounds) join+agg jobs against the
-    * already-cached edge/membership tables. The cached value is the
-    * ≤ top-K-row Local-forced result whose loop internals were already
-    * released by the builder, so the entry holds no corpus-scale state.
-    * The `…Of` forms stay cache-free; [[invalidateEdges]] drops these
-    * alongside the inputs they were converged from.
-    */
-  private val rankCache =
-    new graft.SessionCache[(String, String), DataFrame](
-      graft.Materialize.release)
-
-  /** Drop cached edge tables: the given (session, dir) entry, all
-    * entries of a session (`dir = null`), or everything (no args).
-    */
-  def invalidateEdges(spark: SparkSession = null, dir: String = null): Unit = {
-    Seq(edgeCache, memberCache, linkCache).foreach(
-      _.invalidate(spark, k => dir == null || k == dir))
-    kernelCache.invalidate(spark, k => dir == null || k == dir)
-    // ranks were CONVERGED FROM the tables above: stale-together
-    rankCache.invalidate(spark, k => dir == null || k._1 == dir)
-  }
 
   def edgesOf(lineitem: DataFrame): DataFrame =
     lineitem
@@ -212,10 +198,10 @@ object Graph {
   }
 
   /** Session-lifetime checkpointed kernel per (session, dir) — the
-    * [[edges]] cache discipline; released by [[invalidateEdges]].
+    * [[edges]] cache discipline.
     */
   private val kernelCache =
-    new graft.SessionCache[String, TriKernel](k =>
+    new graft.SessionCache[TriKernel](k =>
       Seq(k.deg, k.support, k.triCount)
         .foreach(graft.Materialize.release))
 
@@ -393,7 +379,7 @@ object Graph {
     * The final top-k is a TakeOrderedAndProject, never a global sort.
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "pr"))(
+    graphCache.getOrBuild(spark, dir, "pr")(
       pagerankOf(edges(spark, dir), Materialize.session(spark)))
 
   def pagerankOf(edgesRaw: DataFrame,
@@ -481,7 +467,7 @@ object Graph {
     * when the graph changes, not per query.
     */
   def components(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "components"))(
+    graphCache.getOrBuild(spark, dir, "components")(
       componentsOf(edges(spark, dir),
         Materialize.session(spark)))
 
@@ -537,7 +523,7 @@ object Graph {
     * anything.
     */
   def kcore(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "kcore"))(
+    graphCache.getOrBuild(spark, dir, "kcore")(
       kcoreOf(edges(spark, dir), Materialize.session(spark)))
 
   def kcoreOf(edgesRaw: DataFrame,
@@ -635,7 +621,7 @@ object Graph {
     * exactly as in [[kcoreOf]].
     */
   def truss(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "truss"))(
+    graphCache.getOrBuild(spark, dir, "truss")(
       trussOf(edges(spark, dir), Materialize.session(spark)))
 
   def trussOf(edgesRaw: DataFrame,
@@ -678,7 +664,7 @@ object Graph {
     * ([[pagerank]]); the visited state stays distributed.
     */
   def distances(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "distances"))(
+    graphCache.getOrBuild(spark, dir, "distances")(
       distancesOf(edges(spark, dir), Materialize.session(spark)))
 
   def distancesOf(edgesRaw: DataFrame,
@@ -736,7 +722,7 @@ object Graph {
     * O(V·E) and off the table at 10⁹ nodes).
     */
   def closeness(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "closeness"))(
+    graphCache.getOrBuild(spark, dir, "closeness")(
       closenessOf(edges(spark, dir), Materialize.session(spark)))
 
   def closenessOf(edgesRaw: DataFrame,
@@ -802,7 +788,7 @@ object Graph {
     * distributed, per-round lineage cuts.
     */
   def betweenness(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "betweenness"))(
+    graphCache.getOrBuild(spark, dir, "betweenness")(
       betweennessOf(edges(spark, dir),
         Materialize.session(spark)))
 
@@ -886,7 +872,7 @@ object Graph {
     * driver-loop class with a sparse frontier.
     */
   def ppr(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "ppr"))(
+    graphCache.getOrBuild(spark, dir, "ppr")(
       pprOf(edges(spark, dir), Materialize.session(spark)))
 
   def pprOf(edgesRaw: DataFrame,
@@ -957,7 +943,7 @@ object Graph {
     * per-node state like ranks).
     */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "labelprop"))(
+    graphCache.getOrBuild(spark, dir, "labelprop")(
       labelPropOf(edges(spark, dir), Materialize.session(spark)))
 
   /** The synchronous LPA label table after [[LpIters]] rounds —
@@ -1015,7 +1001,7 @@ object Graph {
     * cross-joined — nothing new shuffles at edge scale.
     */
   def modularity(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "modularity"))(
+    graphCache.getOrBuild(spark, dir, "modularity")(
       modularityOf(edges(spark, dir),
         Materialize.session(spark)))
 
@@ -1062,6 +1048,13 @@ object Graph {
   /** How many top authorities [[hits]] reports. */
   val HitsTopK = 20
 
+  /** The (order, part) membership, the HITS input ([[graphCache]]). */
+  private def members(spark: SparkSession, dir: String): DataFrame =
+    graphCache.getOrBuild(spark, dir, "members")(
+      graft.Materialize.session(spark)(Tables(spark, dir, "lineitem")
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+        .distinct()))
+
   /** HITS (Kleinberg '99) on the BIPARTITE order ↔ part membership
     * graph — hubs are orders, authorities are parts, and the authority
     * vector converges to the principal singular direction of the
@@ -1084,20 +1077,8 @@ object Graph {
     * plus a map-side-combined groupBy — the [[Sgd]] driver-loop shape
     * with two alternating distributed state tables.
     */
-  /** Session-lifetime (order, part) membership cache — the HITS input,
-    * same lifecycle contract as [[edgeCache]].
-    */
-  private val memberCache =
-    new graft.SessionCache[String, DataFrame](graft.Materialize.release)
-
-  private def members(spark: SparkSession, dir: String): DataFrame =
-    memberCache.getOrBuild(spark, dir)(
-      graft.Materialize.session(spark)(Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()))
-
   def hits(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(spark, (dir, "hits"))(
+    graphCache.getOrBuild(spark, dir, "hits")(
       hitsOnMembers(members(spark, dir),
         Materialize.session(spark), ownM = false))
 
@@ -1225,24 +1206,21 @@ object Graph {
     * to top-k via bounded per-partition heaps, never a global sort.
     */
   /** Session-lifetime (ratings, u, v) per (session, dir) — the
-    * [[edgeCache]] discipline: both ALS entries (and every bench rep)
+    * [[graphCache]] discipline: both ALS entries (and every bench rep)
     * read ONE trained model instead of re-running the 2·[[AlsIters]]
     * solve chain per invocation; the final factor tables are
     * checkpointed (|customers| / |parts| rows — tiny) so consumers
     * never re-execute the alternation lineage. get + putIfAbsent, never
     * a map-bin lock through Spark jobs; a lost race releases its extra
-    * checkpoints. [[invalidateAls]] at the fixture-rewrite boundary.
+    * checkpoints.
     */
   private val alsCache = new graft.SessionCache[
-    String, (DataFrame, DataFrame, DataFrame)](v =>
+    (DataFrame, DataFrame, DataFrame)](v =>
       Seq(v._1, v._2, v._3).foreach(Materialize.release))
 
   private def alsModel(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
     alsCache.getOrBuild(spark, dir)(buildAlsModel(spark, dir))
-
-  def invalidateAls(spark: SparkSession = null, dir: String = null): Unit =
-    alsCache.invalidate(spark, k => dir == null || k == dir)
 
   private def buildAlsModel(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1343,16 +1321,9 @@ object Graph {
     * prediction) is a serving-time artifact built once per
     * (session, dir) and probed by every ranking/anti-join pass.
     */
-  private val linkCache =
-    new graft.SessionCache[String, DataFrame](graft.Materialize.release)
-
   private def linkIndex(spark: SparkSession, dir: String): DataFrame =
-    linkCache.getOrBuild(spark, dir)(
+    graphCache.getOrBuild(spark, dir, "link")(
       graft.Materialize.session(spark)(linkIndexOf(edges(spark, dir))))
-
-  def invalidateLinkIndex(spark: SparkSession = null,
-      dir: String = null): Unit =
-    linkCache.invalidate(spark, k => dir == null || k == dir)
 
   private def linkIndexOf(ed: DataFrame): DataFrame = {
     val sym = symOf(ed)

@@ -122,7 +122,7 @@ object Quality {
     * the boundary.
     */
   private val probeCache = new graft.SessionCache[
-    String, (DataFrame, Array[Double])](v => Materialize.release(v._1))
+    (DataFrame, Array[Double])](v => Materialize.release(v._1))
 
   private def trainedProbe(spark: SparkSession, dir: String)
       : (DataFrame, Array[Double]) =
@@ -139,18 +139,6 @@ object Quality {
     */
   private[operators] def probeFeatures(spark: SparkSession, dir: String)
       : DataFrame = trainedProbe(spark, dir)._1
-
-  def invalidateProbe(spark: SparkSession = null, dir: String = null)
-      : Unit = {
-    probeCache.invalidate(spark, k => dir == null || k == dir)
-    trainCache.invalidate(spark, k => dir == null || k._1 == dir)
-    // The released feature checkpoint has no lineage fallback, so every
-    // cache holding a DataFrame DERIVED from it must drop too —
-    // Curation's eval report is the one such dependent (full-suite runs
-    // hit CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on its stale entry before
-    // this cascade existed).
-    Curation.invalidateEval(spark, dir)
-  }
 
   /** Train the probe and score every document:
     * (doc_id, label, score, pred). `pred` = score > 0.5 — the learned
@@ -221,12 +209,10 @@ object Quality {
     * there is no executor state to release). The key carries the shard
     * count like [[graft.operators.Sgd]]'s thetaCache — the `id % P`
     * fold layout is part of the model's semantics, so a
-    * `graft.sgd.numPartitions` conf change trains fresh. Dropped by
-    * [[invalidateProbe]] with the rest of the per-dir model state; the
-    * `…Of` form stays cache-free.
+    * `graft.sgd.numPartitions` conf change trains fresh. The `…Of`
+    * form stays cache-free.
     */
-  private val trainCache =
-    new graft.SessionCache[(String, Int), DataFrame](_ => ())
+  private val trainCache = new graft.SessionCache[DataFrame](_ => ())
 
   /** Train the reference-shaped SGD logistic classifier on the corpus
     * and report the run: ONE summary row (n_docs, n_features,
@@ -238,7 +224,7 @@ object Quality {
     * predictor's error profile. Served from [[trainCache]].
     */
   def qualityTrain(spark: SparkSession, dir: String): DataFrame =
-    trainCache.getOrBuild(spark, (dir, Sgd.numPartsOr(spark, TrainShards)))(
+    trainCache.getOrBuild(spark, dir, Sgd.numPartsOr(spark, TrainShards))(
       qualityTrainOf(docs(spark, dir)))
 
   /** Deterministic negative-class oversampling factor for the SGD

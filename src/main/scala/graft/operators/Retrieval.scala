@@ -101,23 +101,17 @@ object Retrieval {
     * eleven fixture entries re-derived `tf` per invocation —
     * `llm_eval_rankers` alone built it five times per call (qrels +
     * two scorers + the fusion's two). The `…Of` forms stay cache-free
-    * (arbitrary corpora); [[invalidateRetrievalIndex]] at the
-    * fixture-rewrite boundary.
+    * (arbitrary corpora).
     */
   private val idxCache =
-    new graft.SessionCache[(String, String), DataFrame](
-      graft.Materialize.release)
-
-  def invalidateRetrievalIndex(spark: SparkSession = null,
-      dir: String = null): Unit =
-    idxCache.invalidate(spark, k => dir == null || k._1 == dir)
+    new graft.SessionCache[DataFrame](graft.Materialize.release)
 
   private def tfIdx(spark: SparkSession, dir: String): DataFrame =
-    idxCache.getOrBuild(spark, (dir, "tf"))(
+    idxCache.getOrBuild(spark, dir, "tf")(
       graft.Materialize.session(spark)(tfOf(docs(spark, dir))))
 
   private def dlIdx(spark: SparkSession, dir: String): DataFrame =
-    idxCache.getOrBuild(spark, (dir, "dl"))(
+    idxCache.getOrBuild(spark, dir, "dl")(
       graft.Materialize.session(spark)(dlOf(docs(spark, dir))))
 
   /** Inverted-index posting heads: one row per term with its document

@@ -278,19 +278,13 @@ object Sgd {
     * deterministic semantics (a different `graft.sgd.numPartitions`
     * conf is a different model, not the same model re-planned), so a
     * conf change mid-session trains fresh instead of serving a stale
-    * layout's θ. The `fit` API itself stays cache-free;
-    * [[invalidateTheta]] at the (session, dir) boundary.
+    * layout's θ. The `fit` API itself stays cache-free.
     */
-  private val thetaCache =
-    new graft.SessionCache[(String, Boolean, Int), DataFrame](_ => ())
-
-  def invalidateTheta(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    thetaCache.invalidate(spark, k => dir == null || k._1 == dir)
+  private val thetaCache = new graft.SessionCache[DataFrame](_ => ())
 
   private def thetaDf(spark: SparkSession, dir: String, logistic: Boolean)
       : DataFrame = thetaCache.getOrBuild(
-      spark, (dir, logistic, numParts(spark))) {
+      spark, dir, (logistic, numParts(spark))) {
     val s = spark; import s.implicits._
     val r = fit(dataset(spark, dir, logistic), 4, logistic, numParts(spark))
     Seq((r.theta(0), r.theta(1), r.theta(2), r.theta(3), r.iterations,

@@ -341,21 +341,17 @@ object Similarity {
     * fixture dirs, or invalidate at the boundary); the cached value is
     * K in-memory vectors, not a DataFrame.
     */
-  private val centsCache = new graft.SessionCache[
-    (String, Int, Int), Array[(Long, Array[Double])]](_ => ())
+  private val centsCache =
+    new graft.SessionCache[Array[(Long, Array[Double])]](_ => ())
 
   private def cachedCents(spark: SparkSession, dir: String, iters: Int)
       : Array[(Long, Array[Double])] = {
     // K is a session-conf knob; keying the cache on it means flipping
     // the conf mid-session retrains rather than serving a stale size
     val k = graft.Conf.int(spark, NumCentroidsConf, NumCentroids)
-    centsCache.getOrBuild(spark, (dir, iters, k))(
+    centsCache.getOrBuild(spark, dir, (iters, k))(
       kmeansCentroids(emb(spark, dir), iters, k))
   }
-
-  def invalidateCentroids(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    centsCache.invalidate(spark, k => dir == null || k._1 == dir)
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame =
     ivfTopKWith(emb(spark, dir), nq(spark),
@@ -720,7 +716,7 @@ object Similarity {
     * without the cache each invocation re-quantized and re-scored the
     * whole corpus (the r10 MMR residual: ~2 s of shortlist corpus pass
     * per call). Same lifetime contract as [[centsCache]] (immutable
-    * fixture dirs, [[invalidateInt8]] at the boundary); get/putIfAbsent
+    * fixture dirs, or invalidate at the boundary); get/putIfAbsent
     * so no map lock spans the build, a lost race releases its extra
     * checkpoints.
     */
@@ -728,7 +724,7 @@ object Similarity {
       pool: DataFrame)
 
   private val int8Cache =
-    new graft.SessionCache[(String, Long), Int8Index](idx => {
+    new graft.SessionCache[Int8Index](idx => {
       graft.Materialize.release(idx.pool)
       graft.Materialize.release(idx.scored)
       graft.Materialize.release(idx.quant)
@@ -736,7 +732,7 @@ object Similarity {
 
   private def cachedInt8(spark: SparkSession, dir: String): Int8Index = {
     val n = nq(spark)
-    int8Cache.getOrBuild(spark, (dir, n)) {
+    int8Cache.getOrBuild(spark, dir, n) {
       val mat = graft.Materialize.session(spark)
       val quant = mat(quantDf(
         Tables(spark, dir, "embeddings")
@@ -746,10 +742,6 @@ object Similarity {
       Int8Index(quant, scored, pool)
     }
   }
-
-  def invalidateInt8(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    int8Cache.invalidate(spark, k => dir == null || k._1 == dir)
 
   private def int8RankCut(scored: DataFrame): DataFrame =
     scored
@@ -1110,8 +1102,8 @@ object Similarity {
     * is a driver loop at plan-build time; the cached value is
     * [[PqSubspaces]]·[[PqCodes]] short vectors.
     */
-  private val pqCache = new graft.SessionCache[
-    String, Array[Array[(Long, Array[Double])]]](_ => ())
+  private val pqCache =
+    new graft.SessionCache[Array[Array[(Long, Array[Double])]]](_ => ())
 
   private def cachedCodebook(spark: SparkSession, dir: String)
       : Array[Array[(Long, Array[Double])]] =
@@ -1130,10 +1122,6 @@ object Similarity {
     */
   def pqCodebook(spark: SparkSession, dir: String)
       : Array[Array[(Long, Array[Double])]] = cachedCodebook(spark, dir)
-
-  def invalidatePq(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    pqCache.invalidate(spark, k => dir == null || k == dir)
 
   /** PQ-ADC top-k: every corpus vector is encoded (per subspace, the
     * nearest sub-centroid) and scored against the full-precision query
@@ -1204,16 +1192,12 @@ object Similarity {
   val PcaIters = 8
 
   /** Session-cached (mean, first principal direction) per corpus. */
-  private val pcaCache = new graft.SessionCache[
-    String, (Array[Double], Array[Double])](_ => ())
+  private val pcaCache =
+    new graft.SessionCache[(Array[Double], Array[Double])](_ => ())
 
   private def cachedPca(spark: SparkSession, dir: String)
       : (Array[Double], Array[Double]) =
     pcaCache.getOrBuild(spark, dir)(pcaOf(emb(spark, dir)))
-
-  def invalidatePca(spark: SparkSession = null, dir: String = null)
-      : Unit =
-    pcaCache.invalidate(spark, k => dir == null || k == dir)
 
   /** Trains the first principal component of any (id, e) corpus:
     * DECIMAL-stable per-dim mean, DECIMAL-stable 64×64 covariance

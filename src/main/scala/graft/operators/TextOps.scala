@@ -1372,14 +1372,8 @@ object TextOps {
     * get + putIfAbsent, not computeIfAbsent (never hold a map bin lock
     * through the training loop's Spark jobs).
     */
-  private val bpeCache = new graft.SessionCache[
-    String, Seq[(Long, String, String, String, Long)]](_ => ())
-
-  /** Drop cached merge tables — the [[graft.operators.Graph.invalidateEdges]]
-    * discipline for callers that rewrite the corpus under a cached dir.
-    */
-  def invalidateBpe(spark: SparkSession = null, dir: String = null): Unit =
-    bpeCache.invalidate(spark, k => dir == null || k == dir)
+  private val bpeCache =
+    new graft.SessionCache[Seq[(Long, String, String, String, Long)]](_ => ())
 
   private def learnedMergeRows(spark: SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] =

@@ -171,7 +171,7 @@ object TextSources {
     * instead of reading a half-written directory. Callers that rewrite
     * the SOURCE tables under a cached dir mid-session invalidate via
     * [[invalidateScratch]] (the cache-invalidation discipline of
-    * [[graft.operators.Graph.invalidateEdges]]).
+    * [[graft.SessionCache.invalidate]]).
     *
     * The marker is a completion LATCH, not a pre-write boolean: a
     * second caller racing the first write awaits the latch instead of

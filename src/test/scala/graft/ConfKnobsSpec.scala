@@ -101,7 +101,7 @@ class ConfKnobsSpec extends SparkSpecBase {
     // reliable checkpoint instead of a localCheckpoint, with identical
     // values. A fresh newSession isolates the flipped caches (the
     // SessionCache key dimension), and the reliable files are released
-    // by the ordinary invalidate hooks.
+    // by the ordinary SessionCache.invalidate.
     val ckDir =
       java.nio.file.Files.createTempDirectory("graft-ck-conf").toString
     // the checkpoint dir is SHARED SparkContext state: remember what
@@ -129,12 +129,11 @@ class ConfKnobsSpec extends SparkSpecBase {
         "reliable session produced no reliable checkpoints")
     } finally {
       // drop EVERY cache the two entries populated for the flipped
-      // sessions before deleting their checkpoint files — a retained
+      // session before deleting their checkpoint files — a retained
       // entry over a deleted reliable checkpoint fails its next read.
       // (Suites that use .checkpoint() set their own dir first —
       // SparkSpecBase shares one context — so deleting ours is safe.)
-      operators.Dedup.invalidateIndex(rel)
-      operators.Graph.invalidateEdges(rel)
+      SessionCache.invalidate(rel)
       def rm(f: java.io.File): Unit = {
         val kids = f.listFiles()
         if (kids != null) kids.foreach(rm)
@@ -160,14 +159,14 @@ class ConfKnobsSpec extends SparkSpecBase {
     assert(e.getMessage.contains("local|reliable"), e.getMessage)
   }
 
-  test("mid-session conf flip + Materialize.invalidateAll rebuilds under " +
+  test("mid-session conf flip + SessionCache.invalidate rebuilds under " +
     "the new strategy") {
     // the documented graft.materialize caveat: the conf is read at
     // BUILD time, so flipping it mid-session serves artifacts built
-    // under the old strategy — invalidateAll(spark) is the one-call
-    // remedy. Proof: build under local on a fresh session, flip to
-    // reliable, invalidateAll, rebuild → the SAME session now produces
-    // reliable checkpoint files, values unchanged.
+    // under the old strategy — SessionCache.invalidate(spark) is the
+    // one-call remedy. Proof: build under local on a fresh session,
+    // flip to reliable, invalidate, rebuild → the SAME session now
+    // produces reliable checkpoint files, values unchanged.
     val ckDir =
       java.nio.file.Files.createTempDirectory("graft-ck-flip").toString
     val prevCk = spark.sparkContext.getCheckpointDir
@@ -184,14 +183,14 @@ class ConfKnobsSpec extends SparkSpecBase {
       sess.conf.set("graft.materialize", "reliable")
       // flip WITHOUT invalidation serves the old-strategy artifact
       // (documented); the remedy is one call:
-      Materialize.invalidateAll(sess)
+      SessionCache.invalidate(sess)
       val flipped = rows()
       assert(flipped == base, "values must not move under the flip")
       assert(rddDirs().nonEmpty,
-        "post-invalidateAll rebuild did not checkpoint reliably")
+        "post-invalidate rebuild did not checkpoint reliably")
     } finally {
       sess.conf.unset("graft.materialize")
-      Materialize.invalidateAll(sess)
+      SessionCache.invalidate(sess)
       def rm(f: java.io.File): Unit = {
         val kids = f.listFiles()
         if (kids != null) kids.foreach(rm)

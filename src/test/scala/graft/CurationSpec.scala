@@ -171,10 +171,10 @@ class CurationSpec extends SparkSpecBase {
     val b = Curation.curateStrict(spark, Sf)
     assert(leaves(a).nonEmpty && leaves(a) == leaves(b),
       "repeated calls did not reuse the cached kept set")
-    Curation.invalidateCurate(spark, Sf)
+    SessionCache.invalidate(spark, Sf)
     val c = Curation.curateStrict(spark, Sf)
     assert((leaves(c) intersect leaves(a)).isEmpty,
-      "invalidateCurate left the old checkpoint in the plan")
+      "invalidate left the old checkpoint in the plan")
     assert(ids(c) == first, "rebuilt kept set diverged")
   }
 

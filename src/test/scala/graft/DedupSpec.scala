@@ -303,52 +303,26 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("index cache invalidation: rebuilt entries reproduce the answer") {
-    val before = Dedup.minhashLsh(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
-    Dedup.invalidateIndex(spark, Sf)
-    val after = Dedup.minhashLsh(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
-    assert(after == before)
-    graft.operators.Apriori.invalidateSupports(spark, Sf)
-    assert(graft.operators.Apriori.freqItemsets(spark, Sf).count() > 0)
-    // the drift + probe caches share the same boundary contract
-    val drift = graft.operators.Curation.bpeDrift(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("step"), r.getAs[Boolean]("same"))).toSet
-    graft.operators.Curation.invalidateDrift(spark, Sf)
-    val drift2 = graft.operators.Curation.bpeDrift(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("step"), r.getAs[Boolean]("same"))).toSet
-    assert(drift2 == drift)
-    val probe = graft.operators.Quality.qualityProbe(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("pred"))).toSet
-    graft.operators.Quality.invalidateProbe(spark, Sf)
-    val probe2 = graft.operators.Quality.qualityProbe(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("pred"))).toSet
-    assert(probe2 == probe)
-    val ivf = graft.operators.Similarity.ivfTopK(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    graft.operators.Similarity.invalidateCentroids(spark, Sf)
-    val ivf2 = graft.operators.Similarity.ivfTopK(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    assert(ivf2 == ivf)
-    // the int8 serving index (quant + scored pairs + MMR pool) rebuilds
-    // through the same boundary — released checkpoints must not leave a
-    // consumer reading freed blocks
-    val mmr = graft.operators.Similarity.mmrTopK(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("step"),
-        r.getAs[Long]("neighbor_id"))).toSet
-    graft.operators.Similarity.invalidateInt8(spark, Sf)
-    val mmr2 = graft.operators.Similarity.mmrTopK(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("step"),
-        r.getAs[Long]("neighbor_id"))).toSet
-    assert(mmr2 == mmr)
-    val cov = graft.operators.Curation.coverageSelect(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("step"), r.getAs[Long]("doc_id"),
-        r.getAs[Long]("gain"))).toSet
-    graft.operators.Curation.invalidateCoverage(spark, Sf)
-    val cov2 = graft.operators.Curation.coverageSelect(spark, Sf).collect()
-      .map(r => (r.getAs[Long]("step"), r.getAs[Long]("doc_id"),
-        r.getAs[Long]("gain"))).toSet
-    assert(cov2 == cov)
+    import graft.operators.{Apriori, Curation, Quality, Similarity}
+    // one answer per cache family the dir's entries fill: the dedup
+    // bands, the apriori baskets/supports, the drift report, the probe,
+    // the IVF centroids, the int8 serving index (quant + scored pairs +
+    // MMR pool) and the coverage incidence — one dir-scoped call drops
+    // them all, and every rebuilt entry reproduces its answer (released
+    // checkpoints must not leave a consumer reading freed blocks)
+    def answers(): Seq[Set[Seq[Any]]] = Seq(
+      Dedup.minhashLsh(spark, Sf), Apriori.freqItemsets(spark, Sf),
+      Curation.bpeDrift(spark, Sf).select("step", "same"),
+      Quality.qualityProbe(spark, Sf).select("doc_id", "pred"),
+      Similarity.ivfTopK(spark, Sf).select("query_id", "neighbor_id"),
+      Similarity.mmrTopK(spark, Sf)
+        .select("query_id", "step", "neighbor_id"),
+      Curation.coverageSelect(spark, Sf).select("step", "doc_id", "gain")
+    ).map(_.collect().map(_.toSeq).toSet)
+    val before = answers()
+    assert(before.forall(_.nonEmpty))
+    SessionCache.invalidate(spark, Sf)
+    assert(answers() == before)
   }
 
   test("Materialize.None reproduces the Local minhash output") {

@@ -179,6 +179,43 @@ class DotProductSpec extends SparkSpecBase {
     }
   }
 
+  test("graft_token_count rejects a delimiter that is not a one-" +
+    "character string literal at analysis") {
+    // analysis only, never executed: an empty delimiter would loop
+    // forever in the count, and a longer one would count overlapping
+    // matches
+    val s = spark; import s.implicits._
+    val df = Seq(("aaa", "a")).toDF("text", "d")
+    df.selectExpr("graft_token_count(text, ' ') AS n") // the accepted shape
+    Seq("''", "'aa'", "d", "CAST(NULL AS STRING)").foreach { d =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.selectExpr(s"graft_token_count(text, $d) AS n"))
+      assert(e.getMessage.contains("graft_token_count"), e.getMessage)
+    }
+  }
+
+  test("extension-registered functions check their argument count") {
+    // a fresh session sees only the GraftExtensions registrations (the
+    // per-session register calls above replace them on `spark`)
+    val fresh = spark.newSession()
+    val df = fresh.sql("SELECT array(1.0D) AS a, 0.5D AS score, 7L AS id, " +
+      "'a b' AS text")
+    def messages(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    Seq(
+      "graft_dot" -> Seq("a", "a, a, a"),
+      "graft_topk" -> Seq("score, id", "score, id, 2, 3"),
+      "graft_token_count" -> Seq("text", "text, ' ', ' '"),
+      "graft_shingles" -> Seq("text", "text, 2, 3")
+    ).foreach { case (fn, argss) =>
+      argss.foreach { args =>
+        val msgs = messages(intercept[Exception](
+          df.selectExpr(s"$fn($args) AS r")))
+        assert(msgs.contains(s"$fn expects"), s"$fn($args): $msgs")
+      }
+    }
+  }
+
   /** `graft_topk` over (score, id) rows with the given SQL arguments. */
   private def topk(args: String): Unit = {
     val s = spark; import s.implicits._

@@ -101,16 +101,17 @@ class DsirSpec extends SparkSpecBase {
     assert(leaves(a).nonEmpty && (leaves(a) intersect leaves(b)).nonEmpty,
       "repeated calls did not reuse the cached DSIR index")
     assert(rows(a) == first)
-    // the boundary hook drops the index; a rebuilt index reproduces
+    // the boundary call drops the index; a rebuilt index reproduces
     // the identical selection
-    Dsir.invalidateDsir(spark, Sf)
+    SessionCache.invalidate(spark, Sf)
     val c = Dsir.curateDsir(spark, Sf)
     assert((leaves(c) intersect leaves(a)).isEmpty,
-      "invalidateDsir left the old checkpoints in the plan")
+      "invalidate left the old checkpoints in the plan")
     assert(rows(c) == first)
   }
 
-  test("invalidateCurate cascades to the DSIR index (stale-together)") {
+  test("one dir invalidate drops the kept set and the DSIR index " +
+    "derived from it together") {
     import org.apache.spark.sql.execution.RDDScanExec
     def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
       df.queryExecution.sparkPlan
@@ -121,13 +122,16 @@ class DsirSpec extends SparkSpecBase {
     val a = Dsir.curateDsir(spark, Sf)
     val before = rows(a)
     val la = leaves(a)
-    // the survivors here DERIVE from curateStrict's kept set: the kept
-    // set's boundary hook must drop the derived tables too, or a
-    // rebuilt gate would silently pair with stale DSIR state
-    graft.operators.Curation.invalidateCurate(spark, Sf)
+    val lk = leaves(graft.operators.Curation.curateStrict(spark, Sf))
+    // the survivors here DERIVE from curateStrict's kept set (another
+    // operator's cache): both must drop on the one call, or a rebuilt
+    // gate would silently pair with stale DSIR state
+    SessionCache.invalidate(spark, Sf)
     val b = Dsir.curateDsir(spark, Sf)
     assert((leaves(b) intersect la).isEmpty,
-      "invalidateCurate left the derived DSIR checkpoints cached")
+      "invalidate left the derived DSIR checkpoints cached")
+    assert((leaves(graft.operators.Curation.curateStrict(spark, Sf))
+      intersect lk).isEmpty, "invalidate left the kept set cached")
     assert(rows(b) == before)
   }
 }

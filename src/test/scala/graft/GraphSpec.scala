@@ -772,12 +772,12 @@ class GraphSpec extends SparkSpecBase {
         s"repeated $nm calls re-ran the converged loop/peel")
     }
     val first = prRows(pr)
-    // the boundary hook drops the converged ranks WITH their inputs;
+    // the boundary call drops the converged ranks WITH their inputs;
     // a rebuilt fixed-point reproduces the identical table
-    Graph.invalidateEdges(spark, Sf)
+    SessionCache.invalidate(spark, Sf)
     val rebuilt = Graph.pagerank(spark, Sf)
     assert(!(rebuilt eq pr) && (leaves(rebuilt) intersect leaves(pr)).isEmpty,
-      "invalidateEdges left the converged rank checkpoint cached")
+      "invalidate left the converged rank checkpoint cached")
     assert(prRows(rebuilt) == first)
   }
 }

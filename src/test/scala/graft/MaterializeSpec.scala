@@ -128,7 +128,7 @@ class MaterializeSpec extends SparkSpecBase {
 
   test("recovering: checkpoint loss invalidates the session's caches " +
     "and rebuilds ONCE; other failures and double loss propagate") {
-    val cache = new SessionCache[String, java.lang.Integer](_ => ())
+    val cache = new SessionCache[java.lang.Integer](_ => ())
     cache.getOrBuild(spark, "k")(42): Unit
     assert(cache.size == 1)
     var calls = 0
@@ -157,7 +157,7 @@ class MaterializeSpec extends SparkSpecBase {
       throw new RuntimeException("Checkpoint block rdd_1_0 not found!")
     })
     assert(n == 2 && Materialize.isCheckpointLoss(e2))
-    cache.invalidate(spark, _ => true)
+    SessionCache.invalidate(spark, "k2")
   }
 
   test("GraftBlockBridge: block-location lookup runs against a live " +

@@ -391,9 +391,9 @@ class QualitySpec extends SparkSpecBase {
     assert(a eq Quality.qualityTrain(spark, Sf),
       "repeated qualityTrain calls re-ran the SGD training pass")
     val rows = a.collect().toSeq
-    Quality.invalidateProbe(spark, Sf)
+    SessionCache.invalidate(spark, Sf)
     val b = Quality.qualityTrain(spark, Sf)
-    assert(!(b eq a), "invalidateProbe left the trained gate cached")
+    assert(!(b eq a), "invalidate left the trained gate cached")
     assert(b.collect().toSeq == rows,
       "a retrained gate diverged from the deterministic fit")
   }

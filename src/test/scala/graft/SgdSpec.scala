@@ -321,9 +321,9 @@ class SgdSpec extends SparkSpecBase {
     try assert(!(Sgd.linregTheta(spark, Sf) eq a),
       "a conf-overridden shard count served the default layout's θ")
     finally spark.conf.unset("graft.sgd.numPartitions")
-    Sgd.invalidateTheta(spark, Sf)
+    SessionCache.invalidate(spark, Sf)
     val b = Sgd.linregTheta(spark, Sf)
-    assert(!(b eq a), "invalidateTheta left the trained model cached")
+    assert(!(b eq a), "invalidate left the trained model cached")
     assert(b.collect().toSeq == rows,
       "a retrained theta diverged from the deterministic fit")
   }

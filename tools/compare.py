@@ -50,13 +50,30 @@ def cell_eq(a, b):
     return a == b
 
 
+def mismatch(got, exp):
+    """None when the canonical frames match, else a one-line reason."""
+    if list(got.columns) != list(exp.columns):
+        return f"columns {list(got.columns)} vs oracle {list(exp.columns)}"
+    if len(got) != len(exp):
+        return f"{len(got)} rows vs oracle {len(exp)}"
+    bad = []
+    gv, ev = got.values.tolist(), exp.values.tolist()
+    for i in range(len(gv)):
+        for j in range(len(got.columns)):
+            if not cell_eq(gv[i][j], ev[i][j]):
+                bad.append((i, got.columns[j], gv[i][j], ev[i][j]))
+    if bad:
+        return f"{len(bad)} cell mismatches, first 3: {bad[:3]}"
+    return None
+
+
 def main():
     sf, out = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    n_pass = n_budget = n_value = 0
     slow = []
     for name, sql in sorted(oracle.items()):
         try:
@@ -67,43 +84,37 @@ def main():
             oracle_sec = time.monotonic() - t0
         except Exception as e:
             print(f"FAIL {name}: {e}")
-            n_fail += 1
+            n_value += 1
             continue
+        reason = mismatch(got, exp)
         if oracle_sec > ORACLE_BUDGET_SEC:
+            # still a FAIL, but say whether the values match, so a slow
+            # oracle reads apart from a wrong answer without a re-run
             slow.append((name, oracle_sec))
             print(f"FAIL {name}: oracle took {oracle_sec:.1f}s "
                   f"(budget {ORACLE_BUDGET_SEC:.0f}s) — rewrite the oracle "
-                  f"SQL; a slow oracle can hang the driver gate")
-            n_fail += 1
+                  f"SQL; a slow oracle can hang the driver gate; "
+                  + ("values match" if reason is None
+                     else f"values differ: {reason}"))
+            if reason is None:
+                n_budget += 1
+            else:
+                n_value += 1
             continue
         if oracle_sec > 1.0:
             print(f"  [oracle {name}: {oracle_sec:.2f}s]")
-        if list(got.columns) != list(exp.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} "
-                  f"vs oracle {list(exp.columns)}")
-            n_fail += 1
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: {len(got)} rows vs oracle {len(exp)}")
-            n_fail += 1
-            continue
-        bad = []
-        gv, ev = got.values.tolist(), exp.values.tolist()
-        for i in range(len(gv)):
-            for j in range(len(got.columns)):
-                if not cell_eq(gv[i][j], ev[i][j]):
-                    bad.append((i, got.columns[j], gv[i][j], ev[i][j]))
-        if bad:
-            print(f"FAIL {name}: {len(bad)} cell mismatches, first 3: "
-                  f"{bad[:3]}")
-            n_fail += 1
-        else:
+        if reason is None:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
+        else:
+            print(f"FAIL {name}: {reason}")
+            n_value += 1
     if slow:
         print(f"== SLOW ORACLES over {ORACLE_BUDGET_SEC:.0f}s budget: "
               + ", ".join(f"{n}={s:.1f}s" for n, s in slow) + " ==")
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    n_fail = n_budget + n_value
+    print(f"== {n_pass} pass, {n_fail} fail ({n_budget} over budget with "
+          f"matching values, {n_value} wrong or failed) ==")
     sys.exit(1 if n_fail else 0)
 
 
