@@ -45,8 +45,9 @@ object FaultProof {
     * [[FaultProofStream]] (streaming recovery).
     *
     * `prefer` (r16): executor ids whose backends should be killed
-    * FIRST — the batch proof passes the block-holding set from
-    * [[org.apache.spark.GraftBlockBridge]], because with 2 executors
+    * FIRST — the batch proof passes the executors holding blocks of
+    * the served entries' cached artifacts
+    * ([[org.apache.spark.GraftBlockBridge]]), because with 2 executors
     * and small build jobs every cached block can land on one JVM, and
     * killing the empty one proves nothing (the serve succeeds directly
     * and the recovery arm never fires — the r16 `local`-mode flake).
@@ -118,7 +119,8 @@ object FaultProof {
     val before = hashes()
 
     // 2. kill one executor JVM of THIS app ([[killOneExecutor]]) —
-    // preferring one that HOLDS cached blocks (GraftBlockBridge): with
+    // preferring one that HOLDS a block of a served entry's cached
+    // artifact (GraftBlockBridge): with
     // 2 executors and small build jobs, all of a localCheckpoint's
     // blocks can land on one JVM, and killing the other proves nothing
     // (observed r16: local-mode serve succeeded directly, rebuilt
@@ -131,10 +133,23 @@ object FaultProof {
     // for the gate to classify (FaultProofStream already wraps its
     // phases for the same reason). A failed kill ships as killed_pid
     // -1 + err + expected_outcome:false.
+    // Only the artifacts' own blocks count: a holder of just some
+    // unrelated persisted RDD (`rdd_38_0`, observed) is no victim — the
+    // serve reads nothing from it, succeeds directly, and the
+    // local-mode recovery arm never fires. The artifacts are the
+    // checkpoint leaves of each entry's plan; the caches are warm, so
+    // building the DataFrames here runs nothing.
     val holding =
-      try org.apache.spark.GraftBlockBridge
-        .executorsHoldingRddBlocks(spark.sparkContext)
-      catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
+      try {
+        val artifacts = entries.flatMap { name =>
+          SparkEntry.queries(name)(spark, sfDir).queryExecution.analyzed
+            .collectLeaves().collect {
+              case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+            }
+        }
+        org.apache.spark.GraftBlockBridge
+          .executorsHoldingRddBlocks(spark.sparkContext, artifacts)
+      } catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
     val (killed, killErr) =
       try { val pid = killOneExecutor(spark, holding); (pid, "") }
       catch { case e: Throwable =>
@@ -167,7 +182,10 @@ object FaultProof {
     val expected = killed > 0 && hashMatch &&
       (if (mode == "reliable") !rebuilt else rebuilt)
     println(s"""{"proof":"faultproof","mode":${jstr(mode)},""" +
-      s""""killed_pid":$killed,"serve_ok":$serveOk,""" +
+      s""""killed_pid":$killed,""" +
+      s""""artifact_holders":""" +
+      s"""[${holding.toSeq.sorted.map(jstr).mkString(",")}],""" +
+      s""""serve_ok":$serveOk,""" +
       s""""hash_match":$hashMatch,"rebuilt":$rebuilt,""" +
       s""""expected_outcome":$expected,""" +
       s""""err":${jstr(if (killErr.nonEmpty) killErr else err)},""" +

@@ -1,5 +1,6 @@
 package org.apache.spark
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.RDDBlockId
 
 /** Block-location bridge for graft's executor-loss fault proof.
@@ -20,14 +21,24 @@ object GraftBlockBridge {
   /** Executor ids (as in the backend's `--executor-id` argv) currently
     * holding at least one block of a persisted/checkpointed RDD of
     * this application; "driver" is excluded (local-mode blocks cannot
-    * be killed out from under the proof anyway).
+    * be killed out from under the proof anyway). A non-empty `lineage`
+    * narrows the count to RDDs in the lineage of those RDDs — the
+    * checkpoints a served query actually reads — so a block of an
+    * unrelated persisted RDD cannot pick the victim.
     */
-  def executorsHoldingRddBlocks(sc: SparkContext): Set[String] = {
+  def executorsHoldingRddBlocks(sc: SparkContext,
+      lineage: Seq[RDD[_]] = Nil): Set[String] = {
     val master = SparkEnv.get.blockManager.master
-    sc.getPersistentRDDs.flatMap { case (rid, rdd) =>
-      (0 until rdd.getNumPartitions).flatMap { p =>
-        master.getLocations(RDDBlockId(rid, p)).map(_.executorId)
-      }
-    }.toSet - "driver"
+    val seen = scala.collection.mutable.Set[Int]()
+    def walk(r: RDD[_]): Unit =
+      if (seen.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+    lineage.foreach(walk)
+    sc.getPersistentRDDs
+      .filter { case (rid, _) => lineage.isEmpty || seen(rid) }
+      .flatMap { case (rid, rdd) =>
+        (0 until rdd.getNumPartitions).flatMap { p =>
+          master.getLocations(RDDBlockId(rid, p)).map(_.executorId)
+        }
+      }.toSet - "driver"
   }
 }

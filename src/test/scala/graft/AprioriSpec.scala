@@ -4,7 +4,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graftspec.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Apriori
 
 /** G1/G3 generator semantics + Apriori pipeline invariants (SURVEY.md
@@ -191,6 +196,42 @@ class AprioriSpec extends SparkSpecBase {
     assert(levels >= 2)
     assert(jobs.get <= levels + 1, s"${jobs.get} jobs over $levels levels")
     assert(queries.get <= 1, s"${queries.get} SQL executions")
+  }
+
+  test("cold build: one lineitem⋈part basket join serves both keyings") {
+    // the sorted and the transaction-order entries share one basket
+    // artifact: after the dir is invalidated, a cold freqItemsets
+    // builds it and freqItemsetsTxOrder reads it, so exactly one SQL
+    // execution joins lineitem to part. Census of every execution's
+    // optimized plan: joins whose one side reads only lineitem and the
+    // other only part
+    def tables(p: LogicalPlan): Set[String] = p.collectLeaves().collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation =>
+          h.location.rootPaths.map(_.getName.stripSuffix(".parquet"))
+        case _ => Nil
+      }
+    }.flatten.toSet
+    val joins = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long)
+          : Unit = joins.addAndGet(qe.optimizedPlan.collect {
+        case j: Join if Set(tables(j.left), tables(j.right)) ==
+            Set(Set("lineitem"), Set("part")) => j
+      }.size): Unit
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    SessionCache.invalidate(spark, Sf)
+    BusDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      Apriori.freqItemsets(spark, Sf).collect(): Unit
+      Apriori.freqItemsetsTxOrder(spark, Sf).collect(): Unit
+      BusDrain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    assert(joins.get == 1, s"${joins.get} lineitem⋈part joins")
   }
 
   test("txorder keying splits one item SET by basket order; sorted merges") {

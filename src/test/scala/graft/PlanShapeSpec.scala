@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import graft.operators.{Apriori, Relational, Similarity, Warehouse}
 
 /** Physical-plan guards (SURVEY.md §5.5): these encode the 100 TB design
@@ -74,6 +78,38 @@ class PlanShapeSpec extends SparkSpecBase {
       gens.foreach(l =>
         assert(l.contains("*("), s"$name Generate not codegen'd:\n$p"))
     }
+  }
+
+  test("apriori warm calls read only session artifacts: seq_pairs " +
+    "scans no parquet and broadcasts no table, txorder enumerates none") {
+    // the first calls build the `seqhist` and `txorder` artifacts; the
+    // second calls' final plans must start at the cached cuts. sf0.01:
+    // at sf0.001 no part reaches SeqMinSupport, and AQE folds the
+    // whole seq_pairs plan to an empty relation
+    object Aqe extends AdaptiveSparkPlanHelper
+    val sf01 = Sf.stripSuffix("sf0.001") + "sf0.01"
+    Apriori.seqPairs(spark, sf01).collect(): Unit
+    Apriori.freqItemsetsTxOrder(spark, Sf).collect(): Unit
+    try {
+      val seq = Apriori.seqPairs(spark, sf01)
+      assert(seq.collect().nonEmpty)
+      val sp = seq.queryExecution.executedPlan
+      assert(Aqe.find(sp)(_.isInstanceOf[BaseJoinExec]).isDefined,
+        s"warm seq_pairs runs no self-join:\n$sp")
+      assert(Aqe.collect(sp) { case s: FileSourceScanExec => s }.isEmpty,
+        s"warm seq_pairs scans parquet:\n$sp")
+      val scannedBroadcasts = Aqe.collect(sp) {
+        case b: BroadcastExchangeExec
+            if Aqe.find(b)(_.isInstanceOf[FileSourceScanExec]).isDefined => b
+      }
+      assert(scannedBroadcasts.isEmpty,
+        s"warm seq_pairs broadcasts a scanned table:\n$sp")
+    } finally SessionCache.invalidate(spark, sf01)
+    val tx = Apriori.freqItemsetsTxOrder(spark, Sf)
+    assert(tx.collect().nonEmpty)
+    val tp = tx.queryExecution.executedPlan
+    assert(Aqe.collect(tp) { case g: GenerateExec => g }.isEmpty,
+      s"warm txorder enumerates subsets:\n$tp")
   }
 
   test("maximal and closed: the drop-one Generate is codegen'd") {
