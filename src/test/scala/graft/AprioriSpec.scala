@@ -4,7 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graftspec.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join,
+  LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
@@ -167,11 +169,13 @@ class AprioriSpec extends SparkSpecBase {
   }
 
   test("level-wise census: one job per level, one SQL execution") {
-    // the baskets are packed once and every level is one RDD job that
-    // returns the next active set: levels 2 … max plus the empty stop
-    // level, then the one SQL execution that cuts the union
-    Apriori.freqItemsetsLevelwise(spark, Sf).count(): Unit // warm caches
+    // the `lw` build packs the baskets once and runs every level as one
+    // RDD job that returns the next active set: levels 2 … max plus the
+    // empty stop level, then the one SQL execution that cuts the union.
+    // A warm call serves the cut and runs no job at all
     val sc = spark.sparkContext
+    SessionCache.invalidate(spark, Sf)
+    Apriori.freqItems(spark, Sf).count(): Unit // rebuild the baskets
     val queries = new AtomicInteger
     val jobs = new AtomicInteger
     val listener = new SparkListener {
@@ -183,19 +187,28 @@ class AprioriSpec extends SparkSpecBase {
         case _ => ()
       }
     }
-    BusDrain(sc)
-    sc.addSparkListener(listener)
-    val out =
+    def census(call: => DataFrame): (DataFrame, Int, Int) = {
+      jobs.set(0); queries.set(0)
+      BusDrain(sc)
+      sc.addSparkListener(listener)
       try {
-        val out = Apriori.freqItemsetsLevelwise(spark, Sf)
+        val out = call
         BusDrain(sc)
-        out
+        (out, jobs.get, queries.get)
       } finally sc.removeSparkListener(listener)
-    val levels = out.collect()
+    }
+    val (cold, coldJobs, coldQueries) =
+      census(Apriori.freqItemsetsLevelwise(spark, Sf))
+    val (warm, warmJobs, _) =
+      census(Apriori.freqItemsetsLevelwise(spark, Sf))
+    val rows = cold.collect()
+    val levels = rows
       .map(_.getAs[String]("itemset").split(" ").length).max
     assert(levels >= 2)
-    assert(jobs.get <= levels + 1, s"${jobs.get} jobs over $levels levels")
-    assert(queries.get <= 1, s"${queries.get} SQL executions")
+    assert(coldJobs <= levels + 1, s"$coldJobs jobs over $levels levels")
+    assert(coldQueries <= 1, s"$coldQueries SQL executions")
+    assert(warmJobs == 0, s"warm lw ran $warmJobs jobs")
+    assert(warm.collect().toSet == rows.toSet)
   }
 
   test("cold build: one lineitem⋈part basket join serves both keyings") {
@@ -232,6 +245,37 @@ class AprioriSpec extends SparkSpecBase {
       BusDrain(sc)
     } finally spark.listenerManager.unregister(listener)
     assert(joins.get == 1, s"${joins.get} lineitem⋈part joins")
+  }
+
+  test("cold build: one graft_subsets enumeration serves the frequent " +
+    "itemsets and the raw candidates") {
+    // the `candidates` artifact counts every sorted subset once, ungated;
+    // `supports` gates it and the raw stream filters it by k. After the
+    // dir is invalidated, a cold freqItemsets followed by candidatesRaw
+    // runs exactly one SQL execution whose optimized plan enumerates
+    // `fitems` through graft_subsets
+    val enumerations = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long)
+          : Unit = if (qe.optimizedPlan.exists {
+        case g: Generate => g.generator.prettyName == "graft_subsets" &&
+          g.generator.references.exists(_.name == "fitems")
+        case _ => false
+      }) enumerations.incrementAndGet(): Unit
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    SessionCache.invalidate(spark, Sf)
+    BusDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      Apriori.freqItemsets(spark, Sf).collect(): Unit
+      Apriori.candidatesRaw(spark, Sf).collect(): Unit
+      BusDrain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    assert(enumerations.get == 1,
+      s"${enumerations.get} graft_subsets enumerations of fitems")
   }
 
   test("txorder keying splits one item SET by basket order; sorted merges") {

@@ -94,7 +94,9 @@ class DotProductSpec extends SparkSpecBase {
         s"$fn Generate not codegen'd:\n$p")
       l.get
     }
-    generateLine(Apriori.candidatesRaw(spark, Sf), "graft_subsets")
+    // the uncached form of the `candidates` build's supportsOf plan
+    generateLine(Apriori.itemsetSupportsOf(Apriori.transactions(spark, Sf)),
+      "graft_subsets")
     generateLine(Apriori.assocRules(spark, Sf), "graft_antecedents")
     // the SQL k form, `graft_subsets(items, k)`, is public: its
     // size-filter → generate → aggregate plan must fuse the same way

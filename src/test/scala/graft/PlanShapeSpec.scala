@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
+  LogicalRDD}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import graft.operators.{Apriori, Relational, Similarity, Warehouse}
 
@@ -82,14 +84,17 @@ class PlanShapeSpec extends SparkSpecBase {
 
   test("apriori warm calls read only session artifacts: seq_pairs " +
     "scans no parquet and broadcasts no table, txorder enumerates none") {
-    // the first calls build the `seqhist` and `txorder` artifacts; the
-    // second calls' final plans must start at the cached cuts. sf0.01:
+    // the first calls build the `seqhist`, `txorder`, `lw` and
+    // `candidates` artifacts; the second calls' final plans must start
+    // at the cached cuts. sf0.01:
     // at sf0.001 no part reaches SeqMinSupport, and AQE folds the
     // whole seq_pairs plan to an empty relation
     object Aqe extends AdaptiveSparkPlanHelper
     val sf01 = Sf.stripSuffix("sf0.001") + "sf0.01"
     Apriori.seqPairs(spark, sf01).collect(): Unit
     Apriori.freqItemsetsTxOrder(spark, Sf).collect(): Unit
+    val lwCold = Apriori.freqItemsetsLevelwise(spark, Sf)
+    Apriori.candidatesRaw(spark, Sf).collect(): Unit
     try {
       val seq = Apriori.seqPairs(spark, sf01)
       assert(seq.collect().nonEmpty)
@@ -110,6 +115,22 @@ class PlanShapeSpec extends SparkSpecBase {
     val tp = tx.queryExecution.executedPlan
     assert(Aqe.collect(tp) { case g: GenerateExec => g }.isEmpty,
       s"warm txorder enumerates subsets:\n$tp")
+    // lw's plan is a scan of a cut on either side; the warm call must
+    // scan the SAME cut, not cut a freshly counted union
+    val lw = Apriori.freqItemsetsLevelwise(spark, Sf)
+    def cutRdds(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd.id }
+    assert(cutRdds(lw).nonEmpty && cutRdds(lw) == cutRdds(lwCold),
+      "warm lw re-ran its levels into a new cut")
+    Seq("lw" -> lw, "candidates_raw" -> Apriori.candidatesRaw(spark, Sf))
+      .foreach { case (name, df) =>
+        assert(df.collect().nonEmpty)
+        val p = df.queryExecution.executedPlan
+        assert(Aqe.collect(p) { case g: GenerateExec => g }.isEmpty,
+          s"warm $name enumerates subsets:\n$p")
+        assert(Aqe.collect(p) { case e: ShuffleExchangeExec => e }.isEmpty,
+          s"warm $name shuffles:\n$p")
+      }
   }
 
   test("maximal and closed: the drop-one Generate is codegen'd") {
