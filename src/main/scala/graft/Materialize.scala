@@ -18,12 +18,11 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
 
   /** A materialization point: given the DataFrame to cut, return the
-    * DataFrame consumers should read from. Contract for every strategy
-    * except [[None]]: the cut materializes EAGERLY (before it returns)
-    * and TRUNCATES lineage (the returned plan's root is the
-    * materialized table). Cached builds rely on both: they release staged
-    * inputs right after deriving from them, and the iterative forms
-    * cut every round.
+    * DataFrame consumers should read from. Contract for every strategy:
+    * the cut materializes EAGERLY (before it returns) and TRUNCATES
+    * lineage (the returned plan's root is the materialized table).
+    * Cached builds rely on both: they release staged inputs right after
+    * deriving from them, and the iterative forms cut every round.
     */
   type Strategy = DataFrame => DataFrame
 
@@ -46,26 +45,6 @@ object Materialize {
     */
   val Reliable: Strategy = _.checkpoint()
 
-  /** No cut at all (consumers recompute) — for single-consumer plans. */
-  val None: Strategy = identity
-
-  /** Dispatch SENTINEL for operator strategy seams meaning "serve the
-    * SESSION-CACHED artifact" (the [[graft.operators.Curation]]
-    * cached-vs-caller-owned branch). Seam sites compare with `eq`
-    * against THIS singleton instead of re-reading the conf via
-    * `mat eq session(spark)` — the conf re-read made dispatch depend
-    * on conf-flip TIMING (a caller holding the previous session
-    * strategy silently rerouted into a full caller-owned recompute
-    * after a mid-session flip) and made any deployment-custom
-    * strategy unable to ever reach the cached branch on purpose.
-    * If actually APPLIED as a strategy (passed somewhere that cuts
-    * with it rather than dispatching on it — an iterative `…Of` form
-    * cuts every round with it), it resolves to the input's own
-    * session-conf strategy on each application; both conf values
-    * truncate, so that is sound per round too.
-    */
-  val Session: Strategy = df => session(df.sparkSession)(df)
-
   /** The deployment-selected strategy for SESSION-CACHED artifacts
     * (serving indexes, converged fixed-points, kept sets, trained θ)
     * and the iterative operators' per-round cuts, read from the session
@@ -77,9 +56,8 @@ object Materialize {
     * to `reliable` (with `sparkContext.setCheckpointDir` pointing at a
     * DFS path) so cached state survives executor loss — a conf flip,
     * not a code edit. Any other value fails here, at the first build
-    * that reads it. Returns the singleton strategies, so seam code may
-    * compare with `eq` (the [[graft.operators.Curation]] cached-vs-owned
-    * branch). Read at BUILD time: flipping the conf mid-session does
+    * that reads it. Returns the singleton strategies (compare with
+    * `eq`). Read at BUILD time: flipping the conf mid-session does
     * not migrate artifacts already cached under the previous strategy
     * (they are value-identical either way; call
     * [[SessionCache.invalidate]] to rebuild under the new one).
@@ -205,13 +183,12 @@ object Materialize {
     *
     * Deliberately releases ONLY the table it is handed: it matches the
     * plan root (through aliases/`toDF`/pure-rename projections), never
-    * walking into
-    * leaves, because a lineage-retaining plan (persisted or [[None]]
-    * output derived from checkpointed inputs) legitimately contains upstream
-    * `LogicalRDD` leaves this call does not own — e.g. the session dedup
-    * index — and unpersisting a localCheckpoint someone else still reads
-    * is unrecoverable (no lineage fallback). Safe on [[None]] output
-    * (both paths no-op).
+    * walking into leaves, because a lineage-retaining plan (a persisted
+    * or uncut table derived from checkpointed inputs) legitimately
+    * contains upstream `LogicalRDD` leaves this call does not own — e.g.
+    * the session dedup index — and unpersisting a localCheckpoint
+    * someone else still reads is unrecoverable (no lineage fallback).
+    * Safe on an uncut table (both paths no-op).
     *
     * [[Reliable]] output additionally has its checkpoint FILES deleted:
     * `unpersist` is a no-op for a reliable checkpoint (the data lives
@@ -227,10 +204,8 @@ object Materialize {
     * checkpoint to callers who might release it — either return the
     * cached table verbatim (callers own nothing; nothing to release)
     * or wrap it in a non-trivial projection/filter so release no-ops.
-    * Every in-repo `…Of(mat)` form already follows this: under
-    * `Materialize.None` the caller's input is returned un-cut and
-    * release is documented as caller-side only for tables the call
-    * itself materialized.
+    * The iterative `…Of` forms return a table they cut themselves, so
+    * the caller owns it and may release it.
     */
   def release(ds: org.apache.spark.sql.Dataset[_]): Unit = {
     ds.unpersist(blocking = false)

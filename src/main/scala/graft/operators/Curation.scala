@@ -837,11 +837,10 @@ object Curation {
   def bpeDriftOf(oldCorpus: DataFrame, nextCorpus: DataFrame)
       : DataFrame = {
     val n = TextOps.BpeMerges
-    val cut = graft.Materialize.session(oldCorpus.sparkSession)
-    val a = TextOps.bpeMergesOf(TextOps.wordFreqOf(oldCorpus), n, cut)
+    val a = TextOps.bpeMergesOf(TextOps.wordFreqOf(oldCorpus), n)
       .select(col("step"), col("merged").as("merged_old"),
         col("cnt").as("cnt_old"))
-    val b = TextOps.bpeMergesOf(TextOps.wordFreqOf(nextCorpus), n, cut)
+    val b = TextOps.bpeMergesOf(TextOps.wordFreqOf(nextCorpus), n)
       .select(col("step"), col("merged").as("merged_new"),
         col("cnt").as("cnt_new"))
     a.join(b, Seq("step"), "full_outer")
@@ -944,22 +943,18 @@ object Curation {
     * index.
     */
   def curate(spark: SparkSession, dir: String): DataFrame =
-    keptCache.getOrBuild(spark, dir, "curate")(
-      graft.Materialize.session(spark)(curateUncached(spark, dir)))
-
-  private def curateUncached(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val q = TextOps.qualityScore(spark, dir)
-      .where(col("quality_pass")).select("doc_id")
-    val l = TextOps.langId(spark, dir)
-      .where(col("lang_pred") === "en").select("doc_id")
-    val dup = Dedup.minhashLsh(spark, dir)
-      .select(col("doc_b").as("doc_id")).distinct()
-    docs(spark, dir).select("doc_id")
-      .join(q, "doc_id")
-      .join(l, "doc_id")
-      .join(dup, Seq("doc_id"), "left_anti")
-  }
+    keptCache.getOrBuild(spark, dir, "curate") {
+      val q = TextOps.qualityScore(spark, dir)
+        .where(col("quality_pass")).select("doc_id")
+      val l = TextOps.langId(spark, dir)
+        .where(col("lang_pred") === "en").select("doc_id")
+      val dup = Dedup.minhashLsh(spark, dir)
+        .select(col("doc_b").as("doc_id")).distinct()
+      graft.Materialize.session(spark)(docs(spark, dir).select("doc_id")
+        .join(q, "doc_id")
+        .join(l, "doc_id")
+        .join(dup, Seq("doc_id"), "left_anti"))
+    }
 
   /** Session-lifetime kept-set checkpoints per (session, dir) — the
     * serving-index discipline applied to the gate compositions
@@ -972,10 +967,7 @@ object Curation {
     * strand them, and [[graft.SessionCache.invalidate]] drops them with
     * every other artifact of their dir (including [[Dsir]]'s survivor
     * tables derived from them). The same cache holds the
-    * [[coverageSelect]] incidence and the gate/card reports. The
-    * declarative single-tree composition stays available through the
-    * uncached bodies (PlanShapeSpec pins it via
-    * `pipelineTokensMat(…, None)`).
+    * [[coverageSelect]] incidence and the gate/card reports.
     */
   private val keptCache =
     new graft.SessionCache[DataFrame](graft.Materialize.release)
@@ -991,56 +983,15 @@ object Curation {
     * index.
     */
   def curateStrict(spark: SparkSession, dir: String): DataFrame =
-    keptCache.getOrBuild(spark, dir, "strict")(
+    keptCache.getOrBuild(spark, dir, "strict") {
+      val base = curate(spark, dir)
+      val rep = TextOps.repNgrams(spark, dir)
+        .where(col("rep_pass")).select("doc_id")
+      val clean = Contamination.decontaminate(spark, dir)
+        .where(!col("contaminated")).select("doc_id")
       graft.Materialize.session(spark)(
-        strictGatesOn(curate(spark, dir), spark, dir)))
-
-  /** The repetition + decontamination gates applied to a base kept
-    * set — shared by the cached build (base = the cached [[curate]]
-    * checkpoint) and the strategy seam (base = the declarative
-    * [[curateUncached]] tree).
-    */
-  private def strictGatesOn(base: DataFrame, spark: SparkSession,
-      dir: String): DataFrame = {
-    val rep = TextOps.repNgrams(spark, dir)
-      .where(col("rep_pass")).select("doc_id")
-    val clean = Contamination.decontaminate(spark, dir)
-      .where(!col("contaminated")).select("doc_id")
-    base.join(rep, "doc_id").join(clean, "doc_id")
-  }
-
-  /** Strategy seam for the strict gate ([[pipelineTokensMat]]'s
-    * contract): the [[graft.Materialize.Session]] SENTINEL (what every
-    * fixture entry passes) serves the session-cached kept set; any
-    * OTHER strategy gets a fresh cut of the declarative gate tree that
-    * the CALLER owns (`None` returns the tree itself, so Catalyst sees
-    * every gate; `Local`/`Reliable` cuts the KEPT SET with the
-    * caller's strategy). Dispatch is on the sentinel, NOT on
-    * `mat eq Materialize.session(spark)`: the conf re-read made the
-    * cached-vs-owned branch depend on conf-flip TIMING (a caller
-    * holding the previous session strategy silently rerouted into a
-    * full caller-owned recompute of the strict-gate tree after a
-    * mid-session flip), and a deployment-custom strategy could never
-    * reach the cached branch on purpose. Scope of the claim:
-    * the seam governs the kept-set cut only — the gate INPUTS (dedup
-    * band index, Bloom filter, probe features) ride the dir-keyed
-    * session caches, which are themselves `graft.materialize`-conf
-    * backed (local on one JVM, reliable on a cluster); a deployment
-    * that needs caller-owned inputs composes the `…Of` forms with its
-    * own strategy (the [[graft.operators.Dedup]] cachedIdx contract).
-    */
-  def curateStrictMat(spark: SparkSession, dir: String,
-      mat: graft.Materialize.Strategy): DataFrame =
-    if (mat eq graft.Materialize.Session)
-      // a caller handed a non-None strategy may, by the seam's old
-      // contract, release() what it gets back — so the SHARED cached
-      // kept set ships behind a trivial Filter barrier that
-      // [[graft.Materialize.release]]'s unwrap does not pierce
-      // (Catalyst folds `WHERE true` away at optimization; the
-      // ANALYZED plan, which release walks, keeps it). The ownership
-      // contract on release() names exactly this hazard.
-      curateStrict(spark, dir).where(lit(true))
-    else mat(strictGatesOn(curateUncached(spark, dir), spark, dir))
+        base.join(rep, "doc_id").join(clean, "doc_id"))
+    }
 
   /** The LEARNED corpus gate — the production learn-then-gate loop
     * closed: [[curate]]'s composition with the hand-set quality and
@@ -1247,10 +1198,8 @@ object Curation {
     reportCache.getOrBuild(spark, dir, "eval")(
       evalReport(Quality.probeFeatures(spark, dir)))
 
-  def qualityEvalOf(corpus: DataFrame,
-      mat: graft.Materialize.Strategy = graft.Materialize.Local)
-      : DataFrame =
-    evalReport(mat(Quality.probeFeaturesOf(corpus)))
+  def qualityEvalOf(corpus: DataFrame): DataFrame =
+    evalReport(graft.Materialize.Local(Quality.probeFeaturesOf(corpus)))
 
   private def evalReport(feat: DataFrame): DataFrame = {
     val fs = feat.withColumn("split", splitFromU(splitU(col("doc_id"))))
@@ -1570,47 +1519,30 @@ object Curation {
     * documents the model never sees.
     *
     * The chunk subtree feeds THREE consumers (packing, the vocabulary,
-    * the encode join), so it goes through the module's standard
-    * [[graft.Materialize.Strategy]] seam — the default (the session
-    * conf strategy, [[graft.Materialize.session]]) cuts the gate
-    * family + chunker once instead of re-running them per branch
-    * (the [[Dedup]] rationale); pass [[graft.Materialize.None]] to get
-    * the fully-declarative single tree back.
+    * the encode join), so it is cut once with the session strategy
+    * ([[graft.Materialize.session]]) instead of re-running the gate
+    * family + chunker per branch (the [[Dedup]] rationale); the kept
+    * set is the session-cached [[curateStrict]] checkpoint.
     */
-  def pipelineTokens(spark: SparkSession, dir: String): DataFrame =
-    pipelineTokensMat(spark, dir, graft.Materialize.Session)
-
-  def pipelineTokensMat(spark: SparkSession, dir: String,
-      mat: graft.Materialize.Strategy): DataFrame = {
-    // the kept set follows the SAME strategy as the chunk cut: a None
-    // caller gets the whole pipeline as one declarative tree.
-    // EXCEPT Reliable → a DISK_ONLY persist for these INTERNAL cuts:
-    // this method consumes the handles internally so the caller can
-    // never release() them, and reliable-checkpoint FILES outlive the
-    // ContextCleaner (Materialize.Reliable doc) while persisted blocks
-    // are cache-manager entries the cleaner reclaims on GC — a
-    // Reliable caller would otherwise leak two full-table checkpoint
-    // dirs per invocation for the application lifetime. The cuts are
-    // DAG-shaped (read by three branches, never by a later round), so
-    // the lineage a persist keeps is harmless here.
-    // the Session SENTINEL resolves its concrete cut strategy from the
-    // conf HERE (once, at call time — not identity-compared against a
-    // conf re-read), then rides the same Reliable mapping
-    val resolved = if (mat eq graft.Materialize.Session)
-      graft.Materialize.session(spark) else mat
-    val cutMat: graft.Materialize.Strategy =
-      if (resolved eq graft.Materialize.Reliable)
+  def pipelineTokens(spark: SparkSession, dir: String): DataFrame = {
+    // the session strategy, EXCEPT reliable → a DISK_ONLY persist: this
+    // cut is INTERNAL (no caller can ever release() it), and
+    // reliable-checkpoint FILES outlive the ContextCleaner
+    // (Materialize.Reliable doc) while persisted blocks are
+    // cache-manager entries the cleaner reclaims on GC — a reliable
+    // session would otherwise leak one full-table checkpoint dir per
+    // invocation for the application lifetime. The cut is DAG-shaped
+    // (read by three branches, never by a later round), so the lineage
+    // a persist keeps is harmless here.
+    val session = graft.Materialize.session(spark)
+    val cut: DataFrame => DataFrame =
+      if (session eq graft.Materialize.Reliable)
         _.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      else resolved
-    // the kept set keeps the SENTINEL when that is what the caller
-    // passed — curateStrictMat then serves the session-cached kept set
-    // (the CACHE owns the cut, so the Reliable-leak rationale above
-    // doesn't apply); any other strategy gets the caller-owned cutMat
-    val kept = curateStrictMat(spark, dir,
-      if (mat eq graft.Materialize.Session) mat else cutMat)
+      else session
+    val kept = curateStrict(spark, dir)
     val train = splitAssignOf(docs(spark, dir))
       .where(col("split") === "train").select("doc_id")
-    val chunks = cutMat(chunkOf(docs(spark, dir)
+    val chunks = cut(chunkOf(docs(spark, dir)
       .join(kept, "doc_id").join(train, "doc_id")))
     val packed = packChunksOf(chunks)
     val vocab = TextOps.vocabulary(

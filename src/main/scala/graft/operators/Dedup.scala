@@ -144,22 +144,20 @@ object Dedup {
     cachedIdx(spark, dir, "sh4")(
       docs(spark, dir).select(col("doc_id"), shingles(4).as("s")))
 
-  /** Shingle table of a corpus, materialized once (via `mat`): it feeds
-    * the signature pipeline AND the verify joins — without the cut each
+  /** Shingle table of a corpus, cut once per call: it feeds the
+    * signature pipeline AND the verify joins — without the cut each
     * consumer recomputes tokenize+shingle from the scan.
     */
-  private def shingleTable(corpus: DataFrame,
-                           mat: Materialize.Strategy): DataFrame =
-    mat(corpus.select(col("doc_id"), shingles(3).as("s")))
+  private def shingleTable(corpus: DataFrame): DataFrame =
+    Materialize.Local(corpus.select(col("doc_id"), shingles(3).as("s")))
 
   /** Banded minhash index of a shingle table. Signature + banding in one
     * typed kernel: one md5 per shingle, then [[MinhashFuncs]] cheap
     * splitmix derivations (an interpreted array_min(transform(...)) per
     * hash function is ~5× slower).
     */
-  private def bandTable(sh: DataFrame,
-                        mat: Materialize.Strategy): DataFrame =
-    mat(bandKernel(sh))
+  private def bandTable(sh: DataFrame): DataFrame =
+    Materialize.Local(bandKernel(sh))
 
   private def bandKernel(sh: DataFrame): DataFrame = {
     val s = sh.sparkSession; import s.implicits._
@@ -243,28 +241,25 @@ object Dedup {
   }
 
   /** A corpus's precomputed minhash index: the shingle table and its
-    * banded signature table. Build once ([[buildMinhashIndex]]) with a
-    * durable [[Materialize.Strategy]], then serve every arriving batch
-    * through [[minhashLshAgainstIndex]] — the persistent-lake-index
-    * access pattern an ingestion pipeline actually runs.
+    * banded signature table. Build once ([[buildMinhashIndex]]), then
+    * serve every arriving batch through [[minhashLshAgainstIndex]] —
+    * the persistent-lake-index access pattern an ingestion pipeline
+    * actually runs.
     */
   case class MinhashIndex(sh: DataFrame, bands: DataFrame)
 
-  def buildMinhashIndex(corpus: DataFrame,
-                        mat: Materialize.Strategy = Materialize.Local)
-      : MinhashIndex = {
-    val sh = shingleTable(corpus, mat)
-    MinhashIndex(sh, bandTable(sh, mat))
+  def buildMinhashIndex(corpus: DataFrame): MinhashIndex = {
+    val sh = shingleTable(corpus)
+    MinhashIndex(sh, bandTable(sh))
   }
 
   /** Incremental check of a new batch against a prebuilt corpus index —
     * the index is NOT recomputed per call.
     */
-  def minhashLshAgainstIndex(newDocs: DataFrame, idx: MinhashIndex,
-                             mat: Materialize.Strategy = Materialize.Local)
+  def minhashLshAgainstIndex(newDocs: DataFrame, idx: MinhashIndex)
       : DataFrame = {
-    val shNew = shingleTable(newDocs, mat)
-    minhashAgainstFrom(shNew, bandTable(shNew, mat), idx.sh, idx.bands)
+    val shNew = shingleTable(newDocs)
+    minhashAgainstFrom(shNew, bandTable(shNew), idx.sh, idx.bands)
   }
 
   /** The fixture corpus's session-cached minhash index as a
@@ -276,10 +271,8 @@ object Dedup {
   private[operators] def corpusIndex(spark: SparkSession, dir: String)
       : MinhashIndex = MinhashIndex(sh3(spark, dir), bands3(spark, dir))
 
-  def minhashLshAgainst(newDocs: DataFrame, corpus: DataFrame,
-                        mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame =
-    minhashLshAgainstIndex(newDocs, buildMinhashIndex(corpus, mat), mat)
+  def minhashLshAgainst(newDocs: DataFrame, corpus: DataFrame): DataFrame =
+    minhashLshAgainstIndex(newDocs, buildMinhashIndex(corpus))
 
   /** Fixture entry for [[minhashLshAgainst]]: documents with
     * doc_id ≡ 0 (mod 10) play the arriving batch, the rest the existing
@@ -304,11 +297,9 @@ object Dedup {
     jaccardVerify(cand, sh, sh, "doc_a", "doc_b", JaccardMinhash)
   }
 
-  def minhashLshOf(corpus: DataFrame,
-                   mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame = {
-    val sh = shingleTable(corpus, mat)
-    minhashPairsFrom(sh, bandTable(sh, mat))
+  def minhashLshOf(corpus: DataFrame): DataFrame = {
+    val sh = shingleTable(corpus)
+    minhashPairsFrom(sh, bandTable(sh))
   }
 
   /** Hot-shingle doc-frequency threshold for [[ngramJaccardOf]]'s
@@ -373,11 +364,10 @@ object Dedup {
     coldPairs.union(hotPairs).distinct()
   }
 
-  def ngramJaccardOf(corpus: DataFrame, stopDf: Int = NgramStopDf,
-                     mat: Materialize.Strategy = Materialize.Local)
+  def ngramJaccardOf(corpus: DataFrame, stopDf: Int = NgramStopDf)
       : DataFrame =
     // `sh` feeds the index build + both verify sides
-    ngramJaccardFrom(mat(ngramShingles(corpus)), stopDf)
+    ngramJaccardFrom(Materialize.Local(ngramShingles(corpus)), stopDf)
 
   private def ngramJaccardFrom(sh: DataFrame, stopDf: Int): DataFrame =
     jaccardVerify(ngramCandidates(sh, stopDf), sh, sh,
@@ -401,10 +391,8 @@ object Dedup {
   def ngramJaccardPrefix(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPrefixFrom(sh4(spark, dir))
 
-  def ngramJaccardPrefixOf(corpus: DataFrame,
-                           mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame =
-    ngramJaccardPrefixFrom(mat(ngramShingles(corpus)))
+  def ngramJaccardPrefixOf(corpus: DataFrame): DataFrame =
+    ngramJaccardPrefixFrom(Materialize.Local(ngramShingles(corpus)))
 
   /** [[JaccardNgram]] as the exact rational 7/10. The prefix LENGTH
     * must be computed in integer arithmetic: ⌈τ·|X|⌉ evaluated in IEEE
@@ -475,10 +463,8 @@ object Dedup {
   def containment(spark: SparkSession, dir: String): DataFrame =
     containmentFrom(sh4(spark, dir))
 
-  def containmentOf(corpus: DataFrame,
-                    mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame =
-    containmentFrom(mat(ngramShingles(corpus)))
+  def containmentOf(corpus: DataFrame): DataFrame =
+    containmentFrom(Materialize.Local(ngramShingles(corpus)))
 
   private def containmentFrom(sh: DataFrame): DataFrame = {
     val post = sh.select(col("doc_id").as("db"),
@@ -514,12 +500,10 @@ object Dedup {
     simhashFrom(cachedIdx(spark, dir, "simhash")(
       simhashKernel(sh3(spark, dir))))
 
-  def simhashPairsOf(corpus: DataFrame,
-                     mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame =
+  def simhashPairsOf(corpus: DataFrame): DataFrame =
     // Materialized: the chunk self-join reads the 1-long-per-doc
     // fingerprints instead of recomputing the pipeline on both sides.
-    simhashFrom(mat(simhashKernel(
+    simhashFrom(Materialize.Local(simhashKernel(
       corpus.select(col("doc_id"), shingles(3).as("s")))))
 
   /** (doc_id, sim) fingerprints of a (doc_id, s) shingle table. Bit-vote
@@ -597,12 +581,10 @@ object Dedup {
   }
 
   /** Vector form: any (vec_id, e: ARRAY<DOUBLE>) DataFrame. */
-  def embeddingNearDupOf(emb: DataFrame,
-                         mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame = {
+  def embeddingNearDupOf(emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     embeddingNearDupFrom(emb,
-      mat(Hashing.srpBuckets(spark, emb, SrpTables, SrpBits)))
+      Materialize.Local(Hashing.srpBuckets(spark, emb, SrpTables, SrpBits)))
       // both sides of the bucket self-join read the materialized table
   }
 
@@ -646,8 +628,7 @@ object Dedup {
     semanticOf(Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
 
-  def semanticOf(emb: DataFrame, kmeansIters: Int = 0,
-      mat: Materialize.Strategy = Materialize.Local): DataFrame = {
+  def semanticOf(emb: DataFrame, kmeansIters: Int = 0): DataFrame = {
     val spark = emb.sparkSession
     val s = spark; import s.implicits._
     val cents = Similarity.kmeansCentroids(emb, kmeansIters)
@@ -660,7 +641,7 @@ object Dedup {
       .toDF("vec_id", "cid")
     // both sides of the cluster self-join read the materialized table —
     // without the cut the O(N·K) assignment kernel runs twice
-    val withC = mat(emb.join(assign, "vec_id"))
+    val withC = Materialize.Local(emb.join(assign, "vec_id"))
     withC.as("A").join(withC.as("B"),
         col("A.cid") === col("B.cid")
           && col("A.vec_id") < col("B.vec_id"))
@@ -689,11 +670,9 @@ object Dedup {
     bowFrom(cachedIdx(spark, dir, "bowvecs", widen = true)(
       bowVecKernel(docs(spark, dir))))
 
-  def bowCosineOf(corpus: DataFrame,
-                  mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame =
+  def bowCosineOf(corpus: DataFrame): DataFrame =
     // `vecs` feeds the bucket kernel and both scoring sides
-    bowFrom(mat(bowVecKernel(corpus)))
+    bowFrom(Materialize.Local(bowVecKernel(corpus)))
 
   private[graft] def bowVecKernel(corpus: DataFrame): DataFrame = {
     val s = corpus.sparkSession; import s.implicits._
@@ -740,10 +719,8 @@ object Dedup {
     * deterministic, one anti-join. This is the step a pipeline actually
     * ships: corpus in, smaller corpus out.
     */
-  def applyDedupOf(corpus: DataFrame,
-                   mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame =
-    removeVictims(corpus, minhashLshOf(corpus, mat))
+  def applyDedupOf(corpus: DataFrame): DataFrame =
+    removeVictims(corpus, minhashLshOf(corpus))
 
   /** The one removal policy: anti-join out every doc_b of a pair. */
   private def removeVictims(corpus: DataFrame, pairs: DataFrame): DataFrame =
@@ -766,14 +743,11 @@ object Dedup {
     * changed-label count) — the M5 iterate-to-convergence shape.
     * Output: (doc_id, cluster_id) for every doc in ≥ 1 pair.
     */
-  def clustersOf(pairs: DataFrame,
-                 mat: Materialize.Strategy = Materialize.Local): DataFrame = {
+  def clustersOf(pairs: DataFrame): DataFrame = {
     // an un-cut label table would embed every previous round's plan —
     // lineage doubles per iteration and the convergence count recomputes
-    // the whole history; this loop REQUIRES a real materialization
-    require(mat ne Materialize.None,
-      "clustersOf is iterative; Materialize.None would recompute " +
-        "exponentially growing lineage each round")
+    // the whole history; every round cuts with the session strategy
+    val mat = Materialize.session(pairs.sparkSession)
     val edges = mat(pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .distinct())
@@ -813,8 +787,7 @@ object Dedup {
     */
   def clusters(spark: SparkSession, dir: String): DataFrame =
     indexCache.getOrBuild(spark, dir, "clusters")(
-      clustersOf(minhashLsh(spark, dir),
-        Materialize.session(spark)))
+      clustersOf(minhashLsh(spark, dir)))
 
   /** Cluster-size distribution — the dedup QA report a pipeline records
     * per pass: how many near-dup components of each size exist (pairs

@@ -140,17 +140,19 @@ object Graph {
   private case class TriKernel(ed: DataFrame, deg: DataFrame,
       support: DataFrame, triCount: DataFrame)
 
-  /** `mat` cuts the build at each stage: the cached path passes the
-    * session strategy ([[graft.Materialize.session]]) so `oriented`
+  /** `stageCut` cuts the build at each stage: the cached path passes
+    * the session strategy ([[graft.Materialize.session]]) so `oriented`
     * derives from the CUT deg and `adjOut` from the CUT oriented —
     * cutting all three from one lazy chain instead would compute the
     * degree-join/orientation work twice during the one-time build.
+    * The uncached forms pass `identity`: they read the kernel once,
+    * as one declarative tree ([[supportOf]] runs inside every truss
+    * round, whose own cut materializes it).
     */
   private def triKernelOf(edgesRaw: DataFrame,
-      mat: graft.Materialize.Strategy = graft.Materialize.None)
-      : TriKernel = {
+      stageCut: DataFrame => DataFrame): TriKernel = {
     val ed = edgesRaw.select("a", "b")
-    val deg = mat(degOf(symOf(ed)))
+    val deg = stageCut(degOf(symOf(ed)))
     val da = deg.select(col("node").as("a"), col("d").as("da"))
     val db = deg.select(col("node").as("b"), col("d").as("db"))
     val aFirst = col("da") < col("db") ||
@@ -163,10 +165,10 @@ object Graph {
     // spelling (6 s vs 1 s at sf0.1) never exists. At part-vocabulary
     // |V| the adjacency broadcasts; at web-graph |V| it degrades to
     // two |E|-row hash joins, still never the wedge table.
-    val oriented = mat(ed.join(da, "a").join(db, "b")
+    val oriented = stageCut(ed.join(da, "a").join(db, "b")
       .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("v")))
-    val adjOut = mat(oriented.groupBy(col("u"))
+    val adjOut = stageCut(oriented.groupBy(col("u"))
       .agg(collect_list(col("v")).as("nbrs")))
     // per-edge support and per-node triangle counts join the kernel:
     // BOUNDED tables (≤|E| / ≤|V| rows) that edge_embed and local_cc
@@ -176,23 +178,23 @@ object Graph {
     // cut it ONCE so support and triCount don't each re-enumerate the
     // triangles, then drop the cut — the incidence itself is not part
     // of the kernel (release is a no-op on the un-materialized path)
-    val triNodes = mat(triNodesOf(oriented, adjOut))
+    val triNodes = stageCut(triNodesOf(oriented, adjOut))
     def cedge(x: Column, y: Column) =
       struct(least(x, y).as("ea"), greatest(x, y).as("eb"))
-    val support = mat(triNodes
+    val support = stageCut(triNodes
       .select(explode(array(cedge(col("u"), col("v")),
         cedge(col("u"), col("w")), cedge(col("v"), col("w")))).as("e"))
       .groupBy(col("e.ea").as("a"), col("e.eb").as("b"))
       .agg(count(lit(1)).as("support")))
-    val triCount = mat(triNodes
+    val triCount = stageCut(triNodes
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri")))
     // oriented/adjOut/triNodes are BUILD-ONLY since the r13 triCount
     // census serve: no serve path reads them, so the kernel releases
     // all three once support/triCount are cut — the cached state is
     // the bounded (≤|E| support, ≤|V| triCount, |V| deg) tables, not
-    // the two edge-scale orientation intermediates (no-ops under
-    // mat = None, where nothing was materialized).
+    // the two edge-scale orientation intermediates (no-ops under the
+    // identity stage cut, where nothing was materialized).
     Seq(triNodes, adjOut, oriented).foreach(graft.Materialize.release)
     TriKernel(ed, deg, support, triCount)
   }
@@ -241,19 +243,8 @@ object Graph {
   def triangles(spark: SparkSession, dir: String): DataFrame =
     trianglesFrom(triKernel(spark, dir))
 
-  def trianglesOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val ed = mat(edgesRaw.select("a", "b"))
-    val out = trianglesFrom(triKernelOf(ed))
-    // the 1-row census is cut so the edge table THIS call materialized
-    // can be released; under mat = None nothing was materialized,
-    // nothing is released.
-    if (mat ne Materialize.None) {
-      val census = mat(out)
-      Materialize.release(ed)
-      census
-    } else out
-  }
+  def trianglesOf(edgesRaw: DataFrame): DataFrame =
+    trianglesFrom(triKernelOf(edgesRaw, identity))
 
   private def trianglesFrom(k: TriKernel): DataFrame = {
     // T from the kernel's per-node incidence counts: every triangle
@@ -297,7 +288,7 @@ object Graph {
     localCcFrom(triKernel(spark, dir))
 
   def localCcOf(edgesRaw: DataFrame): DataFrame =
-    localCcFrom(triKernelOf(edgesRaw))
+    localCcFrom(triKernelOf(edgesRaw, identity))
 
   private def localCcFrom(k: TriKernel): DataFrame = {
     k.deg.join(k.triCount, Seq("node"), "left")
@@ -334,10 +325,10 @@ object Graph {
     * edges matter.
     */
   private def supportOf(ed: DataFrame): DataFrame =
-    triKernelOf(ed).support
+    triKernelOf(ed, identity).support
 
   def edgeEmbedOf(edgesRaw: DataFrame): DataFrame =
-    edgeEmbedFrom(triKernelOf(edgesRaw))
+    edgeEmbedFrom(triKernelOf(edgesRaw, identity))
 
   private def edgeEmbedFrom(k: TriKernel): DataFrame = {
     val da = k.deg.select(col("node").as("a"), col("d").as("da"))
@@ -380,10 +371,10 @@ object Graph {
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "pr")(
-      pagerankOf(edges(spark, dir), Materialize.session(spark)))
+      pagerankOf(edges(spark, dir)))
 
-  def pagerankOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
+  def pagerankOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val sym = symOf(edgesRaw.select("a", "b"))
     // out-degree rides the |V|-row RANK table, not the |E|-row
     // adjacency: the only table this call materializes is vocabulary-
@@ -391,7 +382,7 @@ object Graph {
     // edge projection against it — AQE sees the small build side and
     // re-plans it broadcast — and the round's shuffle is the partial-
     // aggregated groupBy(dst)
-    val deg = mat(degOf(sym))
+    val deg = cut(degOf(sym))
     var pr = deg.select(col("node"), lit(PrScale).as("pr"), col("d"))
     for (_ <- 1 to PrIters)
       pr = sym.join(pr, sym("src") === pr("node"))
@@ -408,8 +399,8 @@ object Graph {
         Window.orderBy(col("pr").desc, col("node"))).cast("long"))
       .where(col("rk") <= PrTopK)
     // the ≤ PrTopK-row result is cut eagerly so the degree table THIS
-    // call materialized can be released (see trianglesOf)
-    finishIterative(out, mat, Seq(deg))
+    // call materialized can be released
+    cut.finish(out)
   }
 
   /** Recommendations returned per part by [[itemRecs]]. */
@@ -468,8 +459,7 @@ object Graph {
     */
   def components(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "components")(
-      componentsOf(edges(spark, dir),
-        Materialize.session(spark)))
+      componentsOf(edges(spark, dir)))
 
   /** Forces the (≤ distinct-sizes)-row histogram eagerly and releases
     * the |V|-row final-round label checkpoint [[Dedup.clustersOf]]
@@ -477,27 +467,32 @@ object Graph {
     * table is self-contained; the loop's state is reclaimed here, not
     * left to the ContextCleaner).
     */
-  def componentsOf(ed: DataFrame,
-      mat: Materialize.Strategy = Materialize.Local): DataFrame = {
+  def componentsOf(ed: DataFrame): DataFrame = {
     val labels = Dedup.clustersOf(ed.where(col("w") >= StrongW)
-      .select(col("a").as("doc_a"), col("b").as("doc_b")), mat)
-    finishIterative(labels
+      .select(col("a").as("doc_a"), col("b").as("doc_b")))
+    new Rounds(ed.sparkSession).finish(labels
       .groupBy("cluster_id").agg(count(lit(1)).as("size"))
-      .groupBy("size").agg(count(lit(1)).as("n_components")),
-      mat, Seq(labels))
+      .groupBy("size").agg(count(lit(1)).as("n_components")), labels)
   }
 
-  /** Closing step shared by the iterative `…Of` forms: cut the bounded
-    * result with the caller's strategy, then release every per-round
-    * cut (the result no longer reads them).
+  /** The cuts of one iterative `…Of` call. Every round cuts with the
+    * session strategy of the call's input ([[Materialize.session]],
+    * read once per call), so a cluster's `reliable` conf reaches each
+    * round; [[finish]] cuts the bounded result the same way, then
+    * releases every round (and `also`) — the result no longer reads
+    * them.
     */
-  private def finishIterative(out: DataFrame,
-      mat: Materialize.Strategy, cuts: Seq[DataFrame]): DataFrame =
-    if (mat ne Materialize.None) {
+  private final class Rounds(spark: SparkSession)
+      extends (DataFrame => DataFrame) {
+    private val mat = Materialize.session(spark)
+    private val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = { val c = mat(df); cuts += c; c }
+    def finish(out: DataFrame, also: DataFrame*): DataFrame = {
       val result = mat(out)
-      cuts.foreach(Materialize.release)
+      (cuts ++ also).foreach(Materialize.release)
       result
-    } else out
+    }
+  }
 
   /** Minimum residual degree for the [[kcore]] peel. */
   val KcoreK = 3L
@@ -524,14 +519,10 @@ object Graph {
     */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "kcore")(
-      kcoreOf(edges(spark, dir), Materialize.session(spark)))
+      kcoreOf(edges(spark, dir)))
 
-  def kcoreOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def kcoreOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     var cur = cut(symOf(edgesRaw.where(col("w") >= StrongW)
       .select("a", "b")))
     val perRound = (1 to KcIters).map { i =>
@@ -546,7 +537,7 @@ object Graph {
         .select(lit(i.toLong).as("iter"), col("n_nodes"), col("n_edges"))
     }
     val out = perRound.reduce(_.unionByName(_))
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** Rich-club coefficient curve (Colizza et al., Nature Physics
@@ -622,14 +613,10 @@ object Graph {
     */
   def truss(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "truss")(
-      trussOf(edges(spark, dir), Materialize.session(spark)))
+      trussOf(edges(spark, dir)))
 
-  def trussOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def trussOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     var cur = cut(edgesRaw.where(col("w") >= StrongW).select("a", "b"))
     val perRound = (1 to TrussIters).map { i =>
       val keep = supportOf(cur)
@@ -644,7 +631,7 @@ object Graph {
           col("n_edges"))
     }
     val out = perRound.reduce(_.unionByName(_))
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** BFS frontier-expansion rounds for [[distances]]. */
@@ -665,14 +652,10 @@ object Graph {
     */
   def distances(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "distances")(
-      distancesOf(edges(spark, dir), Materialize.session(spark)))
+      distancesOf(edges(spark, dir)))
 
-  def distancesOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def distancesOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val sym = cut(symOf(edgesRaw.where(col("w") >= StrongW)
       .select("a", "b")))
     val src = degOf(sym)
@@ -691,7 +674,7 @@ object Graph {
       dist = cut(dist.unionByName(next))
     }
     val out = dist.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** Probe-source count for [[closeness]]. */
@@ -723,14 +706,10 @@ object Graph {
     */
   def closeness(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "closeness")(
-      closenessOf(edges(spark, dir), Materialize.session(spark)))
+      closenessOf(edges(spark, dir)))
 
-  def closenessOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def closenessOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val sym = cut(symOf(edgesRaw.where(col("w") >= StrongW)
       .select("a", "b")))
     val srcs = degOf(sym)
@@ -753,7 +732,7 @@ object Graph {
       .groupBy(col("s").as("node"))
       .agg(count(lit(1)).as("n_reached"),
         sum(expr(s"$CloseScale DIV dist")).as("harm12"))
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** Dependency fixed-point scale and report size for [[betweenness]].
@@ -789,15 +768,10 @@ object Graph {
     */
   def betweenness(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "betweenness")(
-      betweennessOf(edges(spark, dir),
-        Materialize.session(spark)))
+      betweennessOf(edges(spark, dir)))
 
-  def betweennessOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def betweennessOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val sym = cut(symOf(edgesRaw.where(col("w") >= StrongW)
       .select("a", "b")))
     val srcs = degOf(sym)
@@ -848,7 +822,7 @@ object Graph {
       .withColumn("rk", row_number().over(
         Window.orderBy(col("bc").desc, col("node"))).cast("long"))
       .where(col("rk") <= BtTopK)
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** PPR rounds and report size. */
@@ -873,14 +847,10 @@ object Graph {
     */
   def ppr(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "ppr")(
-      pprOf(edges(spark, dir), Materialize.session(spark)))
+      pprOf(edges(spark, dir)))
 
-  def pprOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def pprOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val sym = cut(symOf(edgesRaw.where(col("w") >= StrongW)
       .select("a", "b")))
     val deg = cut(degOf(sym))
@@ -917,7 +887,7 @@ object Graph {
       .withColumn("rk", row_number().over(
         Window.orderBy(col("ppr").desc, col("node"))).cast("long"))
       .where(col("rk") <= PprTopK)
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** Synchronous label-propagation rounds (fixed, the PageRank/HITS
@@ -944,7 +914,7 @@ object Graph {
     */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "labelprop")(
-      labelPropOf(edges(spark, dir), Materialize.session(spark)))
+      labelPropOf(edges(spark, dir)))
 
   /** The synchronous LPA label table after [[LpIters]] rounds —
     * shared by [[labelPropOf]] (community census) and
@@ -964,12 +934,8 @@ object Graph {
     lbl
   }
 
-  def labelPropOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def labelPropOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val sym = cut(symOf(edgesRaw.where(col("w") >= StrongW)
       .select("a", "b")))
     val lbl = lpLabelsOf(sym, cut)
@@ -978,7 +944,7 @@ object Graph {
         Window.orderBy(col("size").desc, col("lbl"))).cast("long"))
       .where(col("rk") <= LpTopK)
       .select(col("lbl").as("label"), col("size"), col("rk"))
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** Newman modularity of the LPA partition (Newman & Girvan 2004) —
@@ -1002,15 +968,10 @@ object Graph {
     */
   def modularity(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "modularity")(
-      modularityOf(edges(spark, dir),
-        Materialize.session(spark)))
+      modularityOf(edges(spark, dir)))
 
-  def modularityOf(edgesRaw: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame = {
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
+  def modularityOf(edgesRaw: DataFrame): DataFrame = {
+    val cut = new Rounds(edgesRaw.sparkSession)
     val d19 = "decimal(19,0)"
     val sp = cut(edgesRaw.where(col("w") >= StrongW).select("a", "b"))
     val sym = cut(symOf(sp))
@@ -1038,7 +999,7 @@ object Graph {
         col("qn").cast("long").as("q_num"),
         col("qd").cast("long").as("q_den"),
         (col("qn").cast("double") / col("qd").cast("double")).as("q"))
-    finishIterative(out, mat, cuts.toSeq)
+    cut.finish(out)
   }
 
   /** HITS iteration count and the fixed-point scale both sides share. */
@@ -1079,17 +1040,19 @@ object Graph {
     */
   def hits(spark: SparkSession, dir: String): DataFrame =
     graphCache.getOrBuild(spark, dir, "hits")(
-      hitsOnMembers(members(spark, dir),
-        Materialize.session(spark), ownM = false))
+      hitsOnMembers(members(spark, dir), new Rounds(spark)))
 
-  def hitsOf(lineitem: DataFrame,
-      mat: Materialize.Strategy = Materialize.None): DataFrame =
-    hitsOnMembers(mat(lineitem
+  /** The membership is this call's first cut, released with the
+    * rounds.
+    */
+  def hitsOf(lineitem: DataFrame): DataFrame = {
+    val cut = new Rounds(lineitem.sparkSession)
+    hitsOnMembers(cut(lineitem
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .distinct()), mat, ownM = true)
+      .distinct()), cut)
+  }
 
-  private def hitsOnMembers(m: DataFrame, mat: Materialize.Strategy,
-      ownM: Boolean): DataFrame = {
+  private def hitsOnMembers(m: DataFrame, cut: Rounds): DataFrame = {
     def rescale(v: DataFrame, c: String): DataFrame =
       v.crossJoin(broadcast(v.agg(max(col(c)).as("mx"))))
         .select(v.columns.filter(_ != c).map(col) :+
@@ -1100,10 +1063,6 @@ object Graph {
     // exponential-lineage hazard). Cutting just the |P|-row authority
     // table once per round bounds the growth at 4 membership joins per
     // round while paying half the eager jobs.
-    val cuts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame =
-      if (mat ne Materialize.None) { val c = mat(df); cuts += c; c }
-      else df
     var hub = m.select(col("o")).distinct()
       .select(col("o"), lit(HitsScale).as("h"))
     var auth: DataFrame = null
@@ -1118,8 +1077,7 @@ object Graph {
         Window.orderBy(col("a").desc, col("p"))).cast("long"))
       .where(col("rk") <= HitsTopK)
       .select(col("p").as("node"), col("a").as("auth"), col("rk"))
-    finishIterative(out, mat,
-      if (ownM) cuts.toSeq :+ m else cuts.toSeq)
+    cut.finish(out)
   }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of

@@ -149,11 +149,9 @@ object Quality {
     scoreProbe(feat, theta)
   }
 
-  def qualityProbeOf(corpus: DataFrame,
-                     mat: Materialize.Strategy = Materialize.Local)
-      : DataFrame = {
+  def qualityProbeOf(corpus: DataFrame): DataFrame = {
     // one materialization feeds all 8 epoch scans + the final scoring
-    val feat = mat(probeFeaturesOf(corpus))
+    val feat = Materialize.Local(probeFeaturesOf(corpus))
     scoreProbe(feat, fitProbe(feat))
   }
 

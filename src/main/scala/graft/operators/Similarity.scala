@@ -208,12 +208,11 @@ object Similarity {
   def lshTopK(spark: SparkSession, dir: String): DataFrame =
     lshTopKOf(emb(spark, dir), nq(spark))
 
-  def lshTopKOf(corpusDf: DataFrame, nQueries: Long,
-      mat: graft.Materialize.Strategy = graft.Materialize.Local)
-      : DataFrame = {
+  def lshTopKOf(corpusDf: DataFrame, nQueries: Long): DataFrame = {
     val spark = corpusDf.sparkSession
     val buckets = // both sides of the bucket self-join read this table
-      mat(Hashing.srpBuckets(spark, corpusDf, LshTables, LshBits))
+      graft.Materialize.Local(
+        Hashing.srpBuckets(spark, corpusDf, LshTables, LshBits))
     val cand = buckets.as("q")
       .where(col("q.vec_id") < nQueries)
       .join(buckets.as("n"),

@@ -1300,20 +1300,15 @@ object TextOps {
     * by concatenation from single characters), so a pattern can never
     * match across symbol boundaries.
     */
-  def bpeMergesOf(vocab: DataFrame, n: Int,
-      mat: graft.Materialize.Strategy = graft.Materialize.Local)
-      : DataFrame = {
+  def bpeMergesOf(vocab: DataFrame, n: Int): DataFrame = {
     // one cut per merge step, superseded-and-released as the vocabulary
-    // rewrites — the clustersOf loop discipline: None would recompute
-    // the whole replace chain at every step's argmax collect (O(n²)
-    // jobs) — callers with a session pass Materialize.session so a
-    // cluster's `reliable` conf reaches the loop (localCheckpoint has
-    // no lineage fallback; one executor loss mid-train would fail the
-    // whole entry).
-    require(mat ne graft.Materialize.None,
-      "bpeMergesOf iterates: Materialize.None recomputes the whole " +
-        "rewrite chain at every step's argmax")
+    // rewrites — the clustersOf loop discipline: uncut, every step's
+    // argmax collect would recompute the whole replace chain (O(n²)
+    // jobs). The cut is the session strategy, so a cluster's
+    // `reliable` conf reaches the loop (localCheckpoint has no lineage
+    // fallback; one executor loss mid-train would fail the whole entry).
     val spark = vocab.sparkSession
+    val mat = graft.Materialize.session(spark)
     val s = spark; import s.implicits._
     var words = mat(vocab.select(
       regexp_replace(col("word"), "(.)", "|$1|").as("w"), col("freq")))
@@ -1360,8 +1355,7 @@ object TextOps {
 
   /** Fixture entry: merges learned from the documents word frequencies. */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeMergesOf(wordFreqOf(docs(spark, dir)), BpeMerges,
-      graft.Materialize.session(spark))
+    bpeMergesOf(wordFreqOf(docs(spark, dir)), BpeMerges)
 
   /** Session-lifetime learned-merge cache (driver-side: n tiny rows per
     * (session, dir)): training runs once; every encode invocation AND

@@ -7,11 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join,
   LogicalPlan}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Apriori
 
 /** G1/G3 generator semantics + Apriori pipeline invariants (SURVEY.md
@@ -225,26 +223,15 @@ class AprioriSpec extends SparkSpecBase {
         case _ => Nil
       }
     }.flatten.toSet
-    val joins = new AtomicInteger
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long)
-          : Unit = joins.addAndGet(qe.optimizedPlan.collect {
-        case j: Join if Set(tables(j.left), tables(j.right)) ==
-            Set(Set("lineitem"), Set("part")) => j
-      }.size): Unit
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
     SessionCache.invalidate(spark, Sf)
-    BusDrain(sc)
-    spark.listenerManager.register(listener)
-    try {
+    val joins = sqlExecutions {
       Apriori.freqItemsets(spark, Sf).collect(): Unit
       Apriori.freqItemsetsTxOrder(spark, Sf).collect(): Unit
-      BusDrain(sc)
-    } finally spark.listenerManager.unregister(listener)
-    assert(joins.get == 1, s"${joins.get} lineitem⋈part joins")
+    }.map(_.optimizedPlan.collect {
+      case j: Join if Set(tables(j.left), tables(j.right)) ==
+          Set(Set("lineitem"), Set("part")) => j
+    }.size).sum
+    assert(joins == 1, s"$joins lineitem⋈part joins")
   }
 
   test("cold build: one graft_subsets enumeration serves the frequent " +
@@ -254,28 +241,17 @@ class AprioriSpec extends SparkSpecBase {
     // dir is invalidated, a cold freqItemsets followed by candidatesRaw
     // runs exactly one SQL execution whose optimized plan enumerates
     // `fitems` through graft_subsets
-    val enumerations = new AtomicInteger
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long)
-          : Unit = if (qe.optimizedPlan.exists {
-        case g: Generate => g.generator.prettyName == "graft_subsets" &&
-          g.generator.references.exists(_.name == "fitems")
-        case _ => false
-      }) enumerations.incrementAndGet(): Unit
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
     SessionCache.invalidate(spark, Sf)
-    BusDrain(sc)
-    spark.listenerManager.register(listener)
-    try {
+    val enumerations = sqlExecutions {
       Apriori.freqItemsets(spark, Sf).collect(): Unit
       Apriori.candidatesRaw(spark, Sf).collect(): Unit
-      BusDrain(sc)
-    } finally spark.listenerManager.unregister(listener)
-    assert(enumerations.get == 1,
-      s"${enumerations.get} graft_subsets enumerations of fitems")
+    }.count(_.optimizedPlan.exists {
+      case g: Generate => g.generator.prettyName == "graft_subsets" &&
+        g.generator.references.exists(_.name == "fitems")
+      case _ => false
+    })
+    assert(enumerations == 1,
+      s"$enumerations graft_subsets enumerations of fitems")
   }
 
   test("txorder keying splits one item SET by basket order; sorted merges") {

@@ -102,49 +102,28 @@ class ConfKnobsSpec extends SparkSpecBase {
     // values. A fresh newSession isolates the flipped caches (the
     // SessionCache key dimension), and the reliable files are released
     // by the ordinary SessionCache.invalidate.
-    val ckDir =
-      java.nio.file.Files.createTempDirectory("graft-ck-conf").toString
-    // the checkpoint dir is SHARED SparkContext state: remember what
-    // was set so cleanup can restore it instead of leaving the context
-    // pointing at the deleted temp dir (a later suite's reliable
-    // checkpoint would fail on the dangling path)
-    val prevCk = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(ckDir)
-    val rel = spark.newSession()
-    rel.conf.set("graft.materialize", "reliable")
-    assert(Materialize.session(rel) eq Materialize.Reliable)
-    try {
-      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toString).sorted.toSeq
-      Seq("llm_dedup_minhash", "graph_pagerank").foreach { name =>
-        val base = rows(SparkEntry.queries(name)(spark, Sf))
-        val flip = rows(SparkEntry.queries(name)(rel, Sf))
-        assert(flip == base, s"$name diverged under reliable")
+    withCheckpointDir { ckDir =>
+      val rel = spark.newSession()
+      rel.conf.set("graft.materialize", "reliable")
+      assert(Materialize.session(rel) eq Materialize.Reliable)
+      try {
+        def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+          df.collect().map(_.toString).sorted.toSeq
+        Seq("llm_dedup_minhash", "graph_pagerank").foreach { name =>
+          val base = rows(SparkEntry.queries(name)(spark, Sf))
+          val flip = rows(SparkEntry.queries(name)(rel, Sf))
+          assert(flip == base, s"$name diverged under reliable")
+        }
+        // the flip really checkpointed: rdd-* dirs exist under ckDir
+        assert(rddDirs(ckDir).nonEmpty,
+          "reliable session produced no reliable checkpoints")
+      } finally {
+        // drop EVERY cache the two entries populated for the flipped
+        // session before their checkpoint files are deleted — a
+        // retained entry over a deleted reliable checkpoint fails its
+        // next read
+        SessionCache.invalidate(rel)
       }
-      // the flip really checkpointed: rdd-* dirs exist under ckDir
-      def rddDirs() = Option(new java.io.File(ckDir).listFiles()).toSeq
-        .flatten.flatMap(d => Option(d.listFiles()).toSeq.flatten)
-        .filter(_.getName.startsWith("rdd-"))
-      assert(rddDirs().nonEmpty,
-        "reliable session produced no reliable checkpoints")
-    } finally {
-      // drop EVERY cache the two entries populated for the flipped
-      // session before deleting their checkpoint files — a retained
-      // entry over a deleted reliable checkpoint fails its next read.
-      // (Suites that use .checkpoint() set their own dir first —
-      // SparkSpecBase shares one context — so deleting ours is safe.)
-      SessionCache.invalidate(rel)
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(ckDir))
-      // restore (or re-point) the shared checkpoint dir — never leave
-      // it dangling at the deleted temp path
-      spark.sparkContext.setCheckpointDir(prevCk.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-ck-keep")
-          .toString))
     }
   }
 
@@ -167,39 +146,26 @@ class ConfKnobsSpec extends SparkSpecBase {
     // one-call remedy. Proof: build under local on a fresh session,
     // flip to reliable, invalidate, rebuild → the SAME session now
     // produces reliable checkpoint files, values unchanged.
-    val ckDir =
-      java.nio.file.Files.createTempDirectory("graft-ck-flip").toString
-    val prevCk = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(ckDir)
-    val sess = spark.newSession() // isolate the flipped caches
-    def rddDirs() = Option(new java.io.File(ckDir).listFiles()).toSeq
-      .flatten.flatMap(d => Option(d.listFiles()).toSeq.flatten)
-      .filter(_.getName.startsWith("rdd-"))
-    try {
-      def rows() = SparkEntry.queries("llm_dedup_minhash")(sess, Sf)
-        .collect().map(_.toString).sorted.toSeq
-      val base = rows() // builds the band index under local (default)
-      assert(rddDirs().isEmpty, "local build must not write checkpoints")
-      sess.conf.set("graft.materialize", "reliable")
-      // flip WITHOUT invalidation serves the old-strategy artifact
-      // (documented); the remedy is one call:
-      SessionCache.invalidate(sess)
-      val flipped = rows()
-      assert(flipped == base, "values must not move under the flip")
-      assert(rddDirs().nonEmpty,
-        "post-invalidate rebuild did not checkpoint reliably")
-    } finally {
-      sess.conf.unset("graft.materialize")
-      SessionCache.invalidate(sess)
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
+    withCheckpointDir { ckDir =>
+      val sess = spark.newSession() // isolate the flipped caches
+      try {
+        def rows() = SparkEntry.queries("llm_dedup_minhash")(sess, Sf)
+          .collect().map(_.toString).sorted.toSeq
+        val base = rows() // builds the band index under local (default)
+        assert(rddDirs(ckDir).isEmpty,
+          "local build must not write checkpoints")
+        sess.conf.set("graft.materialize", "reliable")
+        // flip WITHOUT invalidation serves the old-strategy artifact
+        // (documented); the remedy is one call:
+        SessionCache.invalidate(sess)
+        val flipped = rows()
+        assert(flipped == base, "values must not move under the flip")
+        assert(rddDirs(ckDir).nonEmpty,
+          "post-invalidate rebuild did not checkpoint reliably")
+      } finally {
+        sess.conf.unset("graft.materialize")
+        SessionCache.invalidate(sess)
       }
-      rm(new java.io.File(ckDir))
-      spark.sparkContext.setCheckpointDir(prevCk.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-ck-keep2")
-          .toString))
     }
   }
 

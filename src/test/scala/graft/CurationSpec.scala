@@ -845,33 +845,4 @@ class CurationSpec extends SparkSpecBase {
       assert(got.values.sum == t, s"trial $trial budget")
     }
   }
-
-  test("curateStrictMat threads the strategy instead of the session cache") {
-    val cached = Curation.curateStrict(spark, Sf)
-      .collect().map(_.getAs[Long]("doc_id")).toSet
-    // None: the fully-declarative tree — same kept set, no hidden cut
-    val none = Curation.curateStrictMat(spark, Sf, graft.Materialize.None)
-    assert(none.collect().map(_.getAs[Long]("doc_id")).toSet == cached)
-    // Local: a caller-owned cut of its own, released below without
-    // touching the session-cached kept set (checked at the end)
-    val local = Curation.curateStrictMat(spark, Sf, graft.Materialize.Local)
-    try {
-      assert(local.collect().map(_.getAs[Long]("doc_id")).toSet == cached)
-      assert(local.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
-        "Local strategy output is not a checkpoint")
-    } finally graft.Materialize.release(local)
-    // Session SENTINEL: serves the cached kept set (same rows), and a
-    // caller release()-ing what it got back must NOT corrupt the
-    // shared cache (the Filter-barrier ownership guard) — dispatch is
-    // on the sentinel, never on a conf re-read, so a concurrent conf
-    // flip cannot reroute a holder of the sentinel
-    val served =
-      Curation.curateStrictMat(spark, Sf, graft.Materialize.Session)
-    assert(served.collect().map(_.getAs[Long]("doc_id")).toSet == cached)
-    graft.Materialize.release(served) // must no-op through the barrier
-    assert(Curation.curateStrict(spark, Sf)
-      .collect().map(_.getAs[Long]("doc_id")).toSet == cached,
-      "release of a served view corrupted the shared kept-set cache")
-  }
 }

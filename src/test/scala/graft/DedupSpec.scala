@@ -325,15 +325,6 @@ class DedupSpec extends SparkSpecBase {
     assert(answers() == before)
   }
 
-  test("Materialize.None reproduces the Local minhash output") {
-    val s = spark; import s.implicits._
-    val corpus = docs.toDF("doc_id", "text")
-    def pairs(m: Materialize.Strategy) =
-      Dedup.minhashLshOf(corpus, m).collect()
-        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
-    assert(pairs(Materialize.None) == pairs(Materialize.Local))
-  }
-
   test("simhash chunk join reproduces brute-force Hamming <= 7 pairs") {
     def h56(s: String): Long =
       java.lang.Long.parseLong(

@@ -15,9 +15,12 @@ class GraphSpec extends SparkSpecBase {
     * duplicated part line), order 2 = {3,4}. Expected canonical edges:
     * (1,2) (1,3) (2,3) w=1 each, (3,4) w=1; one triangle {1,2,3}.
     */
-  private def tinyLineitem = Seq(
-    (1L, 1L), (1L, 2L), (1L, 3L), (1L, 3L), (2L, 3L), (2L, 4L))
-    .toDF("l_orderkey", "l_partkey")
+  private def tinyLineitem = tinyLineitemIn(spark)
+
+  private def tinyLineitemIn(s: org.apache.spark.sql.SparkSession) =
+    s.createDataFrame(Seq(
+      (1L, 1L), (1L, 2L), (1L, 3L), (1L, 3L), (2L, 3L), (2L, 4L)))
+      .toDF("l_orderkey", "l_partkey")
 
   test("edges: basket-local pairs, duplicate part lines collapse") {
     val ed = Graph.edgesOf(tinyLineitem)
@@ -286,7 +289,7 @@ class GraphSpec extends SparkSpecBase {
       if (edges.nonEmpty) {
         val df = edges.toDF("a", "b").withColumn("w", lit(Graph.StrongW))
         val (nc, m, qn, qd) = replay(edges)
-        val r = Graph.modularityOf(df, graft.Materialize.Local).head()
+        val r = Graph.modularityOf(df).head()
         assert((r.getAs[Long]("n_communities"), r.getAs[Long]("m"), r.getAs[Long]("q_num"), r.getAs[Long]("q_den"))
           == ((nc, m, qn.toLong, qd.toLong)), s"edges=$edges")
         assert(r.getAs[Double]("q") == qn.toDouble / qd.toDouble)
@@ -297,8 +300,7 @@ class GraphSpec extends SparkSpecBase {
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (4L, 5L), (5L, 6L), (4L, 6L))
     val r = Graph.modularityOf(
-      tri.toDF("a", "b").withColumn("w", lit(Graph.StrongW)),
-      graft.Materialize.Local).head()
+      tri.toDF("a", "b").withColumn("w", lit(Graph.StrongW))).head()
     assert(r.getLong(0) == 2L)
     assert(r.getDouble(4) == 0.5)
   }
@@ -326,7 +328,7 @@ class GraphSpec extends SparkSpecBase {
       } yield (a.toLong, b.toLong)).toSeq
       if (edges.nonEmpty) {
         val df = edges.toDF("a", "b").withColumn("w", lit(Graph.StrongW))
-        val got = Graph.trussOf(df, graft.Materialize.Local).collect()
+        val got = Graph.trussOf(df).collect()
           .map(r => (r.getAs[Long]("iter"), r.getAs[Long]("n_nodes"), r.getAs[Long]("n_edges"))).toSeq
           .sortBy(_._1)
         assert(got == replay(edges), s"edges=$edges")
@@ -340,7 +342,7 @@ class GraphSpec extends SparkSpecBase {
     val star = (10L to 20L).map(l => (5L, l))
     val df = (clique ++ star).toDF("a", "b")
       .withColumn("w", lit(Graph.StrongW))
-    val trace = Graph.trussOf(df, graft.Materialize.Local).collect()
+    val trace = Graph.trussOf(df).collect()
       .map(r => r.getAs[Long]("iter") -> ((r.getAs[Long]("n_nodes"), r.getAs[Long]("n_edges")))).toMap
     assert(trace(1L) == ((4L, 6L)))
     assert(trace(Graph.TrussIters.toLong) == ((4L, 6L)))
@@ -707,39 +709,48 @@ class GraphSpec extends SparkSpecBase {
       "repeated calls did not reuse the cached candidate index")
   }
 
-  test("cluster Materialize strategies reproduce the Local graph outputs") {
-    // The cluster story must be proven, not argued: Reliable
-    // (checkpoint to the configured dir) must hash-match Local for
-    // the DAG-shaped triangle cut and for the iterative per-round
-    // cuts.
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_ck").toString
-    spark.sparkContext.setCheckpointDir(ckDir)
-    try {
-      val edges = Graph.edgesOf(tinyLineitem)
-      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.collect().map(_.toString).toSet
-      // DAG-shaped cut (the single edge-table materialization)
-      val triLocal = rows(Graph.trianglesOf(edges, Materialize.Local))
-      val triRel = rows(Graph.trianglesOf(edges, Materialize.Reliable))
-      assert(triRel == triLocal && triLocal.nonEmpty)
-      // iterative per-round cuts: Reliable, toy and fixture scale
-      val prLocal = rows(Graph.pagerankOf(edges, Materialize.Local))
-      val prRel = rows(Graph.pagerankOf(edges, Materialize.Reliable))
-      assert(prRel == prLocal && prLocal.nonEmpty)
-      val trLocal = rows(Graph.trussOf(edges, Materialize.Local))
-      val trRel = rows(Graph.trussOf(edges, Materialize.Reliable))
-      assert(trRel == trLocal && trLocal.nonEmpty)
-      val fixEdges = Graph.edges(spark, Sf)
-      assert(rows(Graph.pagerankOf(fixEdges, Materialize.Reliable)) ==
-        rows(Graph.pagerankOf(fixEdges, Materialize.Local)))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(ckDir))
+  test("graft.materialize=reliable: the iterative forms cut every " +
+    "round reliably, match the local session and release every cut") {
+    // The cluster story is a conf flip: under a session with
+    // graft.materialize=reliable, pagerankOf and trussOf must write
+    // reliable checkpoints during the call, hash-match the local
+    // session at toy and fixture scale, and leave no checkpoint behind
+    // once the caller releases the result. graph_triangles covers the
+    // triangle kernel's DAG-shaped stage cuts (trianglesOf itself does
+    // not cut).
+    withCheckpointDir { ckDir =>
+      val rel = spark.newSession()
+      rel.conf.set("graft.materialize", "reliable")
+      try {
+        def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+          df.collect().map(_.toString).toSet
+        val inputs = Seq(
+          "toy" -> (Graph.edgesOf(tinyLineitem),
+            Graph.edgesOf(tinyLineitemIn(rel))),
+          "fixture" -> (Graph.edges(spark, Sf), Graph.edges(rel, Sf)))
+        val forms = Seq[(String, org.apache.spark.sql.DataFrame =>
+            org.apache.spark.sql.DataFrame)](
+          "pagerankOf" -> Graph.pagerankOf, "trussOf" -> Graph.trussOf)
+        for ((scale, (local, reliable)) <- inputs;
+             (name, f) <- forms) {
+          val base = f(local)
+          val want = rows(base)
+          Materialize.release(base)
+          val before = rddDirs(ckDir).toSet
+          val out = f(reliable)
+          assert(rddDirs(ckDir).toSet != before,
+            s"$name ($scale) wrote no reliable checkpoint")
+          assert(rows(out) == want && want.nonEmpty,
+            s"$name ($scale) diverged under reliable")
+          Materialize.release(out)
+          assert(rddDirs(ckDir).toSet == before,
+            s"$name ($scale) left reliable checkpoints behind: " +
+              (rddDirs(ckDir).toSet -- before).mkString(", "))
+        }
+        val tri = SparkEntry.queries("graph_triangles")
+        assert(rows(tri(rel, Sf)) == rows(tri(spark, Sf)),
+          "graph_triangles diverged under reliable")
+      } finally SessionCache.invalidate(rel)
     }
   }
 

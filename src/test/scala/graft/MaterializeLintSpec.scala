@@ -69,4 +69,31 @@ class MaterializeLintSpec extends AnyFunSuite {
          |reviewed within-call transients:
          |  ${drift.mkString("\n  ")}""".stripMargin)
   }
+
+  test("no src/main function takes a Materialize.Strategy parameter") {
+    // every function picks its own cut: the iterative forms and cached
+    // builds cut with the session strategy (the `graft.materialize`
+    // conf), the per-call forms with Local. A caller-picked strategy
+    // parameter is a second knob that can skip the per-round cut or
+    // ignore the conf, so none may come back. (`Materialize.widened`
+    // takes the strategy it widens; Materialize.scala is the seam.)
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"run from the repo root (cwd=${System.getProperty("user.dir")})")
+    val param =
+      """(?<!val |var )\b\w+\s*:\s*(?:graft\.)?Materialize\.Strategy\b""".r
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Materialize.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+          .collect { case (l, i) if param.findFirstIn(l).isDefined =>
+            s"$p:${i + 1}: ${l.trim}" }
+      }.toSeq
+    assert(found.isEmpty,
+      s"""${found.size} Materialize.Strategy parameter(s) — cut with
+         |Materialize.session or Materialize.Local inside the function:
+         |  ${found.mkString("\n  ")}""".stripMargin)
+  }
 }

@@ -15,10 +15,8 @@ class MaterializeSpec extends SparkSpecBase {
       .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
 
   test("release deletes a Reliable checkpoint's files") {
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_ck_rel").toString
-    spark.sparkContext.setCheckpointDir(ckDir)
-    try {
+    val prev = spark.sparkContext.getCheckpointDir
+    withCheckpointDir { _ =>
       val ck = Materialize.Reliable(
         spark.range(100).toDF("id").select(col("id"), (col("id") * 2).as("v")))
       val file = rootRdd(ck).getCheckpointFile
@@ -32,14 +30,9 @@ class MaterializeSpec extends SparkSpecBase {
       Materialize.release(ck)
       assert(!fs.exists(p),
         s"release left the reliable checkpoint files at ${file.get}")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(ckDir))
     }
+    // the shared context is not left pointing at the deleted temp dir
+    assert(spark.sparkContext.getCheckpointDir == prev)
   }
 
   test("release unwraps rename projections to the checkpointed root") {
@@ -62,8 +55,7 @@ class MaterializeSpec extends SparkSpecBase {
     // view of a SHARED cached table to a caller who may release() it
     // wraps the view in `WHERE true` — inert at execution (Catalyst
     // folds it), but the ANALYZED plan release walks keeps it, so the
-    // walk stops before the shared root (curateStrictMat's cached
-    // branch)
+    // walk stops before the shared root
     val shared = Materialize.Local(
       spark.range(40).toDF("id").select(col("id"), (col("id") * 3).as("v")))
     val rdd = rootRdd(shared)
@@ -75,32 +67,6 @@ class MaterializeSpec extends SparkSpecBase {
       "release pierced the WHERE-true barrier and killed the shared table")
     assert(view.count() == 40) // the barrier costs nothing at execution
     Materialize.release(shared)
-  }
-
-  test("Session sentinel: applied as a strategy it degrades to the " +
-    "input session's conf strategy") {
-    // dispatch sites compare `mat eq Materialize.Session`; if a caller
-    // instead APPLIES it where a concrete cut is expected, it must cut
-    // with the input's own session conf (local default → an eager
-    // lineage-truncating checkpoint, same as Local)
-    val df = spark.range(30).selectExpr("id", "id * 2 AS v")
-    val cut = Materialize.Session(df.toDF())
-    try {
-      assert(cut.collect().map(_.getLong(1)).sorted.toSeq ==
-        df.collect().map(_.getLong(1)).sorted.toSeq)
-      assert(cut.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
-        "Session under the local default must checkpoint like Local")
-    } finally Materialize.release(cut)
-    // an iterative form fed the sentinel cuts every round with it: a
-    // 4-node chain reaches its one-component fixed point
-    val pairs = spark.range(3).selectExpr("id AS doc_a", "id + 1 AS doc_b")
-    val labels = graft.operators.Dedup.clustersOf(
-      pairs.toDF(), Materialize.Session)
-    try {
-      val lbls = labels.collect().map(r => r.getLong(1)).distinct
-      assert(lbls.length == 1, "a 4-node chain is one component")
-    } finally Materialize.release(labels)
   }
 
   test("isCheckpointLoss matches the REAL lost-block failure and walks " +

@@ -462,16 +462,6 @@ class PlanShapeSpec extends SparkSpecBase {
     // twice (the cut subtree's lineage is truncated away entirely;
     // without the cut it appeared once per consumer branch)
     assert("documents\\.parquet".r.findAllIn(p).size <= 2, p)
-    // and the same answer is still available as ONE declarative tree:
-    // under Materialize.None the gate family must be RE-DERIVED in the
-    // plan (documents scans proliferate per consumer branch), not
-    // served from the session kept-set checkpoint — a plan that still
-    // reads ≤ 2 documents scans is riding a hidden materialization
-    val one = graft.operators.Curation.pipelineTokensMat(
-      spark, "/root/testdata/sf0.01", graft.Materialize.None)
-    // pre-AQE physical plan: the logical plan string omits scan paths
-    val po = one.queryExecution.sparkPlan.toString
-    assert("documents\\.parquet".r.findAllIn(po).size > 2, po.take(4000))
   }
 
   test("upsert merges in one exchange with map-side partial aggregation") {
@@ -742,23 +732,49 @@ class PlanShapeSpec extends SparkSpecBase {
   }
 
   test("graph iterative family: adjacency joins hash, nothing cartesian") {
-    // the `…Of` forms under Materialize.None — the entry functions
-    // serve the rank cache (an RDD-scan plan, vacuous to pin), while
-    // these expose the declarative BUILD plan the cache runs once. At
-    // Sf, not sf0.01: None retains each round's lineage (the
-    // re-referencing rounds re-expand), so the executed tree is only
-    // cheap at fixture scale
+    // the `…Of` forms cut every round and their result, so the frame
+    // they return is a scan, vacuous to pin. The plans the build
+    // really runs are its cuts, each an SQL action: every join in
+    // every executed plan must be a keyed equi-join, or a nested loop
+    // over a ≤ 1-row broadcast (the source/teleport row) — never a
+    // CartesianProduct, never a nested loop over a real table
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.{
+      BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin,
+      SortMergeJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    object Aqe extends AdaptiveSparkPlanHelper
+    // rows the build side's broadcast carried (the topmost broadcast
+    // exchange under the join, reused or not)
+    def broadcastRows(build: SparkPlan): Long = Aqe.collectFirst(build) {
+      case b: BroadcastExchangeExec => b
+      case ReusedExchangeExec(_, b: BroadcastExchangeExec) => b
+    }.fold(Long.MaxValue)(_.metrics("numOutputRows").value)
+    def faults(p: SparkPlan): Seq[String] = Aqe.collect(p) {
+      case j: HashJoin if j.leftKeys.nonEmpty => None
+      case j: SortMergeJoinExec if j.leftKeys.nonEmpty => None
+      case j: BroadcastNestedLoopJoinExec =>
+        val rows = broadcastRows(
+          if (j.buildSide == BuildRight) j.right else j.left)
+        if (rows <= 1) None
+        else Some(s"BroadcastNestedLoopJoin over a $rows-row broadcast")
+      case c: CartesianProductExec => Some(c.nodeName)
+      case j: BaseJoinExec => Some(s"${j.nodeName} without join keys")
+    }.flatten
     val ed = graft.operators.Graph.edges(spark, Sf)
-    Seq(
-      graft.operators.Graph.kcoreOf(ed),
-      graft.operators.Graph.labelPropOf(ed),
-      graft.operators.Graph.distancesOf(ed),
-      graft.operators.Graph.pprOf(ed)
-    ).foreach { df =>
-      val p = finalOnly(df)
-      // 1-row source/teleport broadcasts are fine (BroadcastNestedLoop
-      // on a literal row); a CartesianProduct is not
-      assert(!p.contains("CartesianProduct"), p)
+    Seq[(String, DataFrame => DataFrame)](
+      "kcoreOf" -> graft.operators.Graph.kcoreOf,
+      "labelPropOf" -> graft.operators.Graph.labelPropOf,
+      "distancesOf" -> graft.operators.Graph.distancesOf,
+      "pprOf" -> graft.operators.Graph.pprOf
+    ).foreach { case (name, f) =>
+      val plans = sqlExecutions(Materialize.release(f(ed)))
+        .map(_.executedPlan)
+      assert(plans.nonEmpty, s"$name ran no SQL execution")
+      plans.foreach { p =>
+        assert(faults(p).isEmpty, s"$name: ${faults(p).mkString("; ")}\n$p")
+      }
     }
   }
 

@@ -92,26 +92,32 @@ class WindowBoundSpec extends SparkSpecBase {
     // (leaving a true single-partition sort of the window input).
     // Accepted spellings: TakeOrderedAndProject (what the optimizer
     // emits for these — a global top-K via per-partition heaps feeding
-    // the K-row window input) or a WindowGroupLimit(Exec). Graph
-    // entries are planned through their …Of forms with
-    // Materialize.None: the fixture entries return checkpointed
-    // results whose plan is just a scan.
+    // the K-row window input) or a WindowGroupLimit(Exec). The graph
+    // …Of forms return their cut result, whose plan is just a scan;
+    // the windowed plan is the one their final cut executes — the
+    // last SQL execution of the call.
     import graft.operators._
+    import org.apache.spark.sql.DataFrame
     val li = Tables(spark, Sf, "lineitem")
-    val targets: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+    def planned(df: => DataFrame): () => String =
+      () => df.queryExecution.executedPlan.toString
+    def finalCut(df: => DataFrame): () => String =
+      () => sqlExecutions(Materialize.release(df)).last.executedPlan.toString
+    val targets: Seq[(String, () => String)] =
       Seq(
         "llm_uncertainty_sample" ->
-          (() => Quality.uncertaintySample(spark, Sf)),
-        "graph_pagerank" -> (() => Graph.pagerankOf(Graph.edges(spark, Sf))),
-        "graph_ppr" -> (() => Graph.pprOf(Graph.edges(spark, Sf))),
+          planned(Quality.uncertaintySample(spark, Sf)),
+        "graph_pagerank" ->
+          finalCut(Graph.pagerankOf(Graph.edges(spark, Sf))),
+        "graph_ppr" -> finalCut(Graph.pprOf(Graph.edges(spark, Sf))),
         "graph_label_prop" ->
-          (() => Graph.labelPropOf(Graph.edges(spark, Sf))),
-        "graph_hits" -> (() => Graph.hitsOf(li)),
-        "llm_chi2_terms" -> (() => TextOps.chi2TermsOf(
+          finalCut(Graph.labelPropOf(Graph.edges(spark, Sf))),
+        "graph_hits" -> finalCut(Graph.hitsOf(li)),
+        "llm_chi2_terms" -> planned(TextOps.chi2TermsOf(
           Tables(spark, Sf, "documents"))),
-        "llm_bm25_topk" -> (() => Retrieval.bm25TopK(spark, Sf)))
-    val missing = targets.flatMap { case (name, fn) =>
-      val p = fn().queryExecution.executedPlan.toString
+        "llm_bm25_topk" -> planned(Retrieval.bm25TopK(spark, Sf)))
+    val missing = targets.flatMap { case (name, plan) =>
+      val p = plan()
       if (p.contains("WindowGroupLimit")
           || p.contains("TakeOrderedAndProject")) None
       else Some(s"$name:\n${p.take(4000)}")
