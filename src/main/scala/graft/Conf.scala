@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * |---|---|---|
   * | `graft.shuffle.rankBuckets`  | 4096      | Curation.shuffleAssignOf |
   * | `graft.sim.numQueries`      | 50        | Similarity fixture entries |
-  * | `graft.sim.numCentroids`    | 16        | Similarity.cachedCents (IVF) |
+  * | `graft.sim.numCentroids`    | 16        | Similarity.cachedCents (IVF, cache key ("ivf", K)) |
   * | `graft.encode.vocabSize`    | 256       | TextOps.encode |
   * | `graft.coverage.vocabSizes` | 4,8,16,32 | TextOps.vocabCoverage |
   * | `graft.coverage.selectK`    | 10        | Curation.coverageSelect |

@@ -619,10 +619,11 @@ object Dedup {
     * algorithm sizes K so within-cluster pairs stay tractable (√N-ish
     * clusters), which is exactly the centroid-count seam.
     *
-    * Scale shape: assignment is a broadcast typed kernel (O(K) flops
-    * per vector, no shuffle); the candidate generator is an equi-join on
-    * cid — never all-pairs across clusters; exact cosine verifies inside
-    * the join projection.
+    * Scale shape: assignment is the IVF assignment kernel
+    * ([[Similarity.assignOf]] — broadcast centroids, O(K) flops per
+    * vector, no shuffle, the vector carried through); the candidate
+    * generator is an equi-join on cid — never all-pairs across
+    * clusters; exact cosine verifies inside the join projection.
     */
   def semantic(spark: SparkSession, dir: String): DataFrame =
     semanticOf(Tables(spark, dir, "embeddings")
@@ -630,18 +631,10 @@ object Dedup {
 
   def semanticOf(emb: DataFrame, kmeansIters: Int = 0): DataFrame = {
     val spark = emb.sparkSession
-    val s = spark; import s.implicits._
-    val cents = Similarity.kmeansCentroids(emb, kmeansIters)
-    val bc = spark.sparkContext.broadcast(cents)
-    val assign = emb.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, e) => (id, Similarity.nearestCid(cs, e)) }
-      }
-      .toDF("vec_id", "cid")
     // both sides of the cluster self-join read the materialized table —
     // without the cut the O(N·K) assignment kernel runs twice
-    val withC = Materialize.Local(emb.join(assign, "vec_id"))
+    val withC = Materialize.Local(Similarity.assignOf(emb,
+      Similarity.kmeansCentroids(emb, kmeansIters)))
     withC.as("A").join(withC.as("B"),
         col("A.cid") === col("B.cid")
           && col("A.vec_id") < col("B.vec_id"))

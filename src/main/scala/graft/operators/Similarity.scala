@@ -77,26 +77,39 @@ object Similarity {
   def bruteForceTopK(spark: SparkSession, dir: String): DataFrame =
     bruteForceTopKOf(emb(spark, dir), nq(spark))
 
-  /** All (query, neighbor, cosine) pairs: queries broadcast, corpus
-    * scanned partition-parallel by a typed kernel.
+  /** The one broadcast-query pair kernel: the queries (ids <
+    * nQueries, with their labels) ride a broadcast and every
+    * (vec_id, e, label) corpus row is scored against them where it
+    * lives. With `crossLabel` only pairs whose labels differ survive,
+    * filtered INSIDE the kernel so excluded pairs never materialize.
+    * (query_id, neighbor_id, neighbor_label, cos_sim).
     */
-  private def scoredPairs(corpusDf: DataFrame, nQueries: Long): DataFrame = {
+  private def pairsOf(corpusDf: DataFrame, nQueries: Long,
+      crossLabel: Boolean): DataFrame = {
     val spark = corpusDf.sparkSession
     val s = spark; import s.implicits._
-    val corpus = corpusDf.as[(Long, Array[Double])]
+    val corpus = corpusDf.as[(Long, Array[Double], Int)]
     val queries = corpus.filter(_._1 < nQueries).collect().sortBy(_._1)
     val bc = spark.sparkContext.broadcast(queries)
     corpus
       .mapPartitions { it =>
         val qs = bc.value
-        it.flatMap { case (nid, e) =>
-          qs.iterator.filter(_._1 != nid).map { case (qid, qe) =>
-            (qid, nid, Hashing.cosineSeq(qe, e))
-          }
+        it.flatMap { case (nid, e, nlbl) =>
+          qs.iterator
+            .filter(q => q._1 != nid && !(crossLabel && q._3 == nlbl))
+            .map { case (qid, qe, _) =>
+              (qid, nid, nlbl, Hashing.cosineSeq(qe, e))
+            }
         }
       }
-      .toDF("query_id", "neighbor_id", "cos_sim")
+      .toDF("query_id", "neighbor_id", "neighbor_label", "cos_sim")
   }
+
+  /** All (query, neighbor, cosine) pairs of an unlabeled corpus. */
+  private def scoredPairs(corpusDf: DataFrame, nQueries: Long): DataFrame =
+    pairsOf(corpusDf.select(col(corpusDf.columns(0)),
+      col(corpusDf.columns(1)), lit(0)), nQueries, crossLabel = false)
+      .drop("neighbor_label")
 
   /** Any (vec_id, e: ARRAY<DOUBLE>) corpus; queries = ids < nQueries. */
   def bruteForceTopKOf(corpusDf: DataFrame, nQueries: Long): DataFrame =
@@ -158,27 +171,10 @@ object Similarity {
         col("label")), nq(spark))
 
   /** Any (vec_id, e: ARRAY<DOUBLE>, label: INT) corpus. */
-  def hardNegativesOf(corpusDf: DataFrame, nQueries: Long): DataFrame = {
-    val spark = corpusDf.sparkSession
-    val s = spark; import s.implicits._
-    val corpus = corpusDf.as[(Long, Array[Double], Int)]
-    val queries = corpus.filter(_._1 < nQueries).collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(queries)
-    corpus
-      .mapPartitions { it =>
-        val qs = bc.value
-        it.flatMap { case (nid, e, nlbl) =>
-          qs.iterator
-            .filter(q => q._1 != nid && q._3 != nlbl)
-            .map { case (qid, qe, _) =>
-              (qid, nid, nlbl, Hashing.cosineSeq(qe, e))
-            }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "neighbor_label", "cos_sim")
+  def hardNegativesOf(corpusDf: DataFrame, nQueries: Long): DataFrame =
+    pairsOf(corpusDf, nQueries, crossLabel = true)
       .withColumn("rank", row_number().over(rankWindow))
       .where(col("rank") <= TopK)
-  }
 
   /** Same answer through the custom bounded-heap aggregate
     * ([[graft.functions.TopKAgg]]) instead of the ranking window: the
@@ -251,130 +247,145 @@ object Similarity {
   val NumCentroidsConf = "graft.sim.numCentroids"
   val NumProbes = 7
 
-  /** Nearest centroid by cosine; ties → lower cid (cs sorted by cid).
-    * Shared with [[Dedup.semanticOf]]'s cluster assignment.
+  // ---- the quantizer core: one trainer, one assignment, one probe ----
+
+  /** Id of the centroid nearest `e`'s subvector at `off` (each
+    * centroid's length of dims; 0 when none scores): the highest
+    * [[Hashing.cosineSeq]] for a cosine quantizer (one subspace, the
+    * whole vector), the lowest squared L2 for an `l2` one — the PQ
+    * metric, where subvector norms matter. Distances accumulate in
+    * ascending-index order, bit-equal to the oracle's list_reduce
+    * folds; the FIRST best wins, so over a cid-ascending `cs` ties go
+    * to the lower id, == the oracle's (score, cid ASC) row_number.
     */
-  private[operators] def nearestCid(cs: Array[(Long, Array[Double])],
-                         e: Array[Double]): Long = {
+  private def nearest(cs: Array[(Long, Array[Double])], e: Array[Double],
+      off: Int, l2: Boolean): Long = {
     var best = Double.NegativeInfinity
     var bestC = 0L
-    cs.foreach { case (cid, ce) =>
-      val c = Hashing.cosineSeq(e, ce)
-      if (c > best) { best = c; bestC = cid }
+    var c = 0
+    while (c < cs.length) {
+      val ce = cs(c)._2
+      val s =
+        if (!l2) Hashing.cosineSeq(e, ce)
+        else {
+          var d = 0.0
+          var i = 0
+          while (i < ce.length) {
+            val t = e(off + i) - ce(i); d += t * t; i += 1
+          }
+          -d
+        }
+      if (s > best) { best = s; bestC = cs(c)._1 }
+      c += 1
     }
     bestC
   }
 
-  /** Spherical-k-means coarse quantizer: `iters` Lloyd steps from the
-    * sampled seed (first [[NumCentroids]] vectors by vec_id, so
-    * `iters = 0` IS the sampled quantizer). Each step assigns every
-    * vector to its nearest centroid with the same broadcast typed kernel
-    * the index uses, then recomputes each list's mean coordinate-wise.
-    * The mean's sums go through DECIMAL(38,18) — exact, order-independent
-    * addition — so the centroids are bit-identical under any partitioning
-    * or scheduling, keeping the library's determinism guarantee through
-    * the iterative path (cosine is scale-invariant, so the unnormalized
-    * mean is a valid spherical centroid). Empty lists keep their previous
-    * centroid. Per step: one broadcast of K vectors, one map pass, one
-    * partial-aggregated shuffle of N·dims (cid, pos, x) rows — no
-    * driver-side data beyond the K centroids.
+  /** The one Lloyd trainer — the reference's per-partition fold then
+    * global average, iterated (`multilinereg.java`). `subspaces`
+    * quantizers over equal consecutive slices of each vector (1 = the
+    * whole vector), each seeded with the first `k` vectors by vec_id —
+    * so `iters = 0` IS the sampled quantizer, and fixture ids are
+    * 0…k−1 — then `iters` steps under the cosine or `l2` metric of
+    * [[nearest]]. A step assigns every slice of every vector against
+    * the broadcast book in one typed pass and recomputes every
+    * (subspace, cid) mean coordinate-wise in ONE aggregation grouped on
+    * (subspace, cid, pos). The sums go through StableSum's DECIMAL
+    * recipe — exact, order-independent addition — cast to double, THEN
+    * one IEEE division: replayable verbatim by the oracle's dsumSql
+    * (which is what lets the trained quantizers sit behind the hash
+    * gate), and bit-identical under any partitioning or grouping.
+    * Cosine is scale-invariant, so the unnormalized mean is a valid
+    * spherical centroid. Empty lists keep their previous centroid.
+    * Cost: one seed collect, then one job per step whatever the
+    * subspace count; the driver holds the book and nothing else.
     */
-  def kmeansCentroids(corpusDf: DataFrame, iters: Int,
-                      k: Int = NumCentroids)
-      : Array[(Long, Array[Double])] = {
+  private def lloyd(corpusDf: DataFrame, k: Int, subspaces: Int,
+      l2: Boolean, iters: Int): Array[Array[(Long, Array[Double])]] = {
     val spark = corpusDf.sparkSession
     val s = spark; import s.implicits._
     val corpus = corpusDf.as[(Long, Array[Double])]
-    var cents = corpus.filter(_._1 < k).collect().sortBy(_._1)
+    val seed = corpus.filter(_._1 < k).collect().sortBy(_._1)
+    val w = if (seed.isEmpty) 0 else seed.head._2.length / subspaces
+    var book = Array.tabulate(subspaces) { m =>
+      seed.map { case (id, e) =>
+        (id, java.util.Arrays.copyOfRange(e, m * w, (m + 1) * w))
+      }
+    }
     var i = 0
-    while (i < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
+    while (i < iters && seed.nonEmpty) {
+      val bc = spark.sparkContext.broadcast(book)
       val means = corpus
         .mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (_, e) => (nearestCid(cs, e), e) }
+          val bk = bc.value
+          it.flatMap { case (_, e) =>
+            Iterator.tabulate(bk.length) { m =>
+              (m, nearest(bk(m), e, m * w, l2),
+                java.util.Arrays.copyOfRange(e, m * w, (m + 1) * w))
+            }
+          }
         }
-        .toDF("cid", "e")
-        .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        // the library's DECIMAL-stable mean (the embCentroids recipe):
-        // exact order-independent sum cast to double, THEN one IEEE
-        // division — replayable verbatim by the oracle's dsumSql, which
-        // is what lets the refined quantizer sit behind the hash gate
-        // (a decimal/decimal division would hit cross-engine decimal
-        // typing rules instead)
+        .toDF("m", "cid", "e")
+        .select(col("m"), col("cid"),
+          posexplode(col("e")).as(Seq("pos", "x")))
+        .groupBy("m", "cid", "pos")
         .agg((graft.functions.StableSum.dsum(col("x"))
-          / count(lit(1)).cast("double")).as("m"))
-        .groupBy("cid")
-        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), col("pm.m").as("mean"))
-        .as[(Long, Array[Double])]
-        .collect().toMap
+          / count(lit(1)).cast("double")).as("mean"))
+        .groupBy("m", "cid")
+        .agg(sort_array(collect_list(struct(col("pos"), col("mean"))))
+          .as("pm"))
+        .select(col("m"), col("cid"), col("pm.mean"))
+        .as[(Int, Long, Array[Double])]
+        .collect()
+        .map { case (m, cid, mean) => (m, cid) -> mean }.toMap
       bc.destroy() // consumed by the collect above; don't accumulate
-      cents = cents.map { case (cid, prev) =>
-        (cid, means.getOrElse(cid, prev))
+      book = book.zipWithIndex.map { case (cs, m) =>
+        cs.map { case (cid, prev) =>
+          (cid, means.getOrElse((m, cid), prev))
+        }
       }
       i += 1
     }
-    cents
+    book
   }
 
-  /** IVF top-k: assign every vector to its nearest centroid (inverted
-    * lists), probe the query's [[NumProbes]] nearest lists, score only
-    * those candidates. Assignment/probing are O(centroids) typed-kernel
-    * flops per vector with the centroid matrix broadcast; the only
-    * shuffles are the candidate equi-join on the list id and the ranking
-    * window. At 100 TB the inverted lists are the partition key — the
-    * classic ANN layout.
+  /** The one assignment kernel, the inverted-list build of every IVF
+    * path: each (vec_id, e) row → (vec_id, cid, tag, e) with cid its
+    * nearest centroid by cosine, `tag` (a LONG column of the corpus,
+    * e.g. its label) passed through, and the vector carried through
+    * `carry` (identity, or the PQ reconstruction) for the consumer that
+    * scores or groups it. Centroids broadcast; O(centroids) flops per
+    * vector, zero shuffles.
     */
-  /** Lloyd iterations behind the fixture IVF entry (and its oracle,
-    * which unrolls them as CTEs).
-    */
-  val IvfKmeansIters = 2
-
-  /** Session-lifetime trained quantizer per (session, dir, iters) — the
-    * [[Quality]] probe-cache pattern: the Lloyd refinement is a driver
-    * loop that runs at plan-build time, so without this every bench rep
-    * / every entry invocation retrains the quantizer it already has.
-    * Same lifetime contract as the other session caches (immutable
-    * fixture dirs, or invalidate at the boundary); the cached value is
-    * K in-memory vectors, not a DataFrame.
-    */
-  private val centsCache =
-    new graft.SessionCache[Array[(Long, Array[Double])]](_ => ())
-
-  private def cachedCents(spark: SparkSession, dir: String, iters: Int)
-      : Array[(Long, Array[Double])] = {
-    // K is a session-conf knob; keying the cache on it means flipping
-    // the conf mid-session retrains rather than serving a stale size
-    val k = graft.Conf.int(spark, NumCentroidsConf, NumCentroids)
-    centsCache.getOrBuild(spark, dir, (iters, k))(
-      kmeansCentroids(emb(spark, dir), iters, k))
-  }
-
-  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfTopKWith(emb(spark, dir), nq(spark),
-      cachedCents(spark, dir, IvfKmeansIters))
-
-  def ivfTopKOf(corpusDf: DataFrame, nQueries: Long,
-                kmeansIters: Int = 0): DataFrame =
-    ivfTopKWith(corpusDf, nQueries,
-      kmeansCentroids(corpusDf, kmeansIters))
-
-  private def ivfTopKWith(corpusDf: DataFrame, nQueries: Long,
-      cents: Array[(Long, Array[Double])]): DataFrame = {
+  private[operators] def assignOf(corpusDf: DataFrame,
+      cents: Array[(Long, Array[Double])],
+      carry: Array[Double] => Array[Double] = identity,
+      tag: Column = lit(0L)): DataFrame = {
     val spark = corpusDf.sparkSession
     val s = spark; import s.implicits._
-    val corpus = corpusDf.as[(Long, Array[Double])]
     val bc = spark.sparkContext.broadcast(cents)
-    val assign = corpus
+    corpusDf.select(col(corpusDf.columns(0)), col(corpusDf.columns(1)), tag)
+      .as[(Long, Array[Double], Long)]
       .mapPartitions { it =>
         val cs = bc.value
-        it.map { case (id, e) => (id, nearestCid(cs, e)) }
+        it.map { case (id, e, t) =>
+          (id, nearest(cs, e, 0, l2 = false), t, carry(e))
+        }
       }
-      .toDF("vec_id", "cid")
-    val probes = corpus
-      .filter(_._1 < nQueries)
+      .toDF("vec_id", "cid", "tag", "e")
+  }
+
+  /** The one probe kernel: each (vec_id, e) query → its [[NumProbes]]
+    * nearest lists (qid, cid) by cosine, ties → lower cid — the exact
+    * score-then-prune top-k of Continuously Adaptive Similarity Search
+    * (PAPERS.md) over the broadcast centroids.
+    */
+  private def probesOf(queryDf: DataFrame,
+      cents: Array[(Long, Array[Double])]): DataFrame = {
+    val spark = queryDf.sparkSession
+    val s = spark; import s.implicits._
+    val bc = spark.sparkContext.broadcast(cents)
+    queryDf.as[(Long, Array[Double])]
       .mapPartitions { it =>
         val cs = bc.value
         it.flatMap { case (qid, e) =>
@@ -385,17 +396,98 @@ object Similarity {
         }
       }
       .toDF("qid", "cid")
-    val cand = probes.join(assign, "cid")
+  }
+
+  /** The one IVF serve: each (vec_id, e) row of `queryDf` probes its
+    * [[NumProbes]] nearest lists of the `corpusDf` index built on
+    * `cents`, and only those lists' members are scored — by exact
+    * cosine, or with a PQ `book` by the ADC dot of the query against
+    * each member's reconstruction. A query drawn from the corpus is not
+    * its own neighbor. Assignment/probing are O(centroids) typed-kernel
+    * flops per vector with the centroids broadcast; the only shuffles
+    * are the candidate equi-join on the list id (at 100 TB the inverted
+    * lists are the partition key — the classic ANN layout), the query
+    * vector fetch and the per-query rank (WindowGroupLimit-eligible).
+    */
+  private def ivfServe(corpusDf: DataFrame, queryDf: DataFrame,
+      cents: Array[(Long, Array[Double])],
+      book: Option[Array[Array[(Long, Array[Double])]]] = None)
+      : DataFrame = {
+    val spark = corpusDf.sparkSession
+    val (name, score, carry) = book match {
+      case None => ("cos_sim",
+        Hashing.cosineNative(spark, col("qe"), col("e")),
+        identity[Array[Double]] _)
+      case Some(b) =>
+        val bc = spark.sparkContext.broadcast(b)
+        ("pq_dot", graft.functions.DotProduct.dot(spark, col("qe"), col("e")),
+          (e: Array[Double]) => pqReconstruct(bc.value, e))
+    }
+    probesOf(queryDf, cents)
+      .join(assignOf(corpusDf, cents, carry), "cid")
       .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"))
-    cand
-      .join(corpusDf.as("A"), col("qid") === col("A.vec_id"))
-      .join(corpusDf.as("B"), col("nid") === col("B.vec_id"))
-      .select(col("qid").as("query_id"), col("nid").as("neighbor_id"),
-        Hashing.cosineNative(spark, col("A.e"), col("B.e")).as("cos_sim"))
-      .withColumn("rank", row_number().over(rankWindow))
+      .join(queryDf.select(col("vec_id").as("qid"), col("e").as("qe")),
+        "qid")
+      .select(col("qid").as("query_id"), col("vec_id").as("neighbor_id"),
+        score.as(name))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col(name).desc, col("neighbor_id").asc)))
       .where(col("rank") <= TopK)
   }
+
+  /** Spherical-k-means coarse quantizer: [[lloyd]] with the cosine
+    * metric over the whole vector, `iters` steps from the sampled seed
+    * (the first `k` vectors by vec_id). Per step: one broadcast of K
+    * vectors, one map pass, one partial-aggregated shuffle of N·dims
+    * (cid, pos, x) rows — no driver-side data beyond the K centroids.
+    */
+  def kmeansCentroids(corpusDf: DataFrame, iters: Int,
+                      k: Int = NumCentroids)
+      : Array[(Long, Array[Double])] =
+    lloyd(corpusDf, k, 1, l2 = false, iters)(0)
+
+  /** Lloyd iterations behind the fixture IVF entry (and its oracle,
+    * which unrolls them as CTEs).
+    */
+  val IvfKmeansIters = 2
+
+  /** Session-lifetime trained quantizers per (session, dir, sub-key) —
+    * the coarse IVF centroids keyed ("ivf", K) and the PQ codebook
+    * keyed "pq"; the [[Quality]] probe-cache pattern: Lloyd training is
+    * a driver loop that runs at plan-build time, so without this every
+    * bench rep / every entry invocation retrains the quantizer it
+    * already has. Same lifetime contract as the other session caches
+    * (immutable fixture dirs, or invalidate at the boundary); the
+    * cached value is the book of in-memory vectors, not a DataFrame.
+    */
+  private val bookCache =
+    new graft.SessionCache[Array[Array[(Long, Array[Double])]]](_ => ())
+
+  private def cachedCents(spark: SparkSession, dir: String)
+      : Array[(Long, Array[Double])] = {
+    // K is a session-conf knob; keying the cache on it means flipping
+    // the conf mid-session retrains rather than serving a stale size
+    val k = graft.Conf.int(spark, NumCentroidsConf, NumCentroids)
+    bookCache.getOrBuild(spark, dir, ("ivf", k))(
+      lloyd(emb(spark, dir), k, 1, l2 = false, IvfKmeansIters))(0)
+  }
+
+  /** IVF top-k: assign every vector to its nearest centroid (inverted
+    * lists), probe the query's [[NumProbes]] nearest lists, score only
+    * those candidates — [[ivfServe]] with the first nQueries vectors
+    * as the query side.
+    */
+  def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
+    val corpus = emb(spark, dir)
+    ivfServe(corpus, corpus.where(col("vec_id") < nq(spark)),
+      cachedCents(spark, dir))
+  }
+
+  def ivfTopKOf(corpusDf: DataFrame, nQueries: Long,
+                kmeansIters: Int = 0): DataFrame =
+    ivfServe(corpusDf, corpusDf.where(col("vec_id") < nQueries),
+      kmeansCentroids(corpusDf, kmeansIters))
 
   /** Incremental ANN serving — the index-refresh cadence every vector
     * store runs: the IVF quantizer and inverted lists are built from
@@ -405,15 +497,12 @@ object Similarity {
     * probes its [[NumProbes]] nearest cells and scores only their
     * members. The batch-vs-corpus sibling of
     * [[Dedup.minhashLshAgainstIndex]], for similarity serving instead
-    * of dedup. Queries and corpus are disjoint by construction, so no
-    * self-pair filter is needed; neighbors always come from the index
-    * side (spec-pinned).
+    * of dedup; neighbors always come from the index side
+    * (spec-pinned).
     *
     * Scale shape: centroids train on the corpus snapshot (bounded
-    * driver state, the FAISS pattern); assignment and probing are
-    * O(centroids) broadcast flops per vector, zero shuffles; the only
-    * exchanges are the probe→list equi-join and the per-query top-k
-    * rank (WindowGroupLimit-eligible).
+    * driver state, the FAISS pattern); the serve is [[ivfServe]] with
+    * the batch as its query side.
     */
   def simIncremental(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir)
@@ -425,37 +514,8 @@ object Similarity {
   }
 
   def simIncrementalOf(corpusDf: DataFrame, batchDf: DataFrame,
-                       kmeansIters: Int = 0): DataFrame = {
-    val spark = corpusDf.sparkSession
-    val s = spark; import s.implicits._
-    val bc = spark.sparkContext.broadcast(
-      kmeansCentroids(corpusDf, kmeansIters))
-    val assign = corpusDf.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, e) => (id, nearestCid(cs, e)) }
-      }
-      .toDF("vec_id", "cid")
-    val probes = batchDf.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.flatMap { case (qid, e) =>
-          cs.map { case (cid, ce) => (cid, Hashing.cosineSeq(e, ce)) }
-            .sortBy { case (cid, c) => (-c, cid) }
-            .take(NumProbes)
-            .map { case (cid, _) => (qid, cid) }
-        }
-      }
-      .toDF("qid", "cid")
-    probes.join(assign, "cid")
-      .select(col("qid"), col("vec_id").as("nid"))
-      .join(batchDf.as("A"), col("qid") === col("A.vec_id"))
-      .join(corpusDf.as("B"), col("nid") === col("B.vec_id"))
-      .select(col("qid").as("query_id"), col("nid").as("neighbor_id"),
-        Hashing.cosineNative(spark, col("A.e"), col("B.e")).as("cos_sim"))
-      .withColumn("rank", row_number().over(rankWindow))
-      .where(col("rank") <= TopK)
-  }
+                       kmeansIters: Int = 0): DataFrame =
+    ivfServe(corpusDf, batchDf, kmeansCentroids(corpusDf, kmeansIters))
 
   /** Per-cluster sample cap for [[sampleCluster]]: at 16 clusters over
     * the sf0.01 fixture's 500 vectors (~31/cluster mean) a cap of 20
@@ -466,7 +526,7 @@ object Similarity {
 
   /** Cluster-balanced embedding sampling — the SemDeDup / DataComp-style
     * diversity cap: assign every vector to its nearest coarse-quantizer
-    * centroid (the IVF assignment, reused verbatim), then keep at most
+    * centroid ([[assignOf]], the IVF assignment), then keep at most
     * [[ClusterSampleCap]] vectors per cluster, chosen by the library's
     * deterministic md5 order (the `llm_sample_topn` rule — a seedless,
     * engine-reproducible uniform draw). Dense regions of embedding
@@ -484,8 +544,7 @@ object Similarity {
     * sizes are a map-side-combined count to K rows, broadcast back.
     */
   def sampleCluster(spark: SparkSession, dir: String): DataFrame =
-    sampleClusterWith(emb(spark, dir),
-      cachedCents(spark, dir, IvfKmeansIters))
+    sampleClusterWith(emb(spark, dir), cachedCents(spark, dir))
 
   def sampleClusterOf(corpusDf: DataFrame, kmeansIters: Int = 0)
       : DataFrame =
@@ -506,20 +565,11 @@ object Similarity {
       emb(spark, dir).join(
         ids.select(col("doc_id").as("vec_id")), Seq("vec_id"),
         "left_semi"),
-      cachedCents(spark, dir, IvfKmeansIters))
+      cachedCents(spark, dir))
 
   private def sampleClusterWith(corpusDf: DataFrame,
       cents: Array[(Long, Array[Double])]): DataFrame = {
-    val spark = corpusDf.sparkSession
-    val s = spark; import s.implicits._
-    val corpus = corpusDf.as[(Long, Array[Double])]
-    val bc = spark.sparkContext.broadcast(cents)
-    val assign = corpus
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, e) => (id, nearestCid(cs, e)) }
-      }
-      .toDF("vec_id", "cid")
+    val assign = assignOf(corpusDf, cents).select("vec_id", "cid")
     val sizes = assign.groupBy("cid")
       .agg(count(lit(1)).as("cluster_n"))
     assign
@@ -714,7 +764,7 @@ object Similarity {
     * the MMR re-ranker, and the recall audit all read these, and
     * without the cache each invocation re-quantized and re-scored the
     * whole corpus (the r10 MMR residual: ~2 s of shortlist corpus pass
-    * per call). Same lifetime contract as [[centsCache]] (immutable
+    * per call). Same lifetime contract as [[bookCache]] (immutable
     * fixture dirs, or invalidate at the boundary); get/putIfAbsent
     * so no map lock spans the build, a lost race releases its extra
     * checkpoints.
@@ -773,30 +823,43 @@ object Similarity {
     * Scale shape: one broadcast-kernel corpus scan per budget (the
     * [[bruteForceTopKOf]] shape — the corpus never shuffles for
     * scoring), one semi-join per budget against the checkpointed exact
-    * set, bounded output. Truncation is a row-local slice.
+    * set ([[recallTally]]), bounded output. Truncation is a row-local
+    * slice.
     */
   def matryoshka(spark: SparkSession, dir: String): DataFrame = {
     val budgets = graft.Conf.longs(spark, MrlBudgetsConf,
-      MrlBudgets.map(_.toLong)).map(_.toInt)
+      MrlBudgets.map(_.toLong))
     val vecs = emb(spark, dir)
     val n = nq(spark)
-    val exact = bruteForceTopKOf(vecs, n)
-      .select("query_id", "neighbor_id").localCheckpoint()
-    val total = exact.agg(count(lit(1)).as("n_exact"))
-    val per = budgets.map { b =>
-      bruteForceTopKOf(
-        vecs.select(col("vec_id"), slice(col("e"), 1, b).as("e")), n)
-        .select(lit(b.toLong).as("dims"), col("query_id"),
-          col("neighbor_id"))
-    }.reduce(_.unionByName(_))
-    val hits = per
-      .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("dims").agg(count(lit(1)).as("n_hit"))
     val s = spark; import s.implicits._
-    val out = budgets.map(_.toLong).toDF("dims")
-      .join(hits, Seq("dims"), "left")
+    recallTally(bruteForceTopKOf(vecs, n), budgets.toDF("dims"),
+      budgets.map { b =>
+        bruteForceTopKOf(
+          vecs.select(col("vec_id"), slice(col("e"), 1, b.toInt).as("e")),
+          n).select(lit(b).as("dims"), col("query_id"), col("neighbor_id"))
+      }.reduce(_.unionByName(_)))
+  }
+
+  /** The one recall tally behind [[simRecall]] and [[matryoshka]]: the
+    * exact top-k pairs are cut once (they feed the denominator and the
+    * semi-join probe); `approx` — (tag, query_id, neighbor_id) rows,
+    * one stream per tag — semi-joins them into per-tag hit counts, and
+    * every tag of the one-column `tags` reports (tag, n_exact, n_hit,
+    * recall). The result is forced and the exact cut released before
+    * returning, so no cut outlives the call.
+    */
+  private def recallTally(exactTopK: DataFrame, tags: DataFrame,
+      approx: DataFrame): DataFrame = {
+    val tag = tags.columns(0)
+    val exact = exactTopK.select("query_id", "neighbor_id").localCheckpoint()
+    val total = exact.agg(count(lit(1)).as("n_exact"))
+    val hits = approx
+      .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy(tag).agg(count(lit(1)).as("n_hit"))
+    val out = tags
+      .join(hits, Seq(tag), "left")
       .crossJoin(broadcast(total))
-      .select(col("dims"), col("n_exact"),
+      .select(col(tag), col("n_exact"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"),
         (coalesce(col("n_hit"), lit(0L)).cast("double")
           / col("n_exact").cast("double")).as("recall"))
@@ -1039,81 +1102,18 @@ object Similarity {
   /** Lloyd steps per sub-quantizer (unrolled in the oracle). */
   val PqKmeansIters = 2
 
-  /** Nearest sub-centroid by squared L2 (the PQ metric — subvector
-    * norms matter, unlike the coarse quantizer's spherical cosine);
-    * strict `<` keeps the FIRST best over the cid-ascending array, ==
-    * the oracle's (d ASC, code ASC) row_number. Distances accumulate
-    * in ascending-index order, bit-equal to DuckDB's list_reduce fold.
+  /** The trained PQ codebook of any (vec_id, e) corpus: [[lloyd]] with
+    * the L2 metric over [[PqSubspaces]] subspaces, [[PqKmeansIters]]
+    * steps from the sampled seed (the first [[PqCodes]] vec_ids, so
+    * code ids are 0…K−1) — replayable by the oracle's unrolled CTEs.
     */
-  private def nearestCodeL2(cs: Array[(Long, Array[Double])],
-      e: Array[Double]): Long = {
-    var best = Double.PositiveInfinity
-    var bestC = 0L
-    cs.foreach { case (cid, ce) =>
-      var d = 0.0
-      var i = 0
-      while (i < e.length) { val t = e(i) - ce(i); d += t * t; i += 1 }
-      if (d < best) { best = d; bestC = cid }
-    }
-    bestC
-  }
-
-  /** One sub-quantizer: deterministic L2 Lloyd from the sampled seed
-    * (first [[PqCodes]] vec_ids, so code ids are 0…K−1), means through
-    * the DECIMAL-stable sum — the [[kmeansCentroids]] recipe with the
-    * metric swapped, so the trained codebook is bit-identical under any
-    * partitioning and replayable by the oracle's unrolled CTEs.
-    */
-  private def pqSubCentroids(subDf: DataFrame,
-      iters: Int): Array[(Long, Array[Double])] = {
-    val spark = subDf.sparkSession
-    val s = spark; import s.implicits._
-    val corpus = subDf.as[(Long, Array[Double])]
-    var cents = corpus.filter(_._1 < PqCodes).collect().sortBy(_._1)
-    var i = 0
-    while (i < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val means = corpus
-        .mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (_, e) => (nearestCodeL2(cs, e), e) }
-        }
-        .toDF("cid", "e")
-        .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg((graft.functions.StableSum.dsum(col("x"))
-          / count(lit(1)).cast("double")).as("m"))
-        .groupBy("cid")
-        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), col("pm.m").as("mean"))
-        .as[(Long, Array[Double])]
-        .collect().toMap
-      bc.destroy()
-      cents = cents.map { case (cid, prev) =>
-        (cid, means.getOrElse(cid, prev))
-      }
-      i += 1
-    }
-    cents
-  }
-
-  /** Session-lifetime codebook (the [[centsCache]] contract): training
-    * is a driver loop at plan-build time; the cached value is
-    * [[PqSubspaces]]·[[PqCodes]] short vectors.
-    */
-  private val pqCache =
-    new graft.SessionCache[Array[Array[(Long, Array[Double])]]](_ => ())
+  def pqCodebookOf(corpusDf: DataFrame)
+      : Array[Array[(Long, Array[Double])]] =
+    lloyd(corpusDf, PqCodes, PqSubspaces, l2 = true, PqKmeansIters)
 
   private def cachedCodebook(spark: SparkSession, dir: String)
       : Array[Array[(Long, Array[Double])]] =
-    pqCache.getOrBuild(spark, dir) {
-      val e = emb(spark, dir)
-      (0 until PqSubspaces).map { m =>
-        pqSubCentroids(e.select(col("vec_id"),
-          slice(col("e"), m * PqSubDim + 1, PqSubDim).as("e")),
-          PqKmeansIters)
-      }.toArray
-    }
+    bookCache.getOrBuild(spark, dir, "pq")(pqCodebookOf(emb(spark, dir)))
 
   /** The session-cached trained codebook (read-only view for audits
     * and specs): `book(m)` = the [[PqCodes]] (code, centroid) pairs of
@@ -1121,6 +1121,22 @@ object Similarity {
     */
   def pqCodebook(spark: SparkSession, dir: String)
       : Array[Array[(Long, Array[Double])]] = cachedCodebook(spark, dir)
+
+  /** PQ encode → reconstruct, the one copy: per subspace the L2-nearest
+    * sub-centroid ([[nearest]]), concatenated. Seed ids are 0…K−1, so
+    * a code indexes the codebook array directly.
+    */
+  private def pqReconstruct(book: Array[Array[(Long, Array[Double])]],
+      e: Array[Double]): Array[Double] = {
+    val r = new Array[Double](e.length)
+    var m = 0
+    while (m < book.length) {
+      val code = nearest(book(m), e, m * PqSubDim, l2 = true).toInt
+      System.arraycopy(book(m)(code)._2, 0, r, m * PqSubDim, PqSubDim)
+      m += 1
+    }
+    r
+  }
 
   /** PQ-ADC top-k: every corpus vector is encoded (per subspace, the
     * nearest sub-centroid) and scored against the full-precision query
@@ -1139,14 +1155,8 @@ object Similarity {
   def pqTopK(spark: SparkSession, dir: String): DataFrame =
     pqTopKWith(emb(spark, dir), nq(spark), cachedCodebook(spark, dir))
 
-  def pqTopKOf(corpusDf: DataFrame, nQueries: Long): DataFrame = {
-    val book = (0 until PqSubspaces).map { m =>
-      pqSubCentroids(corpusDf.select(col(corpusDf.columns(0)),
-        slice(col(corpusDf.columns(1)),
-          m * PqSubDim + 1, PqSubDim).as("e")), PqKmeansIters)
-    }.toArray
-    pqTopKWith(corpusDf, nQueries, book)
-  }
+  def pqTopKOf(corpusDf: DataFrame, nQueries: Long): DataFrame =
+    pqTopKWith(corpusDf, nQueries, pqCodebookOf(corpusDf))
 
   private def pqTopKWith(corpusDf: DataFrame, nQueries: Long,
       book: Array[Array[(Long, Array[Double])]]): DataFrame = {
@@ -1161,22 +1171,9 @@ object Similarity {
         val bk = bcBook.value
         val qs = bcQ.value
         it.flatMap { case (nid, e) =>
-          // encode + reconstruct: seed ids are 0…K−1, so the code
-          // indexes the codebook array directly
-          val r = new Array[Double](e.length)
-          var m = 0
-          while (m < PqSubspaces) {
-            val sub = java.util.Arrays.copyOfRange(
-              e, m * PqSubDim, (m + 1) * PqSubDim)
-            val code = nearestCodeL2(bk(m), sub).toInt
-            System.arraycopy(bk(m)(code)._2, 0, r, m * PqSubDim, PqSubDim)
-            m += 1
-          }
+          val r = pqReconstruct(bk, e)
           qs.iterator.filter(_._1 != nid).map { case (qid, qe) =>
-            var acc = 0.0
-            var i = 0
-            while (i < qe.length) { acc += qe(i) * r(i); i += 1 }
-            (qid, nid, acc)
+            (qid, nid, Hashing.dotSeq(qe, r))
           }
         }
       }
@@ -1261,79 +1258,13 @@ object Similarity {
     (m, x)
   }
 
-  /** Per-vector first-principal-component score — distributed PCA with
-    * the trained direction riding the session cache like the IVF
-    * centroids and PQ codebook. The projection is a row-local centered
-    * dot (ascending fold, broadcast mean + direction): the corpus never
-    * shuffles to be scored, the shape every whitening / 1-D
-    * embedding-compression pass needs. The covariance build's 64²-cell
-    * explode amplifies CPU, not shuffle — map-side combine reduces the
-    * exchange to dims² rows per partition.
+  /** The one centered-pc1 fold behind [[embPca]], [[embAbtt]] and
+    * [[abttEval]]: per vector, pc1 = Σ (e_i − mean_i)·v_i (ascending
+    * fold against the broadcast (mean, direction)) and the ABTT vector
+    * w_i = (e_i − mean_i) − pc1·v_i. Row-local, zero shuffles.
+    * (vec_id, pc1, w).
     */
-  def embPca(spark: SparkSession, dir: String): DataFrame =
-    embPcaWith(emb(spark, dir), cachedPca(spark, dir))
-
-  def embPcaOf(corpusDf: DataFrame): DataFrame =
-    embPcaWith(corpusDf, pcaOf(corpusDf))
-
-  private def embPcaWith(corpusDf: DataFrame,
-      mv: (Array[Double], Array[Double])): DataFrame = {
-    val spark = corpusDf.sparkSession
-    val s = spark; import s.implicits._
-    val bc = spark.sparkContext.broadcast(mv)
-    corpusDf.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (mm, vv) = bc.value
-        it.map { case (id, e) =>
-          var acc = 0.0
-          var i = 0
-          while (i < e.length) { acc += (e(i) - mm(i)) * vv(i); i += 1 }
-          (id, acc)
-        }
-      }
-      .toDF("vec_id", "pc1")
-  }
-
-  /** All-but-the-top embedding post-processing (Mu & Viswanath, ICLR
-    * 2018): subtract the corpus mean and remove the top principal
-    * component — the dominant direction is common-mode (frequency)
-    * energy, and removing it measurably improves cosine-similarity
-    * quality on most embedding tables. Rides the SAME session-cached
-    * (mean, direction) as [[embPca]]; entirely row-local per vector
-    * (one centered-dot fold + one fused multiply-subtract per dim),
-    * exploded to (vec_id, dim, w) rows so every cell is hash-gated.
-    */
-  def embAbtt(spark: SparkSession, dir: String): DataFrame =
-    embAbttWith(emb(spark, dir), cachedPca(spark, dir))
-
-  def embAbttOf(corpusDf: DataFrame): DataFrame =
-    embAbttWith(corpusDf, pcaOf(corpusDf))
-
-  private def embAbttWith(corpusDf: DataFrame,
-      mv: (Array[Double], Array[Double])): DataFrame = {
-    val spark = corpusDf.sparkSession
-    val s = spark; import s.implicits._
-    val bc = spark.sparkContext.broadcast(mv)
-    corpusDf.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (mm, vv) = bc.value
-        it.flatMap { case (id, e) =>
-          var pc1 = 0.0
-          var i = 0
-          while (i < e.length) { pc1 += (e(i) - mm(i)) * vv(i); i += 1 }
-          val p = pc1
-          (0 until e.length).iterator.map { i =>
-            (id, (i + 1).toLong, (e(i) - mm(i)) - p * vv(i))
-          }
-        }
-      }
-      .toDF("vec_id", "dim", "w")
-  }
-
-  /** The ABTT transform as full vectors (internal: feeds the retrieval
-    * A/B, where cosine needs the whole processed row).
-    */
-  private def abttVectors(corpusDf: DataFrame,
+  private def pc1Of(corpusDf: DataFrame,
       mv: (Array[Double], Array[Double])): DataFrame = {
     val spark = corpusDf.sparkSession
     val s = spark; import s.implicits._
@@ -1351,11 +1282,57 @@ object Similarity {
             w(i) = (e(i) - mm(i)) - pc1 * vv(i)
             i += 1
           }
-          (id, w)
+          (id, pc1, w)
         }
       }
-      .toDF("vec_id", "e")
+      .toDF("vec_id", "pc1", "w")
   }
+
+  /** Per-vector first-principal-component score — distributed PCA with
+    * the trained direction riding the session cache like the IVF
+    * centroids and PQ codebook. The projection is a row-local centered
+    * dot ([[pc1Of]]): the corpus never shuffles to be scored, the
+    * shape every whitening / 1-D embedding-compression pass needs. The
+    * covariance build's 64²-cell explode amplifies CPU, not shuffle —
+    * map-side combine reduces the exchange to dims² rows per partition.
+    */
+  def embPca(spark: SparkSession, dir: String): DataFrame =
+    embPcaWith(emb(spark, dir), cachedPca(spark, dir))
+
+  def embPcaOf(corpusDf: DataFrame): DataFrame =
+    embPcaWith(corpusDf, pcaOf(corpusDf))
+
+  private def embPcaWith(corpusDf: DataFrame,
+      mv: (Array[Double], Array[Double])): DataFrame =
+    pc1Of(corpusDf, mv).select("vec_id", "pc1")
+
+  /** All-but-the-top embedding post-processing (Mu & Viswanath, ICLR
+    * 2018): subtract the corpus mean and remove the top principal
+    * component — the dominant direction is common-mode (frequency)
+    * energy, and removing it measurably improves cosine-similarity
+    * quality on most embedding tables. Rides the SAME session-cached
+    * (mean, direction) as [[embPca]]: [[abttVectors]] exploded to
+    * (vec_id, dim, w) rows so every cell is hash-gated.
+    */
+  def embAbtt(spark: SparkSession, dir: String): DataFrame =
+    embAbttWith(emb(spark, dir), cachedPca(spark, dir))
+
+  def embAbttOf(corpusDf: DataFrame): DataFrame =
+    embAbttWith(corpusDf, pcaOf(corpusDf))
+
+  private def embAbttWith(corpusDf: DataFrame,
+      mv: (Array[Double], Array[Double])): DataFrame =
+    abttVectors(corpusDf, mv)
+      .select(col("vec_id"), posexplode(col("e")).as(Seq("i", "w")))
+      .select(col("vec_id"), (col("i") + 1).cast("long").as("dim"),
+        col("w"))
+
+  /** The ABTT transform as full vectors (also feeds the retrieval A/B,
+    * where cosine needs the whole processed row).
+    */
+  private def abttVectors(corpusDf: DataFrame,
+      mv: (Array[Double], Array[Double])): DataFrame =
+    pc1Of(corpusDf, mv).select(col("vec_id"), col("w").as("e"))
 
   /** Does the isotropy fix actually help retrieval on THIS corpus? The
     * A/B a pipeline owner reads before switching representations:
@@ -1404,109 +1381,40 @@ object Similarity {
     * reads 16×-compressed codes while doing it — pruning × compression,
     * multiplicative.
     *
-    * Both trained artifacts ride their session caches
+    * Both trained artifacts ride the session quantizer cache
     * ([[cachedCents]] / [[cachedCodebook]]) — the index is built once
-    * per corpus, served many times. One corpus pass computes the list
-    * assignment and the PQ reconstruction row-local (centroids +
-    * codebook broadcast); candidates come from the probe⋈assignment
-    * equi-join on the list id (at scale: the inverted lists ARE the
-    * partition key, so this is the co-located read); scoring is the
-    * same ascending-index ADC fold as [[pqTopK]], bit-equal to the
-    * oracle's flat list_reduce; the ranking window prunes to k per
-    * partition map-side (WindowGroupLimit).
+    * per corpus, served many times. It is [[ivfServe]] with the
+    * codebook: one corpus pass computes the list assignment and the PQ
+    * reconstruction row-local (centroids + codebook broadcast);
+    * candidates come from the probe⋈assignment equi-join on the list
+    * id; scoring is the same ascending-index ADC dot as [[pqTopK]],
+    * bit-equal to the oracle's flat list_reduce; the ranking window
+    * prunes to k per partition map-side (WindowGroupLimit).
     *
     * Recall at sf0.01 (via [[simRecall]]): 0.804 — ivf's pruning loss
     * (0.828) compounded by pq's quantization reorder (0.912), priced
     * honestly next to both parents in the recall report.
     */
-  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTopKWith(emb(spark, dir), nq(spark),
-      cachedCents(spark, dir, IvfKmeansIters), cachedCodebook(spark, dir))
+  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
+    val corpus = emb(spark, dir)
+    ivfServe(corpus, corpus.where(col("vec_id") < nq(spark)),
+      cachedCents(spark, dir), Some(cachedCodebook(spark, dir)))
+  }
 
   /** Spec seam: trains both quantizers fresh on `corpusDf` (coarse
     * quantizer with `kmeansIters` Lloyd steps, PQ at its shipped
     * [[PqKmeansIters]]).
     */
   def ivfPqTopKOf(corpusDf: DataFrame, nQueries: Long,
-      kmeansIters: Int = 0): DataFrame = {
-    val book = (0 until PqSubspaces).map { m =>
-      pqSubCentroids(corpusDf.select(col(corpusDf.columns(0)),
-        slice(col(corpusDf.columns(1)),
-          m * PqSubDim + 1, PqSubDim).as("e")), PqKmeansIters)
-    }.toArray
-    ivfPqTopKWith(corpusDf, nQueries,
-      kmeansCentroids(corpusDf, kmeansIters), book)
-  }
-
-  private def ivfPqTopKWith(corpusDf: DataFrame, nQueries: Long,
-      cents: Array[(Long, Array[Double])],
-      book: Array[Array[(Long, Array[Double])]]): DataFrame = {
-    val spark = corpusDf.sparkSession
-    val s = spark; import s.implicits._
-    val corpus = corpusDf.as[(Long, Array[Double])]
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcB = spark.sparkContext.broadcast(book)
-    val queries = corpus.filter(_._1 < nQueries).collect().sortBy(_._1)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    // one corpus pass: inverted-list assignment + PQ encode→reconstruct,
-    // both row-local against the broadcast index artifacts
-    val enc = corpus
-      .mapPartitions { it =>
-        val cs = bcC.value
-        val bk = bcB.value
-        it.map { case (id, e) =>
-          val r = new Array[Double](e.length)
-          var m = 0
-          while (m < PqSubspaces) {
-            val sub = java.util.Arrays.copyOfRange(
-              e, m * PqSubDim, (m + 1) * PqSubDim)
-            val code = nearestCodeL2(bk(m), sub).toInt
-            System.arraycopy(bk(m)(code)._2, 0, r, m * PqSubDim, PqSubDim)
-            m += 1
-          }
-          (id, nearestCid(cs, e), r)
-        }
-      }
-      .toDF("vec_id", "cid", "recon")
-    val probes = corpus
-      .filter(_._1 < nQueries)
-      .mapPartitions { it =>
-        val cs = bcC.value
-        it.flatMap { case (qid, e) =>
-          cs.map { case (cid, ce) => (cid, Hashing.cosineSeq(e, ce)) }
-            .sortBy { case (cid, c) => (-c, cid) }
-            .take(NumProbes)
-            .map { case (cid, _) => (qid, cid) }
-        }
-      }
-      .toDF("qid", "cid")
-    probes.join(enc, "cid")
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"), col("recon"))
-      .as[(Long, Long, Array[Double])]
-      .mapPartitions { it =>
-        val qm = bcQ.value.toMap
-        it.map { case (qid, nid, r) =>
-          val qe = qm(qid)
-          var acc = 0.0
-          var i = 0
-          while (i < qe.length) { acc += qe(i) * r(i); i += 1 }
-          (qid, nid, acc)
-        }
-      }
-      .toDF("query_id", "neighbor_id", "pq_dot")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("pq_dot").desc, col("neighbor_id").asc)))
-      .where(col("rank") <= TopK)
-  }
+      kmeansIters: Int = 0): DataFrame =
+    ivfServe(corpusDf, corpusDf.where(col("vec_id") < nQueries),
+      kmeansCentroids(corpusDf, kmeansIters), Some(pqCodebookOf(corpusDf)))
 
   /** ANN recall report — the number an ANN user actually tunes
     * [[LshTables]] / [[NumProbes]] / the quantization width by: for each
     * approximate method, the fraction of the EXACT top-k pairs
-    * ([[bruteForceTopK]]) it recovers. The exact pair set is cut once
-    * (it feeds the denominator and the semi-join probe); each method
-    * contributes one tagged (query, neighbor) stream into a single
+    * ([[bruteForceTopK]]) it recovers. Each method contributes one
+    * tagged (query, neighbor) stream into [[recallTally]]'s single
     * semi-join + per-method count. SQL-expressible end-to-end, so the
     * recall itself sits behind the oracle gate: both engines replay the
     * exact AND approximate pipelines and must agree on every hit count.
@@ -1514,29 +1422,19 @@ object Similarity {
   val RecallMethods = Seq("binary", "int8", "ivf", "ivfpq", "lsh", "pq")
 
   def simRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = bruteForceTopK(spark, dir)
-      .select("query_id", "neighbor_id").localCheckpoint()
-    val total = exact.agg(count(lit(1)).as("n_exact"))
-    val approx = Seq(
-      "binary" -> binaryTopK(spark, dir),
-      "int8" -> int8TopK(spark, dir),
-      "ivf" -> ivfTopK(spark, dir),
-      "ivfpq" -> ivfPqTopK(spark, dir),
-      "lsh" -> lshTopK(spark, dir),
-      "pq" -> pqTopK(spark, dir))
-      .map { case (m, df) =>
-        df.select(lit(m).as("method"), col("query_id"), col("neighbor_id"))
-      }.reduce(_.unionByName(_))
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("method").agg(count(lit(1)).as("n_hit"))
     val s = spark; import s.implicits._
-    RecallMethods.toDF("method")
-      .join(hits, Seq("method"), "left")
-      .crossJoin(broadcast(total))
-      .select(col("method"), col("n_exact"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double")
-          / col("n_exact").cast("double")).as("recall"))
+    recallTally(bruteForceTopK(spark, dir), RecallMethods.toDF("method"),
+      Seq(
+        "binary" -> binaryTopK(spark, dir),
+        "int8" -> int8TopK(spark, dir),
+        "ivf" -> ivfTopK(spark, dir),
+        "ivfpq" -> ivfPqTopK(spark, dir),
+        "lsh" -> lshTopK(spark, dir),
+        "pq" -> pqTopK(spark, dir))
+        .map { case (m, df) =>
+          df.select(lit(m).as("method"), col("query_id"),
+            col("neighbor_id"))
+        }.reduce(_.unionByName(_)))
   }
 
   /** Cluster-label agreement of the trained IVF quantizer — the
@@ -1549,22 +1447,16 @@ object Similarity {
     * smaller label (pinned via the max-struct idiom).
     *
     * Shape: assignment is O(centroids) broadcast flops per vector
-    * (zero shuffles, the [[ivfTopK]] kernel), then two bounded
-    * aggregations over (cells × labels).
+    * (zero shuffles, [[assignOf]], the label passed through as its
+    * tag), then two bounded aggregations over (cells × labels).
     */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark; import s.implicits._
-    val cents = cachedCents(spark, dir, IvfKmeansIters)
-    val bc = spark.sparkContext.broadcast(cents)
-    val assign = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>"),
-        col("label").cast("long"))
-      .as[(Long, Array[Double], Long)]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, e, l) => (id, nearestCid(cs, e), l) }
-      }
-      .toDF("vec_id", "cid", "label")
+    val labeled = Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
+        col("label"))
+    val assign = assignOf(labeled, cachedCents(spark, dir),
+        tag = col("label").cast("long"))
+      .select(col("vec_id"), col("cid"), col("tag").as("label"))
     val cl = assign.groupBy("cid", "label").agg(count(lit(1)).as("n"))
     val per = cl.groupBy("cid")
       .agg(sum(col("n")).as("n_members"),
@@ -1781,7 +1673,7 @@ object Similarity {
        |) WHERE rank <= $TopK""".stripMargin
 
   /** Squared-L2 of two [[PqSubDim]]-dim list columns, ascending-index
-    * fold — bit-equal to [[nearestCodeL2]]'s accumulation.
+    * fold — bit-equal to [[nearest]]'s L2 accumulation.
     */
   private def pqDistSql(a: String, b: String): String =
     s"""list_reduce(list_transform(range(1, ${PqSubDim + 1}),

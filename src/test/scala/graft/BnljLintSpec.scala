@@ -32,7 +32,10 @@ class BnljLintSpec extends SparkSpecBase {
   private val Pinned: Map[String, Int] = Map(
     // apriori_freq_itemsets_txorder un-pinned r16: its freqset
     // scalar-attach crossJoin moved into the session basket-cache
-    // BUILD; the serve plan reads the checkpointed baskets directly
+    // BUILD; the serve plan reads the checkpointed baskets directly.
+    // llm_sim_recall un-pinned like llm_sim_matryoshka: its 1-row
+    // n_exact crossJoin runs inside the recall tally's forced cut, so
+    // the returned plan is a scan of that cut
     "apriori_rules_metrics" -> 1,
     "graph_als_recs" -> 1,
     "graph_rich_club" -> 2,
@@ -64,7 +67,6 @@ class BnljLintSpec extends SparkSpecBase {
     "llm_quantile_sketch" -> 4,
     "llm_query_expansion" -> 1,
     "llm_sample_pps" -> 1,
-    "llm_sim_recall" -> 1,
     "llm_t_closeness" -> 2,
     "llm_tfidf_topterms" -> 1,
     "llm_vocab_coverage" -> 1,

@@ -16,12 +16,14 @@ class CollectLintSpec extends AnyFunSuite {
 
   /** file (repo-relative) → allowed `.collect()` count, each justified:
     *
-    *  - Similarity (14): bounded query sets (nQueries), k centroids,
-    *    PQ codebooks (256·subspaces), per-method recall tallies over
-    *    ≤ |methods| rows, int8/binary query prefixes — the FAISS
-    *    training-state class; plus the MMR greedy fold's pool
-    *    (≤ queries·MmrPool) and pair-sim (≤ queries·MmrPool²) pulls —
-    *    the θ-class bounded model (docstring budget at mmrTopKOf).
+    *  - Similarity (10): the query sets (≤ nQueries rows) of the
+    *    broadcast pair kernel and the int8, binary and PQ-ADC scorers;
+    *    the one Lloyd trainer's seed and per-step means (k centroids
+    *    per subspace: 16 coarse, 256·32 PQ); the PCA mean and dims²
+    *    covariance — the FAISS training-state class; plus the MMR
+    *    greedy fold's pool (≤ queries·MmrPool) and pair-sim
+    *    (≤ queries·MmrPool²) pulls — the θ-class bounded model
+    *    (docstring budget at mmrTopKOf).
     *  - TextOps (2): BPE merge table (MergeSteps rows) pulled to bake
     *    literal replaces into the plan, twice (train + apply).
     *  - Contamination (2): bounded Bloom register rows; the bounded
@@ -44,7 +46,7 @@ class CollectLintSpec extends AnyFunSuite {
     *    pull — ≤ |users|+1 rows per run, harness-side.
     */
   private val Pinned: Map[String, Int] = Map(
-    "src/main/scala/graft/operators/Similarity.scala" -> 14,
+    "src/main/scala/graft/operators/Similarity.scala" -> 10,
     "src/main/scala/graft/operators/TextOps.scala" -> 2,
     "src/main/scala/graft/operators/Contamination.scala" -> 2,
     "src/main/scala/graft/operators/Bitext.scala" -> 2,

@@ -154,6 +154,34 @@ class SimilaritySpec extends SparkSpecBase {
     }
   }
 
+  test("recall tallies release their exact top-k cut") {
+    // each call cuts its exact (query_id, neighbor_id) pair set; once
+    // the result is released no such 2-column cut may stay persisted
+    // (simRecall's lsh member keeps its own 3-column bucket cut)
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "simRecall" -> (() => Similarity.simRecall(spark, Sf)),
+      "matryoshka" -> (() => Similarity.matryoshka(spark, Sf))
+    ).foreach { case (name, call) =>
+      call() // builds the session-cached approximate indexes
+      val before = persisted
+      val out = call()
+      assert(out.count() > 0)
+      graft.Materialize.release(out)
+      val pairCuts = (persisted -- before).filter { id =>
+        sc.getPersistentRDDs.get(id).exists(_.take(1).exists {
+          case r: org.apache.spark.sql.catalyst.InternalRow =>
+            r.numFields == 2
+          case _ => false
+        })
+      }
+      assert(pairCuts.isEmpty,
+        s"$name left its exact pair cut (RDDs ${pairCuts.mkString(", ")})")
+      assert(out.columns.nonEmpty) // out stays reachable through the check
+    }
+  }
+
   test("kmeans quantizer: iters=0 is the sampled seed the oracle encodes") {
     val got = Similarity.kmeansCentroids(embDf, 0)
     val want = vecs.filter(_._1 < Similarity.NumCentroids).toSeq.sortBy(_._1)
@@ -162,12 +190,59 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("kmeans quantizer: bit-identical centroids under any partitioning") {
-    val a = Similarity.kmeansCentroids(embDf.repartition(7), 3)
-    val b = Similarity.kmeansCentroids(embDf.repartition(3), 3)
-    a.zip(b).foreach { case ((ca, ea), (cb, eb)) =>
-      assert(ca == cb)
-      assert(ea.sameElements(eb), s"centroid $ca differs across partitionings")
+    // both metrics of the one Lloyd trainer: the cosine coarse quantizer
+    // and every L2 sub-quantizer of the PQ codebook
+    def books(df: org.apache.spark.sql.DataFrame) =
+      Similarity.kmeansCentroids(df, 3) +: Similarity.pqCodebookOf(df)
+    val a = books(embDf.repartition(7))
+    val b = books(embDf.repartition(3))
+    assert(a.length == 1 + Similarity.PqSubspaces && b.length == a.length)
+    a.zip(b).zipWithIndex.foreach { case ((sa, sb), m) =>
+      assert(sa.length == sb.length)
+      sa.zip(sb).foreach { case ((ca, ea), (cb, eb)) =>
+        assert(ca == cb)
+        assert(ea.sameElements(eb),
+          s"book $m centroid $ca differs across partitionings")
+      }
     }
+  }
+
+  test("PQ: the cold codebook build runs one job per Lloyd step") {
+    // one seed collect, then ONE grouped aggregation per step for all
+    // PqSubspaces sub-quantizers together — not a loop per subspace
+    SessionCache.invalidate(spark, Sf)
+    val runs = sqlExecutions(Similarity.pqCodebook(spark, Sf))
+    assert(runs.size <= 1 + Similarity.PqKmeansIters,
+      s"${runs.size} SQL executions for a cold codebook build")
+    // warm: served from the session cache, no job at all
+    assert(sqlExecutions(Similarity.pqCodebook(spark, Sf)).isEmpty)
+  }
+
+  test("hard negatives: the exact top-k among different-label neighbors") {
+    val labels = graft.Tables(spark, Sf, "embeddings")
+      .selectExpr("vec_id", "label").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val rows = Similarity.hardNegatives(spark, Sf).collect()
+    val got = rows.map(r => (r.getAs[Long]("query_id"),
+        r.getAs[Int]("rank")) -> (r.getAs[Long]("neighbor_id"),
+        r.getAs[Int]("neighbor_label"), r.getAs[Double]("cos_sim")))
+      .toMap
+    assert(got.size == rows.length)
+    val qids = vecs.keys.filter(_ < Similarity.NumQueries).toSeq.sorted
+    var want = 0
+    for (q <- qids) {
+      val expect = vecs.toSeq
+        .filter { case (n, _) => n != q && labels(n) != labels(q) }
+        .map { case (n, e) => (n, cos(vecs(q), e)) }
+        .sortBy { case (n, c) => (-c, n) }
+        .take(Similarity.TopK)
+      want += expect.size
+      expect.zipWithIndex.foreach { case ((n, c), i) =>
+        assert(got((q, i + 1)) == ((n, labels(n), c)),
+          s"query $q rank ${i + 1}")
+      }
+    }
+    assert(rows.length == want)
   }
 
   test("cluster-balanced sample: caps dense clusters, keeps sparse whole") {
