@@ -14,6 +14,8 @@ import graft.{Materialize, Tables}
   * materializes the all-pairs cross product — candidate pairs always come
   * from an equi-join on a derived key (content hash, LSH band, shingle,
   * simhash chunk, SRP bucket), which is the property that survives 100 TB.
+  * The fixture entries share one session index ([[indexCache]]): `sh3` →
+  * `sig` (band keys + simhash), `sh4` → `post4`, `srp`, `bowvecs`, `clusters`.
   * The DuckDB oracles for the approximate methods ARE all-pairs — that is
   * the point: the bucketed Spark plan must reproduce the exact answer
   * (LSH parameters are sized so candidate recall is total at the output
@@ -57,13 +59,18 @@ object Dedup {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents").select("doc_id", "text")
 
+  private def embeddings(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+
   private val toks: Column = split(col("text"), " ")
 
-  /** Distinct word n-gram shingles of `text`; whole text as the single
-    * shingle for degenerate short docs (fixture min is 10 tokens).
-    * Shared convention — see [[Shingles]].
+  /** (doc_id, s): distinct word n-gram shingles of `text`; whole text as
+    * the single shingle for degenerate short docs (fixture min is 10
+    * tokens). Shared convention — see [[Shingles]].
     */
-  private def shingles(n: Int): Column = Shingles.shingles(n)
+  private[graft] def shingled(corpus: DataFrame, n: Int): DataFrame =
+    corpus.select(col("doc_id"), Shingles.shingles(n).as("s"))
 
   // Each method has a DataFrame-parameterized form (`…Of`) taking any
   // (doc_id, text) corpus — e.g. text files via graft.sources — and a
@@ -89,14 +96,16 @@ object Dedup {
     * oracle sees is exact int/int.
     */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsFrom(sh3(spark, dir), bands3(spark, dir))
+    minhashPairsFrom(corpusIndex(spark, dir))
 
   /** Session-lifetime dedup index cache — the [[Apriori.itemsetSupports]]
     * pattern. A dedup pass over a lake is never one query: minhash,
-    * incremental, and apply all read the same 3-gram shingle + band
-    * tables, simhash the same shingles, and a real pipeline keeps these
-    * as its persistent index rather than re-deriving them per pass. One
-    * persisted table per (session, dir, kind); entries live until
+    * incremental, simhash and apply all read the same 3-gram shingles and
+    * their signatures, ngram/prefix/containment the same 4-gram shingles
+    * and postings, and a real pipeline keeps these as its persistent
+    * index rather than re-deriving them per pass. One persisted table per
+    * (session, dir, kind) — `sh3`, `sig`, `sh4`, `post4`, `srp`,
+    * `bowvecs`, `clusters`; entries live until
     * [[graft.SessionCache.invalidate]] (same lifetime contract as
     * Apriori's cache — callers that rewrite parquet under a cached dir
     * or cycle sessions invalidate at the boundary, and
@@ -118,8 +127,8 @@ object Dedup {
     // checkpointed row blocks on the bow pipeline. The cut strategy is
     // the session conf (`graft.materialize` — localCheckpoint on one
     // JVM, reliable on a cluster; [[Materialize.session]]). (Nested
-    // builds — bands3 derives from sh3 — are why [[graft.SessionCache]]
-    // is get+putIfAbsent, never computeIfAbsent.)
+    // builds — `sig` derives from `sh3`, `post4` from `sh4` — are why
+    // [[graft.SessionCache]] is get+putIfAbsent, never computeIfAbsent.)
     // `widen = true` repartitions the MATERIALIZED cut up to the
     // session shuffle parallelism when it came out narrower — ONLY for
     // indexes whose serve-side per-row compute dominates task overhead
@@ -134,38 +143,38 @@ object Dedup {
       else graft.Materialize.session(spark)(build))
 
   private def sh3(spark: SparkSession, dir: String): DataFrame =
-    cachedIdx(spark, dir, "sh3")(
-      docs(spark, dir).select(col("doc_id"), shingles(3).as("s")))
+    cachedIdx(spark, dir, "sh3")(shingled(docs(spark, dir), 3))
 
-  private def bands3(spark: SparkSession, dir: String): DataFrame =
-    cachedIdx(spark, dir, "bands3")(bandKernel(sh3(spark, dir)))
+  private def sig3(spark: SparkSession, dir: String): DataFrame =
+    cachedIdx(spark, dir, "sig")(sigKernel(sh3(spark, dir)))
 
-  private def sh4(spark: SparkSession, dir: String): DataFrame =
-    cachedIdx(spark, dir, "sh4")(
-      docs(spark, dir).select(col("doc_id"), shingles(4).as("s")))
+  /** The session-cached [[Ngrams]]: `sh4` and its postings `post4`. */
+  private def ngrams(spark: SparkSession, dir: String): Ngrams = {
+    val sh = cachedIdx(spark, dir, "sh4")(shingled(docs(spark, dir), 4))
+    Ngrams(sh, cachedIdx(spark, dir, "post4")(ngramPostings(sh)))
+  }
 
-  /** Shingle table of a corpus, cut once per call: it feeds the
-    * signature pipeline AND the verify joins — without the cut each
-    * consumer recomputes tokenize+shingle from the scan.
+  /** (doc_id, sim, bkeys) of a (doc_id, s) shingle table in one typed
+    * kernel: one md5 per shingle (md5 because `sim` is part of the
+    * oracle contract) feeds the 56-bit SimHash vote and [[MinhashFuncs]]
+    * splitmix minhashes banded into [[MinhashBands]] keys. Interpreted
+    * array lambdas per hash function or bit measured ~5× slower.
     */
-  private def shingleTable(corpus: DataFrame): DataFrame =
-    Materialize.Local(corpus.select(col("doc_id"), shingles(3).as("s")))
-
-  /** Banded minhash index of a shingle table. Signature + banding in one
-    * typed kernel: one md5 per shingle, then [[MinhashFuncs]] cheap
-    * splitmix derivations (an interpreted array_min(transform(...)) per
-    * hash function is ~5× slower).
-    */
-  private def bandTable(sh: DataFrame): DataFrame =
-    Materialize.Local(bandKernel(sh))
-
-  private def bandKernel(sh: DataFrame): DataFrame = {
+  private def sigKernel(sh: DataFrame): DataFrame = {
     val s = sh.sparkSession; import s.implicits._
     sh.as[(Long, Seq[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, ss) =>
+        it.map { case (id, ss) =>
           val base = ss.map(Hashing.md5hash56Jvm(md, _)).toArray
+          var sim = 0L
+          var b = 0
+          while (b < SimhashBits) { // bit b set iff most shingles set it
+            var vote = 0
+            base.foreach(h => vote += (((h >> b) & 1L) * 2 - 1).toInt)
+            if (vote > 0) sim |= (1L << b)
+            b += 1
+          }
           val sig = Array.tabulate(MinhashFuncs) { i =>
             var m = Long.MaxValue
             var j = 0
@@ -176,23 +185,30 @@ object Dedup {
             }
             m
           }
-          (0 until MinhashBands).iterator.map { b =>
-            (id, b, Hashing.mix64(sig(2 * b) ^ Hashing.mix64(sig(2 * b + 1))))
-          }
+          (id, sim, Array.tabulate(MinhashBands) { b =>
+            Hashing.mix64(sig(2 * b) ^ Hashing.mix64(sig(2 * b + 1)))
+          })
         }
       }
-      .toDF("doc_id", "band", "bkey")
+      .toDF("doc_id", "sim", "bkeys")
   }
 
-  /** Incremental near-dup check: NEW documents against an EXISTING
-    * corpus — the ingestion-time shape of dedup (is this crawl batch a
-    * near-copy of anything already in the lake?). Both sides get banded
-    * minhash indexes; candidates come from the cross band join only (no
-    * self-pairs within either set); survivors verify with exact Jaccard
-    * at the same threshold. At scale the corpus band table is the
-    * persistent index — computed once, joined by every arriving batch.
-    * Output: (new_doc_id, corpus_doc_id, jaccard).
+  /** The banded minhash index (doc_id, band, bkey) of a signature table. */
+  private def bands(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"),
+      posexplode(col("bkeys")).as(Seq("band", "bkey")))
+
+  /** The one bucket-pair generator: the equi-self-join of `t` on its
+    * bucket `keys`, as distinct (da, db) pairs of column `id`, da < db.
     */
+  private def bucketPairs(t: DataFrame, id: String, keys: String*)
+      : DataFrame =
+    t.as("x").join(t.as("y"),
+        keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
+          && col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as("da"), col(s"y.$id").as("db"))
+      .distinct()
+
   /** Shared exact-Jaccard verify: join candidate (da, db) pairs back to
     * their full shingle sets and keep those at/above `minJ`. Every
     * emitted value is exact int/int — the one place the contract's
@@ -230,13 +246,22 @@ object Dedup {
       .where(col("jaccard") >= minJ)
   }
 
-  private def minhashAgainstFrom(shNew: DataFrame, bandsNew: DataFrame,
-      shOld: DataFrame, bandsOld: DataFrame): DataFrame = {
-    val cand = bandsNew.as("x").join(bandsOld.as("y"),
+  /** Incremental near-dup check: NEW documents against an EXISTING
+    * corpus — the ingestion-time shape of dedup (is this crawl batch a
+    * near-copy of anything already in the lake?). Both sides get banded
+    * minhash indexes; candidates come from the cross band join only (no
+    * self-pairs within either set); survivors verify with exact Jaccard
+    * at the same threshold. At scale the corpus band table is the
+    * persistent index — computed once, joined by every arriving batch.
+    * Output: (new_doc_id, corpus_doc_id, jaccard).
+    */
+  private def minhashAgainstFrom(neu: MinhashIndex, old: MinhashIndex)
+      : DataFrame = {
+    val cand = neu.bands.as("x").join(old.bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
       .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
       .distinct()
-    jaccardVerify(cand, shNew, shOld,
+    jaccardVerify(cand, neu.sh, old.sh,
       "new_doc_id", "corpus_doc_id", JaccardMinhash)
   }
 
@@ -246,30 +271,33 @@ object Dedup {
     * the persistent-lake-index access pattern an ingestion pipeline
     * actually runs.
     */
-  case class MinhashIndex(sh: DataFrame, bands: DataFrame)
+  case class MinhashIndex(sh: DataFrame, bands: DataFrame) {
+    def where(c: Column): MinhashIndex =
+      MinhashIndex(sh.where(c), bands.where(c))
+  }
 
   def buildMinhashIndex(corpus: DataFrame): MinhashIndex = {
-    val sh = shingleTable(corpus)
-    MinhashIndex(sh, bandTable(sh))
+    // both tables cut once per call: the shingles feed the signatures
+    // AND the verify joins, the band rows both sides of a join
+    val sh = Materialize.Local(shingled(corpus, 3))
+    MinhashIndex(sh, bands(Materialize.Local(sigKernel(sh))))
   }
 
   /** Incremental check of a new batch against a prebuilt corpus index —
     * the index is NOT recomputed per call.
     */
   def minhashLshAgainstIndex(newDocs: DataFrame, idx: MinhashIndex)
-      : DataFrame = {
-    val shNew = shingleTable(newDocs)
-    minhashAgainstFrom(shNew, bandTable(shNew), idx.sh, idx.bands)
-  }
+      : DataFrame =
+    minhashAgainstFrom(buildMinhashIndex(newDocs), idx)
 
   /** The fixture corpus's session-cached minhash index as a
     * [[MinhashIndex]] — what an arriving batch joins against
     * ([[graft.operators.Curation]]'s incremental-refresh composition)
-    * without rebuilding the shingle/band tables the other dedup entries
-    * already cut.
+    * without rebuilding the shingle/signature tables the other dedup
+    * entries already cut.
     */
   private[operators] def corpusIndex(spark: SparkSession, dir: String)
-      : MinhashIndex = MinhashIndex(sh3(spark, dir), bands3(spark, dir))
+      : MinhashIndex = MinhashIndex(sh3(spark, dir), bands(sig3(spark, dir)))
 
   def minhashLshAgainst(newDocs: DataFrame, corpus: DataFrame): DataFrame =
     minhashLshAgainstIndex(newDocs, buildMinhashIndex(corpus))
@@ -282,25 +310,16 @@ object Dedup {
     * arriving batch.
     */
   def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val isNew = col("doc_id") % 10 === 0
-    minhashAgainstFrom(
-      sh3(spark, dir).where(isNew), bands3(spark, dir).where(isNew),
-      sh3(spark, dir).where(!isNew), bands3(spark, dir).where(!isNew))
+    val (idx, isNew) = (corpusIndex(spark, dir), col("doc_id") % 10 === 0)
+    minhashAgainstFrom(idx.where(isNew), idx.where(!isNew))
   }
 
-  private def minhashPairsFrom(sh: DataFrame, bands: DataFrame): DataFrame = {
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
-      .distinct()
-    jaccardVerify(cand, sh, sh, "doc_a", "doc_b", JaccardMinhash)
-  }
+  private def minhashPairsFrom(idx: MinhashIndex): DataFrame =
+    jaccardVerify(bucketPairs(idx.bands, "doc_id", "band", "bkey"),
+      idx.sh, idx.sh, "doc_a", "doc_b", JaccardMinhash)
 
-  def minhashLshOf(corpus: DataFrame): DataFrame = {
-    val sh = shingleTable(corpus)
-    minhashPairsFrom(sh, bandTable(sh))
-  }
+  def minhashLshOf(corpus: DataFrame): DataFrame =
+    minhashPairsFrom(buildMinhashIndex(corpus))
 
   /** Hot-shingle doc-frequency threshold for [[ngramJaccardOf]]'s
     * candidate generation. A shingle in m docs contributes m² join rows
@@ -336,41 +355,66 @@ object Dedup {
     * approximation: every emitted value is exact int/int.
     */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardFrom(sh4(spark, dir), NgramStopDf)
+    ngramJaccardFrom(ngrams(spark, dir), NgramStopDf)
 
-  /** 4-gram shingle table of a corpus (pre-materialization). */
-  private[graft] def ngramShingles(corpus: DataFrame): DataFrame =
-    corpus.select(col("doc_id"), shingles(4).as("s"))
+  /** A corpus's 4-gram shingle table (doc_id, s) and its postings. */
+  private case class Ngrams(sh: DataFrame, post: DataFrame)
+
+  /** [[Ngrams]] of any corpus; `sh` is cut (postings + both verify sides). */
+  private def ngramsOf(corpus: DataFrame): Ngrams = {
+    val sh = Materialize.Local(shingled(corpus, 4))
+    Ngrams(sh, ngramPostings(sh))
+  }
+
+  /** The 4-gram postings — the token-ordering stage of MapReduce
+    * set-similarity joins: one row per (doc_id, shingle g) with g's
+    * document frequency `df` and posting-list minimum `mn`
+    * ([[keyStats]]), the doc's shingle count `sz` and g's rank `r` in
+    * its doc under the global (df, g) order. The n-gram, prefix and
+    * containment joins read it; none recounts a frequency.
+    */
+  private[graft] def ngramPostings(sh: DataFrame): DataFrame =
+    keyStats(sh.select(col("doc_id"), size(col("s")).cast("long").as("sz"),
+        explode(col("s")).as("g")), "g")
+      .withColumn("r", row_number().over(
+        Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
+
+  /** `t` plus its key group's row count `df` and smallest doc_id `mn`: the
+    * one key-frequency pass (4-gram postings, span-align, fuzzy blocks).
+    */
+  private def keyStats(t: DataFrame, keys: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+    t.withColumn("df", count(lit(1)).over(w))
+      .withColumn("mn", min(col("doc_id")).over(w))
+  }
+
+  /** The cold-key filter (the [[NgramStopDf]] skew guard). */
+  private def cold(stats: DataFrame, stopDf: Int): DataFrame =
+    stats.where(col("df") <= stopDf)
 
   /** Candidate pairs from the stop-filtered inverted index — exposed for
     * the skew spec: bounded CANDIDATE volume (not just correct output) is
     * the property that survives 100 TB.
     */
-  private[graft] def ngramCandidates(sh: DataFrame, stopDf: Int): DataFrame = {
-    val ex = sh.select(col("doc_id"), explode(col("s")).as("g"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
-    val cold = ex.where(col("df") <= stopDf).drop("df")
-    val coldPairs = cold.as("x").join(cold.as("y"),
-        col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
+  private[graft] def ngramCandidates(post: DataFrame, stopDf: Int)
+      : DataFrame = {
     // hot shingles: STAR pairs (posting-minimum doc, other doc) — m−1
     // rows instead of m², and the induced component has diameter 2, so
     // downstream clustersOf converges in O(1) rounds (a chain topology
     // would need O(m) sequential rounds). da < db holds by construction.
-    val hotPairs = ex.where(col("df") > stopDf)
-      .withColumn("mn", min(col("doc_id")).over(Window.partitionBy("g")))
-      .where(col("doc_id") =!= col("mn"))
+    val hotPairs = post
+      .where(col("df") > stopDf && col("doc_id") =!= col("mn"))
       .select(col("mn").as("da"), col("doc_id").as("db"))
-    coldPairs.union(hotPairs).distinct()
+    bucketPairs(cold(post, stopDf), "doc_id", "g")
+      .union(hotPairs).distinct()
   }
 
   def ngramJaccardOf(corpus: DataFrame, stopDf: Int = NgramStopDf)
       : DataFrame =
-    // `sh` feeds the index build + both verify sides
-    ngramJaccardFrom(Materialize.Local(ngramShingles(corpus)), stopDf)
+    ngramJaccardFrom(ngramsOf(corpus), stopDf)
 
-  private def ngramJaccardFrom(sh: DataFrame, stopDf: Int): DataFrame =
-    jaccardVerify(ngramCandidates(sh, stopDf), sh, sh,
+  private def ngramJaccardFrom(ng: Ngrams, stopDf: Int): DataFrame =
+    jaccardVerify(ngramCandidates(ng.post, stopDf), ng.sh, ng.sh,
       "doc_a", "doc_b", JaccardNgram)
 
   /** PREFIX-FILTERED candidate generation (Chaudhuri et al. ICDE '06 /
@@ -389,10 +433,10 @@ object Dedup {
     * strictly below the full-index count.
     */
   def ngramJaccardPrefix(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPrefixFrom(sh4(spark, dir))
+    ngramJaccardPrefixFrom(ngrams(spark, dir))
 
   def ngramJaccardPrefixOf(corpus: DataFrame): DataFrame =
-    ngramJaccardPrefixFrom(Materialize.Local(ngramShingles(corpus)))
+    ngramJaccardPrefixFrom(ngramsOf(corpus))
 
   /** [[JaccardNgram]] as the exact rational 7/10. The prefix LENGTH
     * must be computed in integer arithmetic: ⌈τ·|X|⌉ evaluated in IEEE
@@ -406,35 +450,24 @@ object Dedup {
   val JaccardNgramNum = 7L
   val JaccardNgramDen = 10L
 
-  private def ngramJaccardPrefixFrom(sh: DataFrame): DataFrame =
+  private def ngramJaccardPrefixFrom(ng: Ngrams): DataFrame =
     jaccardVerify(
-      prefixCandidates(sh, JaccardNgramNum, JaccardNgramDen), sh, sh,
-      "doc_a", "doc_b", JaccardNgram)
+      prefixCandidates(ng.post, JaccardNgramNum, JaccardNgramDen),
+      ng.sh, ng.sh, "doc_a", "doc_b", JaccardNgram)
 
-  /** Per-doc prefix of the (df, g)-ordered shingle list, cut at the
+  /** Per-doc prefix of the (df, g)-ordered postings, cut at the
     * τ = num/den filter bound |X| − ⌈τ·|X|⌉ + 1 (exact integer ceil —
     * see [[JaccardNgramNum]]).
     */
-  private def prefixOf(sh: DataFrame, tauNum: Long, tauDen: Long)
+  private def prefixOf(post: DataFrame, tauNum: Long, tauDen: Long)
       : DataFrame =
-    sh.select(col("doc_id"), size(col("s")).cast("long").as("sz"),
-        explode(col("s")).as("g"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
-      .where(col("r") <=
-        col("sz") - expr(s"($tauNum * sz + $tauDen - 1) DIV $tauDen")
-          + 1)
+    post.where(col("r") <=
+        col("sz") - expr(s"($tauNum * sz + $tauDen - 1) DIV $tauDen") + 1)
       .select("doc_id", "g")
 
-  private[graft] def prefixCandidates(sh: DataFrame, tauNum: Long,
-      tauDen: Long): DataFrame = {
-    val prefix = prefixOf(sh, tauNum, tauDen)
-    prefix.as("x").join(prefix.as("y"),
-        col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
-      .distinct()
-  }
+  private[graft] def prefixCandidates(post: DataFrame, tauNum: Long,
+      tauDen: Long): DataFrame =
+    bucketPairs(prefixOf(post, tauNum, tauDen), "doc_id", "g")
 
   /** Containment threshold 9/10: |S(A) ∩ S(B)| / |S(A)| ≥ 0.9 flags A
     * as contained in B.
@@ -461,17 +494,16 @@ object Dedup {
     * (den·inter ≥ num·|A|); the reported ratio is one division.
     */
   def containment(spark: SparkSession, dir: String): DataFrame =
-    containmentFrom(sh4(spark, dir))
+    containmentFrom(ngrams(spark, dir))
 
   def containmentOf(corpus: DataFrame): DataFrame =
-    containmentFrom(Materialize.Local(ngramShingles(corpus)))
+    containmentFrom(ngramsOf(corpus))
 
-  private def containmentFrom(sh: DataFrame): DataFrame = {
-    val post = sh.select(col("doc_id").as("db"),
-      explode(col("s")).as("g"))
-    val cand = prefixOf(sh, ContainNum, ContainDen)
+  private def containmentFrom(ng: Ngrams): DataFrame = {
+    val Ngrams(sh, post) = ng
+    val cand = prefixOf(post, ContainNum, ContainDen)
       .select(col("doc_id").as("da"), col("g"))
-      .join(post, "g")
+      .join(post.select(col("doc_id").as("db"), col("g")), "g")
       .where(col("da") =!= col("db"))
       .select("da", "db").distinct()
     cand
@@ -497,46 +529,12 @@ object Dedup {
     * part of the oracle contract.
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashFrom(cachedIdx(spark, dir, "simhash")(
-      simhashKernel(sh3(spark, dir))))
+    simhashFrom(sig3(spark, dir))
 
   def simhashPairsOf(corpus: DataFrame): DataFrame =
     // Materialized: the chunk self-join reads the 1-long-per-doc
     // fingerprints instead of recomputing the pipeline on both sides.
-    simhashFrom(Materialize.Local(simhashKernel(
-      corpus.select(col("doc_id"), shingles(3).as("s")))))
-
-  /** (doc_id, sim) fingerprints of a (doc_id, s) shingle table. Bit-vote
-    * in a typed kernel (56 interpreted aggregate-lambdas per row measured
-    * ~5× slower); hashes stay md5-derived because the simhash value
-    * itself is part of the oracle contract.
-    */
-  private def simhashKernel(sh: DataFrame): DataFrame = {
-    val s = sh.sparkSession; import s.implicits._
-    sh.as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, ss) =>
-          val votes = new Array[Int](SimhashBits)
-          ss.foreach { str =>
-            val h = Hashing.md5hash56Jvm(md, str)
-            var b = 0
-            while (b < SimhashBits) {
-              if (((h >> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-              b += 1
-            }
-          }
-          var sim = 0L
-          var b = 0
-          while (b < SimhashBits) {
-            if (votes(b) > 0) sim |= (1L << b)
-            b += 1
-          }
-          (id, sim)
-        }
-      }
-      .toDF("doc_id", "sim")
-  }
+    simhashFrom(Materialize.Local(sigKernel(shingled(corpus, 3))))
 
   private def simhashFrom(sims: DataFrame): DataFrame = {
     val chunks = sims.select(
@@ -574,35 +572,32 @@ object Dedup {
     // band pattern): built+checkpointed once per (session, dir) instead
     // of re-kernelized per invocation — an ANN/dedup pass keeps its
     // bucket index persistent, same as the minhash band table
-    val emb = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    embeddingNearDupFrom(emb, cachedIdx(spark, dir, "srp")(
-      Hashing.srpBuckets(spark, emb, SrpTables, SrpBits)))
+    val emb = embeddings(spark, dir)
+    srpNearDup(emb, cachedIdx(spark, dir, "srp")(
+        Hashing.srpBuckets(spark, emb, SrpTables, SrpBits)),
+      CosMin, "vec_a", "vec_b")
   }
 
   /** Vector form: any (vec_id, e: ARRAY<DOUBLE>) DataFrame. */
-  def embeddingNearDupOf(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    embeddingNearDupFrom(emb,
-      Materialize.Local(Hashing.srpBuckets(spark, emb, SrpTables, SrpBits)))
-      // both sides of the bucket self-join read the materialized table
-  }
+  def embeddingNearDupOf(emb: DataFrame): DataFrame =
+    // both sides of the bucket self-join read the materialized table
+    srpNearDup(emb, Materialize.Local(
+        Hashing.srpBuckets(emb.sparkSession, emb, SrpTables, SrpBits)),
+      CosMin, "vec_a", "vec_b")
 
-  private def embeddingNearDupFrom(emb: DataFrame,
-                                   buckets: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.t") === col("y.t") && col("x.bkt") === col("y.bkt")
-          && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("va"), col("y.vec_id").as("vb"))
-      .distinct()
-    cand
-      .join(emb.as("A"), col("va") === col("A.vec_id"))
-      .join(emb.as("B"), col("vb") === col("B.vec_id"))
-      .select(col("va").as("vec_a"), col("vb").as("vec_b"),
-        Hashing.cosineNative(spark, col("A.e"), col("B.e")).as("cos_sim"))
-      .where(col("cos_sim") >= CosMin)
-  }
+  /** The one SRP cosine near-dup path: candidate pairs share an SRP
+    * (t, bkt) bucket of `buckets`, then exact cosine over the (vec_id, e)
+    * `vecs` keeps those at/above `minCos`, as (outA, outB, cos_sim).
+    */
+  private def srpNearDup(vecs: DataFrame, buckets: DataFrame,
+      minCos: Double, outA: String, outB: String): DataFrame =
+    bucketPairs(buckets, "vec_id", "t", "bkt")
+      .join(vecs.as("A"), col("da") === col("A.vec_id"))
+      .join(vecs.as("B"), col("db") === col("B.vec_id"))
+      .select(col("da").as(outA), col("db").as(outB),
+        Hashing.cosineNative(vecs.sparkSession, col("A.e"), col("B.e"))
+          .as("cos_sim"))
+      .where(col("cos_sim") >= minCos)
 
   // ---- semantic dedup (cluster-partitioned, SemDeDup-style) ----
 
@@ -626,8 +621,7 @@ object Dedup {
     * clusters; exact cosine verifies inside the join projection.
     */
   def semantic(spark: SparkSession, dir: String): DataFrame =
-    semanticOf(Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    semanticOf(embeddings(spark, dir))
 
   def semanticOf(emb: DataFrame, kmeansIters: Int = 0): DataFrame = {
     val spark = emb.sparkSession
@@ -688,22 +682,10 @@ object Dedup {
       .toDF("vec_id", "e")
   }
 
-  private def bowFrom(vecs: DataFrame): DataFrame = {
-    val spark = vecs.sparkSession
-    val buckets =
-      Hashing.srpBuckets(spark, vecs, SrpTables, SrpBits, BowDims)
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.t") === col("y.t") && col("x.bkt") === col("y.bkt")
-          && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("da"), col("y.vec_id").as("db"))
-      .distinct()
-    cand
-      .join(vecs.as("A"), col("da") === col("A.vec_id"))
-      .join(vecs.as("B"), col("db") === col("B.vec_id"))
-      .select(col("da").as("doc_a"), col("db").as("doc_b"),
-        Hashing.cosineNative(spark, col("A.e"), col("B.e")).as("cos_sim"))
-      .where(col("cos_sim") >= BowCosMin)
-  }
+  /** [[srpNearDup]] over bow vectors, their buckets built per call. */
+  private def bowFrom(vecs: DataFrame): DataFrame =
+    srpNearDup(vecs, Hashing.srpBuckets(vecs.sparkSession, vecs, SrpTables,
+      SrpBits, BowDims), BowCosMin, "doc_a", "doc_b")
 
   /** Apply dedup: the cleaned corpus. Removal policy — drop the
     * higher-id document of every verified near-dup pair (and exact-dup
@@ -851,16 +833,9 @@ object Dedup {
         (-col("best.neg")).as("rep_score"), col("n_members"))
 
   def keepBestOf(corpus: DataFrame, clusterTable: DataFrame): DataFrame =
-    clusterTable
-      .join(corpus.select(col("doc_id"),
-        size(toks).cast("long").as("n_toks")), Seq("doc_id"))
-      .groupBy("cluster_id")
-      .agg(
-        min(struct((-col("n_toks")).as("neg_len"), col("doc_id").as("d")))
-          .as("best"),
-        count(lit(1)).as("n_members"))
-      .select(col("cluster_id"), col("best.d").as("rep_doc_id"),
-        (-col("best.neg_len")).as("rep_tokens"), col("n_members"))
+    keepScoredOf(corpus.select(col("doc_id"),
+        size(toks).cast("long").as("score")), clusterTable)
+      .withColumnRenamed("rep_score", "rep_tokens")
 
   /** Shortest shared run [[spanAlign]] reports, in TOKENS (a run of r
     * consecutive 4-gram shingles covers r + 3 tokens).
@@ -899,10 +874,8 @@ object Dedup {
         "transform(sequence(0, size(t) - 4), i -> named_struct(" +
           "'p', i, 'g', concat_ws(' ', slice(t, i + 1, 4))))")).as("x"))
       .select(col("doc_id"), col("x.p").as("p"), col("x.g").as("g"))
-    val cold = pos
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
-      .where(col("df") <= NgramStopDf)
-    val m = cold.as("x").join(cold.as("y"),
+    val c = cold(keyStats(pos, "g"), NgramStopDf)
+    val m = c.as("x").join(c.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
         col("x.p").as("ia"), (col("x.p") - col("y.p")).as("diag"))
@@ -991,7 +964,9 @@ object Dedup {
     *
     * Shape: the reference pair set is cut once (localCheckpoint) and
     * feeds both the denominator and the semi-join probe; all methods
-    * union into ONE tagged stream for the size and hit counts.
+    * union into ONE tagged stream for the size and hit counts. The
+    * report is forced and the reference cut released before returning,
+    * so no cut outlives the call.
     */
   def dedupRecall(spark: SparkSession, dir: String): DataFrame =
     recallFrom(ngramJaccard(spark, dir), Seq(
@@ -1020,11 +995,10 @@ object Dedup {
     val sizes = approx.groupBy("method").agg(count(lit(1)).as("n_method"))
     val hits = approx.join(exact, Seq("doc_a", "doc_b"), "left_semi")
       .groupBy("method").agg(count(lit(1)).as("n_hit"))
-    val spark = reference.sparkSession
-    val s = spark; import s.implicits._
+    val s = reference.sparkSession; import s.implicits._
     val nm = coalesce(col("n_method"), lit(0L))
     val nh = coalesce(col("n_hit"), lit(0L))
-    methods.map(_._1).toDF("method")
+    val out = methods.map(_._1).toDF("method")
       .join(sizes, Seq("method"), "left")
       .join(hits, Seq("method"), "left")
       .crossJoin(broadcast(total))
@@ -1034,6 +1008,9 @@ object Dedup {
         when(nm === 0L, lit(0.0))
           .otherwise(nh.cast("double") / nm.cast("double"))
           .as("precision"))
+    val forced = Materialize.Local(out)
+    Materialize.release(exact)
+    forced
   }
 
   // ---- blocked fuzzy (edit-distance) join — entity resolution ----
@@ -1098,15 +1075,8 @@ object Dedup {
             .as("s"))
       }: _*)).as("b"))
       .select(col("doc_id"), col("b.i").as("i"), col("b.s").as("s"))
-    val cold = seg
-      .withColumn("df",
-        count(lit(1)).over(Window.partitionBy("i", "s")))
-      .where(col("df") <= FuzzyStopDf)
-    cold.as("x").join(cold.as("y"),
-        col("x.i") === col("y.i") && col("x.s") === col("y.s")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
-      .distinct()
+    bucketPairs(cold(keyStats(seg, "i", "s"), FuzzyStopDf),
+      "doc_id", "i", "s")
   }
 
   /** Sample size for the fuzzy-blocking recall audit: the [[FuzzyK]]
@@ -1172,23 +1142,24 @@ object Dedup {
     "llm_dedup_bow_cosine" -> bowCosine
   )
 
-  /** Shared oracle scaffolding: tokenized docs + n-gram shingle lists
-    * (the [[Shingles]] convention in SQL).
-    */
-  private def shSql(n: Int): String = Shingles.shSql(n)
-
   /** All-pairs exact Jaccard ≥ threshold — the minhash contract, shared
     * by the `llm_dedup_minhash` entry and (as a subquery) the clusters
     * oracle.
     */
   private val minhashPairsOracleSql: String =
-    s"""WITH ${shSql(3)},
+    jaccard3Sql("a.doc_id < b.doc_id", "doc_a", "doc_b")
+
+  /** Exact 3-gram Jaccard ≥ [[JaccardMinhash]] over the shingle pairs
+    * joined `on`, as (outA, outB, jaccard).
+    */
+  private def jaccard3Sql(on: String, outA: String, outB: String): String =
+    s"""WITH ${Shingles.shSql(3)},
        |pairs AS (
        |  SELECT a.doc_id da, b.doc_id db,
        |    len(list_intersect(a.s, b.s)) i, len(a.s) la, len(b.s) lb
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+       |  FROM sh a JOIN sh b ON $on
        |)
-       |SELECT da AS doc_a, db AS doc_b,
+       |SELECT da AS $outA, db AS $outB,
        |  i::DOUBLE / (la + lb - i)::DOUBLE AS jaccard
        |FROM pairs
        |WHERE i::DOUBLE / (la + lb - i)::DOUBLE >= $JaccardMinhash"""
@@ -1201,7 +1172,7 @@ object Dedup {
     * `llm_dedup_clusters` entry and (as a subquery) `llm_dedup_keep_best`.
     */
   private val ngramOracleSql: String =
-    s"""WITH ${shSql(4)},
+    s"""WITH ${Shingles.shSql(4)},
        |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
        |inter AS (
        |  SELECT a.doc_id da, b.doc_id db, count(*) i
@@ -1227,6 +1198,15 @@ object Dedup {
        |)
        |SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a"""
       .stripMargin.replace("PAIRS_SQL", minhashPairsOracleSql)
+
+  /** The near-dup clusters `cl` and every doc's token count `sz`, the
+    * scaffolding of both keep-best oracles.
+    */
+  private val clusterTokensSql: String =
+    s"""WITH cl AS ($clustersOracleSql),
+       |sz AS (SELECT doc_id,
+       |         len(string_split(text, ' '))::BIGINT AS n_toks
+       |       FROM documents)""".stripMargin
 
   /** Shared fuzzy-join SQL over a doc source: key → aligned cold
     * blocks → distinct candidates → exact levenshtein verify.
@@ -1286,6 +1266,30 @@ object Dedup {
        |  GROUP BY g.doc_id
        |)""".stripMargin
 
+  /** The [[srpNearDup]] candidates in DuckDB, shared by the embedding
+    * and bow oracles: `elem`, the i-th component of each `dims`-wide
+    * (vec_id, …) row of `src`, projects onto the planes; the SRP buckets
+    * and their distinct colliding pairs land in `cand(va, vb)`.
+    */
+  private def srpCandSql(src: String, elem: String, dims: Int): String =
+    s"""${Hashing.planesSqlCte(SrpTables, SrpBits, dims)},
+      |proj AS (
+      |  SELECT vec_id, t, p,
+      |    list_reduce(list_transform(range(1, ${dims + 1}),
+      |      i -> $elem * w[i]), (a, b) -> a + b) AS pr
+      |  FROM $src, planes
+      |),
+      |buckets AS (
+      |  SELECT vec_id, t,
+      |    sum(CASE WHEN pr > 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT AS bkt
+      |  FROM proj GROUP BY vec_id, t
+      |),
+      |cand AS (
+      |  SELECT DISTINCT a.vec_id va, b.vec_id vb
+      |  FROM buckets a JOIN buckets b
+      |    ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id
+      |)""".stripMargin
+
   private val baseOracle: Map[String, String] = Map(
     "llm_fuzzy_join" ->
       s"""WITH ${fuzzySql("documents")}
@@ -1309,10 +1313,7 @@ object Dedup {
          |FROM truth t LEFT JOIN fz f
          |  ON t.da = f.da AND t.db = f.db""".stripMargin,
     "llm_dedup_apply_best" ->
-      s"""WITH cl AS ($clustersOracleSql),
-         |sz AS (SELECT doc_id,
-         |         len(string_split(text, ' '))::BIGINT AS n_toks
-         |       FROM documents)
+      s"""$clusterTokensSql
          |SELECT doc_id FROM documents
          |WHERE doc_id NOT IN (SELECT doc_id FROM cl)
          |UNION ALL
@@ -1323,10 +1324,7 @@ object Dedup {
          |      FROM cl JOIN sz USING (doc_id))
          |WHERE rk = 1""".stripMargin,
     "llm_dedup_keep_best" ->
-      s"""WITH cl AS ($clustersOracleSql),
-         |sz AS (SELECT doc_id,
-         |         len(string_split(text, ' '))::BIGINT AS n_toks
-         |       FROM documents)
+      s"""$clusterTokensSql
          |SELECT cluster_id, doc_id AS rep_doc_id, n_toks AS rep_tokens,
          |  n_members
          |FROM (SELECT cl.cluster_id, cl.doc_id, sz.n_toks,
@@ -1377,18 +1375,9 @@ object Dedup {
     "llm_dedup_minhash" -> minhashPairsOracleSql,
     // All-pairs exact cross-set Jaccard — the incremental banded plan
     // must reproduce it exactly (same split: doc_id % 10 == 0 is "new").
-    "llm_dedup_incremental" ->
-      s"""WITH ${shSql(3)},
-         |pairs AS (
-         |  SELECT a.doc_id da, b.doc_id db,
-         |    len(list_intersect(a.s, b.s)) i, len(a.s) la, len(b.s) lb
-         |  FROM sh a JOIN sh b ON a.doc_id % 10 = 0 AND b.doc_id % 10 != 0
-         |)
-         |SELECT da AS new_doc_id, db AS corpus_doc_id,
-         |  i::DOUBLE / (la + lb - i)::DOUBLE AS jaccard
-         |FROM pairs
-         |WHERE i::DOUBLE / (la + lb - i)::DOUBLE >= $JaccardMinhash"""
-        .stripMargin,
+    "llm_dedup_incremental" -> jaccard3Sql(
+      "a.doc_id % 10 = 0 AND b.doc_id % 10 != 0",
+      "new_doc_id", "corpus_doc_id"),
     "llm_dedup_ngram" -> ngramOracleSql,
     // the EXACT same oracle on purpose: hash equality proves the prefix
     // index drops no qualifying pair (see ngramJaccardPrefix)
@@ -1430,7 +1419,7 @@ object Dedup {
     // all-DIRECTED-pairs oracle: hash equality proves the asymmetric
     // prefix probe drops no qualifying containment pair
     "llm_dedup_containment" ->
-      s"""WITH ${shSql(4)},
+      s"""WITH ${Shingles.shSql(4)},
          |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
          |inter AS (
          |  SELECT a.doc_id da, b.doc_id db, count(*)::BIGINT AS i
@@ -1445,7 +1434,7 @@ object Dedup {
          |JOIN sz sb ON sb.doc_id = db
          |WHERE $ContainDen * i >= $ContainNum * sa.n""".stripMargin,
     "llm_dedup_simhash" ->
-      s"""WITH ${shSql(3)},
+      s"""WITH ${Shingles.shSql(3)},
          |hv AS (SELECT doc_id,
          |  ('0x' || substr(md5(unnest(s)), 1, 14))::BIGINT AS h FROM sh),
          |bits AS (
@@ -1461,23 +1450,7 @@ object Dedup {
          |FROM sims a JOIN sims b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.sim, b.sim)) <= $HammingMax""".stripMargin,
     "llm_dedup_embedding" ->
-      s"""WITH ${Hashing.planesSqlCte(SrpTables, SrpBits, 64)},
-         |proj AS (
-         |  SELECT vec_id, t, p,
-         |    list_reduce(list_transform(range(1, 65),
-         |      i -> embedding[i]::DOUBLE * w[i]), (a, b) -> a + b) AS pr
-         |  FROM embeddings, planes
-         |),
-         |buckets AS (
-         |  SELECT vec_id, t,
-         |    sum(CASE WHEN pr > 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT AS bkt
-         |  FROM proj GROUP BY vec_id, t
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id va, b.vec_id vb
-         |  FROM buckets a JOIN buckets b
-         |    ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id
-         |),
+      s"""WITH ${srpCandSql("embeddings", "embedding[i]::DOUBLE", 64)},
          |v AS (SELECT vec_id, embedding e FROM embeddings),
          |scored AS (
          |  SELECT va, vb, ${Hashing.cosineSql("a.e", "b.e", 64)} AS cos_sim
@@ -1510,23 +1483,7 @@ object Dedup {
          |SELECT * FROM scored WHERE cos_sim >= $CosMin""".stripMargin,
     "llm_dedup_bow_cosine" ->
       s"""WITH $bowVecsSqlCtes,
-         |${Hashing.planesSqlCte(SrpTables, SrpBits, BowDims)},
-         |proj AS (
-         |  SELECT vec_id, t, p,
-         |    list_reduce(list_transform(range(1, ${BowDims + 1}),
-         |      i -> e[i] * w[i]), (a, b) -> a + b) AS pr
-         |  FROM vecs, planes
-         |),
-         |buckets AS (
-         |  SELECT vec_id, t,
-         |    sum(CASE WHEN pr > 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT AS bkt
-         |  FROM proj GROUP BY vec_id, t
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id va, b.vec_id vb
-         |  FROM buckets a JOIN buckets b
-         |    ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id
-         |),
+         |${srpCandSql("vecs", "e[i]", BowDims)},
          |scored AS (
          |  SELECT va, vb, ${Hashing.cosineSql("a.e", "b.e", BowDims)} AS cos_sim
          |  FROM cand JOIN vecs a ON va = a.vec_id JOIN vecs b ON vb = b.vec_id

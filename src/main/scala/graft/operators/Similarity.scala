@@ -206,12 +206,12 @@ object Similarity {
 
   def lshTopKOf(corpusDf: DataFrame, nQueries: Long): DataFrame = {
     val spark = corpusDf.sparkSession
-    val buckets = // both sides of the bucket self-join read this table
-      graft.Materialize.Local(
-        Hashing.srpBuckets(spark, corpusDf, LshTables, LshBits))
-    val cand = buckets.as("q")
-      .where(col("q.vec_id") < nQueries)
-      .join(buckets.as("n"),
+    // the query side buckets only the nq query rows: one kernel pass
+    // over N + nq vectors, and no cut left behind
+    def buckets(df: DataFrame) =
+      Hashing.srpBuckets(spark, df, LshTables, LshBits)
+    val cand = buckets(corpusDf.where(col("vec_id") < nQueries)).as("q")
+      .join(buckets(corpusDf).as("n"),
         col("q.t") === col("n.t") && col("q.bkt") === col("n.bkt")
           && col("q.vec_id") =!= col("n.vec_id"))
       .select(col("q.vec_id").as("qid"), col("n.vec_id").as("nid"))

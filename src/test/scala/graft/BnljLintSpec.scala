@@ -35,7 +35,8 @@ class BnljLintSpec extends SparkSpecBase {
     // BUILD; the serve plan reads the checkpointed baskets directly.
     // llm_sim_recall un-pinned like llm_sim_matryoshka: its 1-row
     // n_exact crossJoin runs inside the recall tally's forced cut, so
-    // the returned plan is a scan of that cut
+    // the returned plan is a scan of that cut; llm_dedup_recall likewise
+    // (its 1-row n_ref crossJoin runs inside the audit's forced cut)
     "apriori_rules_metrics" -> 1,
     "graph_als_recs" -> 1,
     "graph_rich_club" -> 2,
@@ -45,7 +46,6 @@ class BnljLintSpec extends SparkSpecBase {
     "llm_chi2_terms" -> 1,
     "llm_collocations" -> 1,
     "llm_corpus_card" -> 5,
-    "llm_dedup_recall" -> 1,
     "llm_eval_rankers" -> 4,
     "llm_eval_retrieval" -> 1,
     "llm_f2_ams" -> 1,

@@ -101,14 +101,15 @@ class DedupSpec extends SparkSpecBase {
       (100L, s"$zs z22 $boiler"),
       (101L, s"$zs z22x $boiler"))
     val corpus = (base ++ nearDup).toDF("doc_id", "text")
-    val sh = Dedup.ngramShingles(corpus).localCheckpoint()
+    val post = Dedup.ngramPostings(Dedup.shingled(corpus, 4))
+      .localCheckpoint()
     // Unguarded: the hot shingle alone yields all C(102,2) pairs.
-    assert(Dedup.ngramCandidates(sh, Int.MaxValue).count() == 102L * 101 / 2)
+    assert(Dedup.ngramCandidates(post, Int.MaxValue).count() == 102L * 101 / 2)
     // Guarded (boilerplate df=102 > 10 is hot): the hot shingle emits
     // only its 101 STAR pairs (posting-min doc 0 vs each other); the
     // planted pair rides its cold z-shingles — candidate volume
     // collapses from quadratic to linear.
-    val guarded = Dedup.ngramCandidates(sh, 10).collect()
+    val guarded = Dedup.ngramCandidates(post, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(guarded ==
       (1L to 101L).map(j => (0L, j)).toSet + ((100L, 101L)))
@@ -133,7 +134,8 @@ class DedupSpec extends SparkSpecBase {
     val corpus = (base ++ Seq(
       (100L, s"$zs z22 $boiler"),
       (101L, s"$zs z22x $boiler"))).toDF("doc_id", "text")
-    val sh = Dedup.ngramShingles(corpus).localCheckpoint()
+    val post = Dedup.ngramPostings(Dedup.shingled(corpus, 4))
+      .localCheckpoint()
     // lossless: the prefix path reports exactly the full-index pairs
     val full = Dedup.ngramJaccardOf(corpus, Int.MaxValue).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
@@ -145,7 +147,7 @@ class DedupSpec extends SparkSpecBase {
     // each doc's RAREST shingles, so the df=102 boilerplate shingle
     // never enters the index — quadratic blowup gone without any
     // stop-split, and volume is strictly below the unguarded count
-    val nCand = Dedup.prefixCandidates(sh,
+    val nCand = Dedup.prefixCandidates(post,
       Dedup.JaccardNgramNum, Dedup.JaccardNgramDen).count()
     assert(nCand < 102L * 101 / 2, s"prefix index did not prune: $nCand")
     assert(nCand >= 1L)
@@ -323,6 +325,54 @@ class DedupSpec extends SparkSpecBase {
     assert(before.forall(_.nonEmpty))
     SessionCache.invalidate(spark, Sf)
     assert(answers() == before)
+  }
+
+  test("SRP near-dups (embedding, bow) replay in-memory bucketing") {
+    import graft.operators.SrpReplay
+    val emb = graft.Tables(spark, Sf, "embeddings")
+      .selectExpr("vec_id", "cast(embedding as array<double>) e")
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val bow = docs.map { case (id, tx) => (id, SrpReplay.bowVec(tx)) }
+    def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    Seq(
+      ("embedding", Dedup.embeddingNearDup(spark, Sf), emb, Dedup.CosMin),
+      ("bow", Dedup.bowCosine(spark, Sf), bow.toArray, Dedup.BowCosMin)
+    ).foreach { case (name, got, vecs, minCos) =>
+      val want = SrpReplay.pairs(vecs, Dedup.SrpTables, Dedup.SrpBits,
+        minCos)
+      assert(triples(got) == want, name)
+      assert(want.nonEmpty, s"$name: no pairs above $minCos")
+    }
+  }
+
+  test("warm n-gram joins plan no Window over the 4-gram postings") {
+    // the postings (df, posting minimum, per-doc (df, g) rank) are one
+    // session cut: after a warm-up call the ngram, prefix and
+    // containment serves filter and join it, recounting nothing
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ngram" -> (() => Dedup.ngramJaccard(spark, Sf)),
+      "prefix" -> (() => Dedup.ngramJaccardPrefix(spark, Sf)),
+      "containment" -> (() => Dedup.containment(spark, Sf))
+    ).foreach { case (name, call) =>
+      call().collect()
+      val windows = sqlExecutions(call().collect()).map(_.optimizedPlan
+        .collect { case w: Window => w }.size).sum
+      assert(windows == 0, s"$name: $windows Window nodes on a warm call")
+    }
+  }
+
+  test("cold minhash + simhash build one typed signature kernel over sh3") {
+    // one md5 pass per shingle serves both the band keys and the simhash
+    // fingerprint: the cold builds run ONE MapPartitions execution
+    import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+    SessionCache.invalidate(spark, Sf)
+    val kernels = sqlExecutions {
+      Dedup.minhashLsh(spark, Sf).collect(): Unit
+      Dedup.simhashPairs(spark, Sf).collect(): Unit
+    }.count(_.optimizedPlan.exists(_.isInstanceOf[MapPartitions]))
+    assert(kernels == 1, s"$kernels typed kernel executions")
   }
 
   test("simhash chunk join reproduces brute-force Hamming <= 7 pairs") {

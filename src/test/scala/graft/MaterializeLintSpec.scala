@@ -26,8 +26,9 @@ class MaterializeLintSpec extends AnyFunSuite {
     *    its support join) — uncut, the basket enumeration would run
     *    twice.
     *  - Bitext (1): the bounded mining-batch shortlist, per call.
-    *  - Dedup (1): the recall audit's exact reference pair set —
-    *    audit-only, per call.
+    *  - Dedup (1): the recall audit's exact reference pair set
+    *    (`dedupRecall`), read by the same call's denominator and
+    *    semi-join, released once the output is forced.
     *  - Multimodal (1): the per-call frame-sample staging cut.
     *  - Similarity (1): the recall tally's exact top-k pair set
     *    (`matryoshka`, `simRecall`), read by the same call's

@@ -155,29 +155,24 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("recall tallies release their exact top-k cut") {
-    // each call cuts its exact (query_id, neighbor_id) pair set; once
-    // the result is released no such 2-column cut may stay persisted
-    // (simRecall's lsh member keeps its own 3-column bucket cut)
+    // each call cuts its exact pair set and releases it once the result
+    // is forced; after the result itself is released, no new persisted
+    // RDD of any width may remain
     val sc = spark.sparkContext
     def persisted = sc.getPersistentRDDs.keySet.toSet
     Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "simRecall" -> (() => Similarity.simRecall(spark, Sf)),
-      "matryoshka" -> (() => Similarity.matryoshka(spark, Sf))
+      "matryoshka" -> (() => Similarity.matryoshka(spark, Sf)),
+      "dedupRecall" -> (() => graft.operators.Dedup.dedupRecall(spark, Sf))
     ).foreach { case (name, call) =>
       call() // builds the session-cached approximate indexes
       val before = persisted
       val out = call()
       assert(out.count() > 0)
       graft.Materialize.release(out)
-      val pairCuts = (persisted -- before).filter { id =>
-        sc.getPersistentRDDs.get(id).exists(_.take(1).exists {
-          case r: org.apache.spark.sql.catalyst.InternalRow =>
-            r.numFields == 2
-          case _ => false
-        })
-      }
-      assert(pairCuts.isEmpty,
-        s"$name left its exact pair cut (RDDs ${pairCuts.mkString(", ")})")
+      val left = persisted -- before
+      assert(left.isEmpty,
+        s"$name left persisted RDDs ${left.mkString(", ")}")
       assert(out.columns.nonEmpty) // out stays reachable through the check
     }
   }
